@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core
 import graft.core.{Catalog, Kernel}
@@ -23,6 +23,19 @@ import graft.streaming.{Ingest, Maintenance}
   * Error contract: `fetch` of an unknown metric raises NodeNotFound
   * (reference ≈L190); a range with no data yields the all-null dense grid
   * (reference NoData → None-padding, ≈L530).
+  *
+  * Read cost: every request (`fetch`, `fetchSparse`, `aggregate`,
+  * `fetchPattern`, `find`, `hasNode`) makes ONE metadata lookup
+  * ([[core.MetaStore.lookup]]: the existence check, the glob's match list
+  * and the reconcile's metadata, as a metadata-sized local relation —
+  * nothing is cached across requests, so a `createNode`/`deleteNode` is
+  * visible to the next read) and, on a store-backed engine, ONE
+  * partition-pruned store scan of the matched metrics' buckets × the
+  * step-aligned window's dates ([[Maintenance.prunedReadMetrics]]),
+  * read with a declared schema. A one-metric read then runs in a single
+  * partition from scan to result; a multi-metric read pays one
+  * hash(metric) exchange. The harness-catalog engine reads
+  * `Catalog.pointsCached` instead.
   */
 final class Engine(val spark: SparkSession, val dir: String,
                    val metaDir: Option[String] = None,
@@ -31,14 +44,48 @@ final class Engine(val spark: SparkSession, val dir: String,
   // user-built sessions get the engine's required confs at open time
   Catalog.configureSession(spark)
 
-  /** The engine's points table: an ingested/maintained store directory
-    * when `storeDir` is given (Engine.openStore — the real write→maintain→
-    * read lifecycle), else the harness catalog derived from `dir`. All
-    * reads below go through here, so a store-backed engine reconciles
-    * multi-resolution history exactly like the harness-backed one. */
+  /** The engine's whole points table: the ingested/maintained store
+    * directory when `storeDir` is given (Engine.openStore — the real
+    * write→maintain→read lifecycle; [[Ingest.storeView]]), else the
+    * harness catalog derived from `dir`. `maintain` and `registerViews`
+    * read it; requests read [[pointsOf]]. */
   def points: DataFrame =
     storeDir.map(Ingest.storeView(spark, _))
       .getOrElse(Catalog.pointsCached(spark, dir))
+
+  /** The points a request reads: on a store-backed engine the pruned
+    * scan of `metrics` over the step-aligned `window` (every date when
+    * None) with the cross-batch dedupe on top, else the harness
+    * catalog (the SeriesOps read filters it). One metric stays in ONE
+    * partition from scan to result — its answer is a single packed
+    * window row anyway, so the dedupe, reconcile and grid need no
+    * exchange; several metrics take one hash(metric) exchange, which
+    * the dedupe, the reconcile window and the per-metric pack all
+    * reuse (the metric axis stays the parallelism axis). */
+  private def pointsOf(metrics: Seq[String],
+                       window: Option[(Long, Long)]): DataFrame =
+    storeDir.fold(points) { d =>
+      val aligned = window.map { case (f, u) =>
+        (Kernel.align(f, Catalog.Step), Kernel.alignUntil(u, Catalog.Step))
+      }
+      val scan = Maintenance.storeRead(spark, d, metrics, aligned, None)
+      Ingest.dedupe(
+        if (metrics.size == 1) scan.coalesce(1)
+        else scan.repartition(col("metric")))
+    }
+
+  /** The resolved metadata of the nodes matching `pred` (a predicate on
+    * `metric`), sorted by metric, as a local relation: one lookup job on
+    * a MetaStore-backed engine, none on the harness's inline catalog. */
+  private def metaWhere(pred: Column): DataFrame =
+    metaDir match {
+      case Some(d) => core.MetaStore.lookup(spark, d, pred)
+      case None => core.MetaStore.local(spark,
+        Catalog.metricsMeta(spark).where(pred).collect().toSeq)
+    }
+
+  private def metricsIn(matched: DataFrame): Seq[String] =
+    matched.select("metric").collect().map(_.getString(0)).toSeq
 
   /** The live node-metadata table: a mutable MetaStore when `metaDir` is
     * given (CeresTree.createNode-capable), else the harness's inline
@@ -78,39 +125,46 @@ final class Engine(val spark: SparkSession, val dir: String,
 
   /** CeresTree.find: glob-resolved nodes, optional data-interval filter
     * (reference `find(pattern, fromTime, untilTime)` via
-    * hasDataForInterval). */
+    * hasDataForInterval — node extents, so the store scan is pruned to
+    * the matches' buckets but reads every date). */
   def find(pattern: String, from: Option[Long] = None,
-           until: Option[Long] = None): DataFrame =
+           until: Option[Long] = None): DataFrame = {
+    val matched = metaWhere(col("metric").rlike(Kernel.globToRegex(pattern)))
     (from, until) match {
-      case (None, None) =>
-        meta.select("metric")
-          .where(col("metric").rlike(Kernel.globToRegex(pattern)))
-          .orderBy("metric")
-      case _ => SeriesOps.findIntervalFrom(points, meta, pattern,
-        from.getOrElse(Long.MinValue), until.getOrElse(Long.MaxValue))
+      case (None, None) => matched.select("metric")
+      case _ => SeriesOps.findIntervalFrom(pointsOf(metricsIn(matched), None),
+        matched, pattern, from.getOrElse(Long.MinValue),
+        until.getOrElse(Long.MaxValue))
     }
+  }
 
   /** CeresTree.hasNode. */
   def hasNode(metric: String): Boolean =
-    meta.where(col("metric") === metric).limit(1).count() > 0
+    !metaWhere(col("metric") === metric).isEmpty
 
   /** CeresTree.fetch → CeresNode.read: the dense grid over the
     * reference-aligned window. Raises NodeNotFound for an unknown metric
-    * (reference CeresTree.store/fetch contract ≈L245–270). */
+    * (reference CeresTree.store/fetch contract ≈L245–270) before any
+    * store read. */
   def fetch(metric: String, from: Long, until: Long): DataFrame = {
-    if (!hasNode(metric))
-      throw new NoSuchElementException(s"NodeNotFound: $metric")
-    SeriesOps.densifyGridFrom(points, meta, metric, from, until)
+    val m = metaWhere(col("metric") === metric)
+    if (m.isEmpty) throw new NoSuchElementException(s"NodeNotFound: $metric")
+    SeriesOps.densifyGridFrom(pointsOf(Seq(metric), Some((from, until))), m,
+      metric, from, until)
   }
 
   /** Sparse read (no grid padding) — CeresNode.read before shaping. */
   def fetchSparse(metric: String, from: Long, until: Long): DataFrame =
-    SeriesOps.fetchRangeFrom(points, meta, metric, from, until)
+    SeriesOps.fetchRangeFrom(pointsOf(Seq(metric), Some((from, until))),
+      metaWhere(col("metric") === metric), metric, from, until)
 
   /** Pattern read — every glob match densified onto its own grid in one
     * (metric, ts, value) frame (the graphite-web render path). */
-  def fetchPattern(pattern: String, from: Long, until: Long): DataFrame =
-    SeriesOps.fetchPatternFrom(points, meta, pattern, from, until)
+  def fetchPattern(pattern: String, from: Long, until: Long): DataFrame = {
+    val matched = metaWhere(col("metric").rlike(Kernel.globToRegex(pattern)))
+    SeriesOps.fetchPatternFrom(pointsOf(metricsIn(matched), Some((from, until))),
+      matched, pattern, from, until)
+  }
 
   /** CeresTree.store → CeresNode.write: batch ingest of (metric, ts,
     * value) rows, compact semantics (Kernel.compact). A store-backed

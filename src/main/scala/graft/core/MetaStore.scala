@@ -1,7 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Mutable per-metric metadata store — the engine's `.ceres-node` write
   * path (`ceres.py` CeresNode.create ≈L330 / writeMetadata ≈L395 and the
@@ -17,6 +18,26 @@ import org.apache.spark.sql.functions._
 object MetaStore {
 
   final case class Retention(precision: Long, points: Long)
+
+  /** The resolved view's columns — one row per live node. */
+  val Schema: StructType = StructType(Seq(
+    StructField("metric", StringType),
+    StructField("timeStep", LongType),
+    StructField("aggregationMethod", StringType),
+    StructField("xFilesFactor", DoubleType),
+    StructField("retentions", ArrayType(StructType(Seq(
+      StructField("precision", LongType),
+      StructField("points", LongType)))))))
+
+  /** The log's DECLARED schema, read by [[read]], [[lookup]] and the
+    * version probe: no read infers it (an inference pass is a Spark job
+    * per read). Parquet resolves columns by name, so files written by
+    * [[put]] (`version` before `retentions`) and by [[compact]]
+    * (`version` last) read identically. */
+  val LogSchema: StructType = Schema.add(StructField("version", LongType))
+
+  private def log(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(LogSchema).parquet(dir)
 
   /** Append one metadata write (create or update). */
   def put(spark: SparkSession, metaDir: String, metric: String,
@@ -51,26 +72,49 @@ object MetaStore {
   private def nextVersion(spark: SparkSession, metaDir: String): Long =
     nextVersionIn(spark, metaDir)
 
+  /** Node and tree logs both carry [[LogSchema]]'s `version`; the probe
+    * declares only that column. */
   private def nextVersionIn(spark: SparkSession, dir: String): Long =
     if (!Fs.exists(spark, dir)) 0L
-    else spark.read.parquet(dir)
+    else spark.read.schema(StructType(Seq(LogSchema("version")))).parquet(dir)
       .agg(coalesce(max("version"), lit(-1L))).head().getLong(0) + 1L
 
+  /** Last-writer-wins: per metric the highest-`version` row, tombstones
+    * (null timeStep) dropped. The one definition [[read]] and [[lookup]]
+    * share. */
+  private def resolve(log: DataFrame): DataFrame =
+    log.groupBy("metric")
+      .agg(max_by(struct("timeStep", "aggregationMethod", "xFilesFactor",
+        "retentions"), col("version")).as("m"))
+      .select(col("metric"), col("m.timeStep").as("timeStep"),
+        col("m.aggregationMethod").as("aggregationMethod"),
+        col("m.xFilesFactor").as("xFilesFactor"),
+        col("m.retentions").as("retentions"))
+      .where(col("timeStep").isNotNull)
+
   /** Resolved view: one row per live metric, last-writer-wins, tombstones
-    * dropped. Schema matches Catalog.metricsMeta. */
+    * dropped. Columns match Catalog.metricsMeta. */
   def read(spark: SparkSession, metaDir: String): DataFrame =
-    if (!Fs.exists(spark, metaDir))
-      Catalog.metricsMeta(spark).limit(0)
-    else
-      spark.read.parquet(metaDir)
-        .groupBy("metric")
-        .agg(max_by(struct("timeStep", "aggregationMethod", "xFilesFactor",
-          "retentions"), col("version")).as("m"))
-        .select(col("metric"), col("m.timeStep").as("timeStep"),
-          col("m.aggregationMethod").as("aggregationMethod"),
-          col("m.xFilesFactor").as("xFilesFactor"),
-          col("m.retentions").as("retentions"))
-        .where(col("timeStep").isNotNull)
+    if (!Fs.exists(spark, metaDir)) local(spark, Seq.empty)
+    else resolve(log(spark, metaDir))
+
+  /** The resolved rows of the nodes matching `pred` — a predicate on
+    * `metric` alone (one metric, a glob's regex) — as a local relation
+    * sorted by metric: equal to `read(...).where(pred)`, in ONE Spark job
+    * with no exchange. The log is filtered before resolving (exact,
+    * since `pred` only sees `metric`) and the filtered history is
+    * resolved in a single partition. Nothing is cached: a put or delete
+    * is visible to the next lookup. */
+  def lookup(spark: SparkSession, metaDir: String, pred: Column): DataFrame =
+    if (!Fs.exists(spark, metaDir)) local(spark, Seq.empty)
+    else local(spark,
+      resolve(log(spark, metaDir).where(pred).coalesce(1)).collect().toSeq)
+
+  /** Metadata rows as a local relation, sorted by metric. */
+  private[graft] def local(spark: SparkSession, rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.sortBy(_.getString(0)).asJava, Schema)
+  }
 
   /** Compaction (the metadata defrag analog): rewrite the log as its
     * resolved view at version 0. */

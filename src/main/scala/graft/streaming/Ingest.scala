@@ -14,7 +14,7 @@ import graft.core.Catalog
   * floor-align ts → in-batch compact (max-value tie-break per (metric,
   * aligned ts), mirroring [[graft.core.Kernel.compact]]'s tuple-sort
   * semantics) → append to the points dataset. Cross-batch duplicates are
-  * resolved at READ time (Catalog.points groups by (metric, ts)) and
+  * resolved at READ time ([[dedupe]], max value per (metric, step, ts)) and
   * physically by [[Maintenance.compactStore]] — the deferred analog of the
   * reference's seek-and-overwrite slice write.
   *
@@ -32,6 +32,15 @@ object Ingest {
 
   val inputSchema: StructType = StructType(Seq(
     StructField("metric", StringType),
+    StructField("ts", LongType),
+    StructField("value", DoubleType)))
+
+  /** The store's data columns — what [[compactBatch]] emits and every
+    * writer lands under the (pb, pd) partition columns. Pruned reads
+    * ([[Maintenance.prunedRead]]) declare it instead of inferring it. */
+  val storeSchema: StructType = StructType(Seq(
+    StructField("metric", StringType),
+    StructField("step", LongType),
     StructField("ts", LongType),
     StructField("value", DoubleType)))
 
@@ -103,16 +112,23 @@ object Ingest {
       .start()
   }
 
-  /** Read-side view of an ingested store: cross-batch last-wins resolution
-    * (max-value tie-break), identical to what Maintenance.compactStore
-    * makes physical. Layout-agnostic (it selects the four data columns,
-    * so (pb, pd)-bucketed and legacy metric-partitioned stores both
-    * read) — per-series point lookups at scale go through
-    * [[Maintenance.prunedRead]], which turns the (metric, range) into
-    * partition-pruning literals. */
-  def storeView(spark: SparkSession, sinkDir: String): DataFrame =
-    spark.read.parquet(sinkDir)
-      .groupBy("metric", "step", "ts")
+  /** Cross-batch last-wins resolution (max-value tie-break per
+    * (metric, step, ts)) — what [[Maintenance.compactStore]] makes
+    * physical, and the one definition every store read applies: the
+    * whole-store [[storeView]], the pruned engine reads and the
+    * maintenance rewrite. */
+  def dedupe(points: DataFrame): DataFrame =
+    points.groupBy("metric", "step", "ts")
       .agg(max("value").as("value"))
       .select("metric", "step", "ts", "value")
+
+  /** Whole-store view of an ingested store: [[dedupe]] over every file.
+    * Layout-agnostic (the schema is inferred and the four data columns
+    * selected, so (pb, pd)-bucketed and legacy metric-partitioned stores
+    * both read); the store maintenance passes and `graft.Engine.points`
+    * use it. A store-backed engine's REQUESTS (fetch, pattern, find,
+    * aggregate) never do: they read through [[Maintenance.prunedRead]]'s
+    * declared-schema, partition-pruned scan. */
+  def storeView(spark: SparkSession, sinkDir: String): DataFrame =
+    dedupe(spark.read.parquet(sinkDir))
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, LongType}
 import graft.core.Catalog
 import graft.operators.SeriesOps
 
@@ -274,20 +275,8 @@ object Maintenance {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val marker = new org.apache.hadoop.fs.Path(dir, "_buckets")
-    def recorded: Option[Int] =
-      if (!fs.exists(marker)) None
-      else scala.util.Try {
-        val buf = new Array[Byte](fs.getFileStatus(marker).getLen.toInt)
-        val in = fs.open(marker)
-        try in.readFully(buf) finally in.close()
-        new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-      }.toOption
-    def check(n: Int): Unit = require(n == buckets,
-      s"bucket-count mismatch for store $dir: layout is $n buckets, " +
-        s"caller passed $buckets — writers and readers of one store " +
-        "must agree (see MetricBuckets)")
-    recorded match {
-      case Some(n) => check(n)
+    recordedBuckets(spark, dir) match {
+      case Some(n) => checkBuckets(dir, n, buckets)
       case None if readOnly => () // legacy / foreign layout: nothing to check
       case None =>
         // overwrite=false: lose a creation race, then validate the
@@ -309,83 +298,101 @@ object Maintenance {
             // written/closed — exactly the race window), so re-read
             // briefly before declaring the marker unreadable
             val winner = Iterator.range(0, 50).map { i =>
-              if (i > 0) Thread.sleep(10); recorded
+              if (i > 0) Thread.sleep(10); recordedBuckets(spark, dir)
             }.collectFirst { case Some(n) => n }
-            check(winner.getOrElse(throw new IllegalStateException(
+            checkBuckets(dir, winner.getOrElse(throw new IllegalStateException(
               s"lost the _buckets creation race for $dir but the winning " +
-                "marker is unreadable", e)))
+                "marker is unreadable", e)), buckets)
         }
     }
   }
+
+  /** The bucket count a store's `_buckets` marker records; None for a
+    * marker-less (legacy or foreign) store. */
+  private[graft] def recordedBuckets(spark: SparkSession,
+                                     dir: String): Option[Int] = {
+    val marker = new org.apache.hadoop.fs.Path(dir, "_buckets")
+    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(marker)) None
+    else scala.util.Try {
+      val buf = new Array[Byte](fs.getFileStatus(marker).getLen.toInt)
+      val in = fs.open(marker)
+      try in.readFully(buf) finally in.close()
+      new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim.toInt
+    }.toOption
+  }
+
+  private def checkBuckets(dir: String, recorded: Int, buckets: Int): Unit =
+    require(recorded == buckets,
+      s"bucket-count mismatch for store $dir: layout is $recorded buckets, " +
+        s"caller passed $buckets — writers and readers of one store " +
+        "must agree (see MetricBuckets)")
 
   /** Partition-pruned read of a (pb, pd) store ([[compactStore]] /
     * bucketed-ingest layout): the bucket equality and date-range
     * predicates bind to the PARTITION columns, so the scan lists and
     * opens only `1/MetricBuckets` of the directories × the dates
     * overlapping [from, until) — `PartitionFilters` in the plan, pinned
-    * by PlanSpec and IngestSpec. Row-level metric/ts predicates re-apply
-    * on top (pushed to parquet row groups). A legacy store without the
-    * (pb, pd) columns (e.g. `metric=`-partitioned) still reads — the
-    * row-level predicates alone apply, with whatever pruning that layout
-    * supports — so readers keep working mid-migration. Output schema =
-    * the points schema, so this composes directly with
-    * `SeriesOps.fetchRangeFrom`. */
+    * by PlanSpec and IngestSpec. Callers pass the STEP-ALIGNED window
+    * (`align(from)`, `alignUntil(until)`): [[SeriesOps.fetchRangeFrom]]
+    * widens the read to those bounds, so pruning on the raw
+    * `[from, until)` would drop rows the alignment includes. Row-level
+    * metric/ts predicates re-apply on top (pushed to parquet row
+    * groups). Raw rows: cross-batch duplicates are NOT resolved here
+    * ([[Ingest.dedupe]] does that on top). Output schema = the points
+    * schema, so this composes directly with `SeriesOps.fetchRangeFrom`.
+    * See [[storeRead]] for the declared schema and legacy layouts. */
   def prunedRead(spark: SparkSession, storeDir: String, metric: String,
                  from: Long, until: Long,
-                 buckets: Int = MetricBuckets): DataFrame = {
-    // a reader at the wrong count silently misses rows — fail instead
-    // (marker-less legacy stores check nothing)
-    recordOrCheckBuckets(spark, storeDir, buckets, readOnly = true)
-    val store = spark.read.parquet(storeDir)
-    val pruned =
-      if (Seq("pb", "pd").forall(store.columns.contains))
-        store.where(col("pb") === metricBucket(metric, buckets) &&
-          col("pd") >= utcDate(lit(from)) &&
-          col("pd") <= utcDate(lit(until - 1)))
-      else store
-    pruned
-      .where(col("metric") === metric && col("ts") >= from && col("ts") < until)
-      .select("metric", "step", "ts", "value")
-  }
+                 buckets: Int = MetricBuckets): DataFrame =
+    prunedReadMetrics(spark, storeDir, Seq(metric), from, until, buckets)
 
-  /** Registered face of the pruned points-store read — `fetch_range`
-    * SERVED FROM a (pb, pd)-bucketed store layout: the store is
-    * BuildOnce-written per JVM per corpus via [[Ingest.appendToStore]]
-    * (the same build-once contract as `VectorOps.annIvfTopkStoreQuery`
-    * and the feature indexes — in production the ingest side maintains
-    * the layout; queries only read it), and the window is served through
-    * [[prunedRead]], so the scan lists and opens only the metric's
-    * bucket directory × the overlapping dates (`PartitionFilters`,
-    * pinned in PlanSpec on THIS query). This is every range read's
-    * at-100 TB shape — the partition-pruning analog of the reference's
-    * byte-offset slice seek (`ceres.py` `CeresSlice.read` ≈L710) — and
-    * the answer is identical to the flat-scan `fetch_range`, so it
-    * shares that query's oracle SQL.
-    *
-    * The pruning bounds are the STEP-ALIGNED window (`align(from)`,
-    * `alignUntil(until)`) — [[SeriesOps.fetchRangeFrom]] widens the read
-    * to those bounds, so pruning on the raw `[from, until)` would drop
-    * the rows the alignment is defined to include. */
   /** Multi-metric [[prunedRead]]: the scan lists only the UNION of the
     * metrics' bucket directories × overlapping dates — the pattern
     * read's candidate I/O, one pruned scan for all matches (the
     * `ann_ivf_batch_store` shape on the points store). */
   def prunedReadMetrics(spark: SparkSession, storeDir: String,
                         metrics: Seq[String], from: Long, until: Long,
-                        buckets: Int = MetricBuckets): DataFrame = {
-    recordOrCheckBuckets(spark, storeDir, buckets, readOnly = true)
-    val store = spark.read.parquet(storeDir)
-    val pbs = metrics.map(m => metricBucket(m, buckets)).distinct
-    val pruned =
-      if (Seq("pb", "pd").forall(store.columns.contains))
-        store.where(col("pb").isin(pbs: _*) &&
-          col("pd") >= utcDate(lit(from)) &&
-          col("pd") <= utcDate(lit(until - 1)))
-      else store
-    pruned
-      .where(col("metric").isin(metrics: _*) &&
-        col("ts") >= from && col("ts") < until)
-      .select("metric", "step", "ts", "value")
+                        buckets: Int = MetricBuckets): DataFrame =
+    storeRead(spark, storeDir, metrics, Some((from, until)), Some(buckets))
+
+  /** The one pruned store read behind [[prunedRead]],
+    * [[prunedReadMetrics]] and every store-backed `graft.Engine` read:
+    * `metrics`' rows, within `window` when one is given (every date
+    * otherwise, pruned on buckets alone).
+    *
+    * The store is read with a DECLARED schema — [[Ingest.storeSchema]]
+    * plus the partition columns — so no read runs a schema-inference
+    * job, and the layout is decided by the `_buckets` marker
+    * ([[recordOrCheckBuckets]]), never by inspecting the store's
+    * columns: a marker means the (pb, pd) layout, pruned by bucket and
+    * date at the marker's count (`buckets`, when given, must match it —
+    * a reader at the wrong count silently misses rows); no marker means
+    * a legacy layout (flat, or `metric=`-partitioned), which still reads
+    * with the row-level predicates alone and whatever pruning that
+    * layout supports, so readers keep working mid-migration. */
+  private[graft] def storeRead(spark: SparkSession, storeDir: String,
+                               metrics: Seq[String],
+                               window: Option[(Long, Long)],
+                               buckets: Option[Int]): DataFrame = {
+    val recorded = recordedBuckets(spark, storeDir)
+    for (n <- recorded; b <- buckets) checkBuckets(storeDir, n, b)
+    val inWindow = window.map { case (f, u) => col("ts") >= f && col("ts") < u }
+    val rows = col("metric").isin(metrics: _*) +: inWindow.toSeq
+    val pruned = recorded match {
+      case None => spark.read.schema(Ingest.storeSchema).parquet(storeDir)
+      case Some(n) =>
+        val inDates = window.map { case (f, u) =>
+          col("pd") >= utcDate(lit(f)) && col("pd") <= utcDate(lit(u - 1))
+        }
+        val parts = col("pb").isin(metrics.map(metricBucket(_, n)).distinct: _*) +:
+          inDates.toSeq
+        spark.read.schema(Ingest.storeSchema
+            .add("pb", LongType).add("pd", DateType))
+          .parquet(storeDir)
+          .where(parts.reduce(_ && _))
+    }
+    pruned.where(rows.reduce(_ && _)).select("metric", "step", "ts", "value")
   }
 
   /** [[SeriesOps.fetchPattern]] SERVED FROM the (pb, pd) store layout:
@@ -410,6 +417,19 @@ object Maintenance {
       meta, pattern, from, until)
   }
 
+  /** Registered face of the pruned points-store read — `fetch_range`
+    * SERVED FROM a (pb, pd)-bucketed store layout: the store is
+    * BuildOnce-written per JVM per corpus via [[Ingest.appendToStore]]
+    * (the same build-once contract as `VectorOps.annIvfTopkStoreQuery`
+    * and the feature indexes — in production the ingest side maintains
+    * the layout; queries only read it), and the step-aligned window is
+    * served through [[prunedRead]], so the scan lists and opens only the
+    * metric's bucket directory × the overlapping dates
+    * (`PartitionFilters`, pinned in PlanSpec on THIS query). This is
+    * every range read's at-100 TB shape — the partition-pruning analog
+    * of the reference's byte-offset slice seek (`ceres.py`
+    * `CeresSlice.read` ≈L710) — and the answer is identical to the
+    * flat-scan `fetch_range`, so it shares that query's oracle SQL. */
   def fetchRangeStore(spark: SparkSession, dir: String, metric: String,
                       from: Long, until: Long): DataFrame = {
     val store = graft.core.BuildOnce.dir(spark, "graft_points_store", dir) {
@@ -566,9 +586,7 @@ object Maintenance {
     // over a FRESH read whose listing is at least as new as the snapshot
     // (the empty-partition delete removes only snapshot-listed files)
     val store = spark.read.parquet(storeDir)
-    val view = store.where(col("pd").isInCollection(affectedDates))
-      .groupBy("metric", "step", "ts").agg(max("value").as("value"))
-      .select("metric", "step", "ts", "value")
+    val view = Ingest.dedupe(store.where(col("pd").isInCollection(affectedDates)))
     val maintained = maintainPerNode(view, meta, now)
       .withColumn("pb", pmod(xxhash64(col("metric")), lit(buckets.toLong)))
       .withColumn("pd", utcDate(col("ts")))

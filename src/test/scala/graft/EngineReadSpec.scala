@@ -1,0 +1,192 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicLong
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import graft.core.MetaStore
+import graft.operators.SeriesOps
+import graft.streaming.{Ingest, Maintenance}
+
+/** A store-backed engine's reads: one metadata lookup plus one
+  * partition-pruned store scan per request, within a job budget, with
+  * the answers of the whole-store path. */
+class EngineReadSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestBase.spark
+  private val Hour = 3600L
+  private val Day = 86400L
+  private val Methods = Seq("average", "sum", "min", "max", "last")
+  private def metricOf(method: String) = s"svc.$method.lat"
+
+  /** Six days of hourly writes (gappy, unaligned), one node per
+    * aggregation method plus one outside the `svc.*.lat` globs, rolled up by
+    * a maintenance pass (hourly for 48 h, then daily) and compacted into
+    * the (pb, pd) layout; then a late batch of cross-batch duplicates
+    * that only the read's dedupe resolves. */
+  private lazy val store: (Engine, String, String) = {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-engine-read")
+    val storeDir = base.resolve("store").toString
+    val metaDir = base.resolve("meta").toString
+    val eng = Engine.openStore(spark, storeDir, metaDir)
+    val metrics = Methods.map(metricOf) :+ "other.lat"
+    metrics.zip(Methods :+ "sum").foreach { case (m, method) =>
+      eng.createNode(m, Hour, method, 0.5,
+        Seq(MetaStore.Retention(Hour, 48L), MetaStore.Retention(Day, 30L)))
+    }
+    val rows = for {
+      (m, i) <- metrics.zipWithIndex
+      h <- 0 until 144 if (h * 7 + i) % 5 != 0
+    } yield (m, h * Hour + 17L, (h % 24).toDouble + i)
+    eng.store(rows.toDF("metric", "ts", "value"))
+    Maintenance.runPruned(spark, storeDir, 144 * Hour, Some(eng.meta))
+    Maintenance.compactStore(spark, storeDir, storeDir)
+    val late = metrics.flatMap(m =>
+      Seq((m, 130 * Hour, 100.0), (m, 131 * Hour, -1.0)))
+    eng.store(late.toDF("metric", "ts", "value"))
+    (eng, storeDir, metaDir)
+  }
+
+  private val nJobs = new AtomicLong
+  private lazy val listening = spark.sparkContext.addSparkListener(
+    new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        nJobs.incrementAndGet()
+    })
+
+  /** Job count of `body`, sampled on a settled listener bus (events
+    * arrive asynchronously): read until two consecutive samples agree. */
+  private def jobsOf(body: => Unit): Long = {
+    listening
+    def drained(): Long = {
+      var prev = nJobs.get
+      var settled = false
+      while (!settled) {
+        Thread.sleep(50)
+        val cur = nJobs.get
+        settled = cur == prev
+        prev = cur
+      }
+      prev
+    }
+    val j0 = drained()
+    body
+    drained() - j0
+  }
+
+  /** Every file scan of the executed (adaptive) plan. */
+  private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = {
+    val here = p match {
+      case f: FileSourceScanExec => Seq(f)
+      case _ => Seq.empty
+    }
+    val children = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    here ++ children.flatMap(fileScans) ++ p.subqueries.flatMap(fileScans)
+  }
+
+  private def assertOnePrunedScan(df: DataFrame, storeDir: String): Unit = {
+    df.collect()
+    val scans = fileScans(df.queryExecution.executedPlan)
+    val storeScans = scans.filter(_.relation.location.rootPaths
+      .exists(_.toString.stripPrefix("file:").stripSuffix("/") == storeDir))
+    assert(storeScans.size === 1 && scans.size === 1,
+      s"expected exactly one store scan:\n${df.queryExecution.executedPlan}")
+    val keys = storeScans.head.partitionFilters
+      .flatMap(_.references.map(_.name)).toSet
+    assert(Set("pb", "pd").subsetOf(keys),
+      s"bucket and date predicates must reach the partition filter: " +
+        storeScans.head.partitionFilters)
+  }
+
+  private def grid(df: DataFrame): Seq[Row] = df.collect().toSeq
+
+  // a 3-day window: daily rolled history plus the hourly tail
+  private val From = 2 * Day + 5 * Hour
+  private val Until = 5 * Day + 7 * Hour
+
+  /** The unchanged whole-store path every store-backed read must equal. */
+  private def wholeStore(storeDir: String, metaDir: String)
+      : (DataFrame, DataFrame) =
+    (Ingest.storeView(spark, storeDir), MetaStore.read(spark, metaDir))
+
+  test("store-backed reads fit the job budget, each with one pruned scan") {
+    val (eng, storeDir, _) = store
+    val m = metricOf("sum")
+    val reads = Seq[(String, Long, () => DataFrame)](
+      ("fetch", 3L, () => eng.fetch(m, From, Until)),
+      ("find", 1L, () => eng.find("svc.*.lat")),
+      ("fetchPattern", 8L, () => eng.fetchPattern("svc.*.lat", From, Until)))
+    for ((name, budget, read) <- reads) {
+      read().collect() // warm-up
+      val n = jobsOf(read().collect())
+      info(s"$name: $n jobs")
+      assert(n <= budget, s"$name ran $n jobs (budget $budget)")
+    }
+    assertOnePrunedScan(eng.fetch(m, From, Until), storeDir)
+    assertOnePrunedScan(eng.fetchPattern("svc.*.lat", From, Until), storeDir)
+  }
+
+  test("fetch and fetchPattern equal the whole-store read on a multi-resolution store") {
+    val (eng, storeDir, metaDir) = store
+    val (points, meta) = wholeStore(storeDir, metaDir)
+    // the store holds rolled daily rows next to hourly ones
+    assert(points.select("step").distinct().count() === 2)
+    for (method <- Methods) {
+      val m = metricOf(method)
+      assert(grid(eng.fetch(m, From, Until)) ===
+        grid(SeriesOps.densifyGridFrom(points, meta, m, From, Until)), m)
+    }
+    for (glob <- Seq("svc.*.lat", "*.*.lat", "svc.[ms]*.lat", "nosuch.*"))
+      assert(grid(eng.fetchPattern(glob, From, Until)) ===
+        grid(SeriesOps.fetchPatternFrom(points, meta, glob, From, Until)), glob)
+  }
+
+  test("fetchSparse, aggregate and find-with-interval equal the whole-store path") {
+    val (eng, storeDir, metaDir) = store
+    val (points, meta) = wholeStore(storeDir, metaDir)
+    for (method <- Methods; m = metricOf(method)) {
+      val whole = grid(SeriesOps.fetchRangeFrom(points, meta, m, From, Until))
+      assert(whole.nonEmpty)
+      assert(grid(eng.fetchSparse(m, From, Until)) === whole, m)
+      // values are small integers: every aggregate is exact
+      for (agg <- Methods)
+        assert(eng.aggregate(m, agg, From, Until) ===
+          graft.core.Kernel.aggregate(agg, whole.map(r => Some(r.getDouble(1)))),
+          s"$m $agg")
+    }
+    for ((f, u) <- Seq((0L, Day), (3 * Day, 3 * Day + Hour), (10 * Day, 11 * Day),
+        (Long.MinValue, Long.MaxValue)); glob <- Seq("svc.*.lat", "*.*.*"))
+      assert(grid(eng.find(glob, Some(f), Some(u))) ===
+        grid(SeriesOps.findIntervalFrom(points, meta, glob, f, u)), s"$glob $f $u")
+  }
+
+  test("legacy layouts read; a marker-present store rejects a mismatched reader") {
+    val (eng, storeDir, metaDir) = store
+    val (points, meta) = wholeStore(storeDir, metaDir)
+    // a marker-less metric=-partitioned copy of the same points
+    val legacy = Files.createTempDirectory("graft-engine-legacy")
+      .resolve("store").toString
+    points.write.partitionBy("metric").parquet(legacy)
+    assert(!new java.io.File(legacy, "_buckets").exists)
+    val old = Engine.openStore(spark, legacy, metaDir)
+    val m = metricOf("last")
+    assert(grid(old.fetch(m, From, Until)) === grid(eng.fetch(m, From, Until)))
+    assert(grid(old.fetchSparse(m, From, Until)) ===
+      grid(SeriesOps.fetchRangeFrom(points, meta, m, From, Until)))
+    assert(grid(old.fetchPattern("svc.*.lat", From, Until)) ===
+      grid(eng.fetchPattern("svc.*.lat", From, Until)))
+    assert(grid(old.find("svc.*.lat", Some(From), Some(Until))).size === Methods.size)
+    // the layout self-describes its bucket count: a reader passing
+    // another one fails instead of silently missing rows
+    intercept[IllegalArgumentException] {
+      Maintenance.prunedRead(spark, storeDir, m, From, Until, buckets = 4)
+    }
+  }
+}
