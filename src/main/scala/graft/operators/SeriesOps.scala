@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.core.{Catalog, Kernel}
 
@@ -287,7 +287,14 @@ object SeriesOps {
     * scan, so candidate I/O is pruned before any shuffle. */
   private[graft] def fetchForMetrics(points: DataFrame, meta: DataFrame,
                                      matched: DataFrame,
-                                     from: Long, until: Long): DataFrame = {
+                                     from: Long, until: Long): DataFrame =
+    metricGrid(points, meta, matched, from, until).orderBy("metric", "ts")
+
+  /** [[fetchForMetrics]] before its closing sort: the one place the
+    * (metric, ts, value) multi-metric grid is built. */
+  private def metricGrid(points: DataFrame, meta: DataFrame,
+                         matched: DataFrame,
+                         from: Long, until: Long): DataFrame = {
     val f = Kernel.align(from, Step)
     val u = Kernel.alignUntil(until, Step)
     val pts = points.join(broadcast(matched), "metric")
@@ -320,8 +327,43 @@ object SeriesOps {
         col("m"))
       .select(col("metric"), col("ts"),
         element_at(col("m"), col("ts")).as("value"))
-      .orderBy("metric", "ts")
   }
+
+  /** The multi-metric DENSE GRID every `*_multi` transform face runs on
+    * — the render path's real call shape (glob → N series → transform
+    * each): [[metricGrid]] over every cataloged metric, unsorted.
+    * O(metrics × window) — result-sized.
+    *
+    * KEYED TRANSFORMS: each graphite transform with a multi-metric face
+    * is written once, as a private `…Of(grid, by, …)` over a dense grid
+    * and its series key `by` — `Nil` for one metric's [[densifyGrid]]
+    * grid, [[ByMetric]] for this one. The key leads every window
+    * partition ([[keyWindow]]), grouping, join key, selected column list
+    * and final sort ([[keyed]]). `Window.partitionBy()` with no columns
+    * is `Window.orderBy`'s spec and `groupBy().agg` is `Dataset.agg`, so
+    * each public face compiles to the plan its hand-written body had:
+    * the single face sorts one metric's result-sized grid in one
+    * partition (bounded by the render window, never by the store), the
+    * multi face partitions every window by metric. Pairs whose faces
+    * differ in more than the key keep two bodies
+    * ([[seriesOutlierMadMulti]], [[seriesTheilSenMulti]]). */
+  private[graft] def denseGridAll(spark: SparkSession, dir: String,
+                                  from: Long, until: Long): DataFrame = {
+    val meta = Catalog.metricsMeta(spark)
+    metricGrid(Catalog.pointsCached(spark, dir), meta, meta.select("metric"),
+      from, until)
+  }
+
+  /** The series key of [[denseGridAll]]'s grid. */
+  private val ByMetric = Seq("metric")
+
+  /** The series key `by` as columns, ahead of `cs`. */
+  private def keyed(by: Seq[String], cs: Column*): Seq[Column] =
+    by.map(col) ++ cs
+
+  /** A window partitioned by the series key `by` (then `cs`). */
+  private def keyWindow(by: Seq[String], cs: Column*): WindowSpec =
+    Window.partitionBy(keyed(by, cs: _*): _*)
 
   // ——————————————————— read-path analytics (graphite functions) ———————————
 
@@ -343,13 +385,21 @@ object SeriesOps {
     * rates are single IEEE ops on identical doubles — deterministic
     * across engines, no rounding needed. */
   def seriesDerivative(spark: SparkSession, dir: String, metric: String,
-                       from: Long, until: Long): DataFrame = {
-    val w = Window.orderBy("ts")
-    densifyGrid(spark, dir, metric, from, until)
+                       from: Long, until: Long): DataFrame =
+    derivativeOf(densifyGrid(spark, dir, metric, from, until), Nil)
+
+  /** [[seriesDerivative]] over every cataloged metric. */
+  def seriesDerivativeMulti(spark: SparkSession, dir: String,
+                            from: Long, until: Long): DataFrame =
+    derivativeOf(denseGridAll(spark, dir, from, until), ByMetric)
+
+  private def derivativeOf(grid: DataFrame, by: Seq[String]): DataFrame = {
+    val w = keyWindow(by).orderBy("ts")
+    grid
       .withColumn("delta", col("value") - lag("value", 1).over(w))
       .withColumn("rate_per_s",
         when(col("delta") >= 0, col("delta") / lit(Step.toDouble)))
-      .orderBy("ts")
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `movingAverage(series, n)` analog (graphite-web render/functions.py):
@@ -366,14 +416,24 @@ object SeriesOps {
     * slot, exact at any summation order, one closing division — the
     * engine's standard decimal-half defense (see `doc_entropy`). */
   def seriesMovingAvg(spark: SparkSession, dir: String, metric: String,
-                      from: Long, until: Long, points: Int = 6): DataFrame = {
-    val w = Window.orderBy("ts").rowsBetween(-(points - 1), 0)
-    densifyGrid(spark, dir, metric, from, until)
+                      from: Long, until: Long, points: Int = 6): DataFrame =
+    movingAvgOf(densifyGrid(spark, dir, metric, from, until), Nil, points)
+
+  /** [[seriesMovingAvg]] over every cataloged metric. */
+  def seriesMovingAvgMulti(spark: SparkSession, dir: String,
+                           from: Long, until: Long,
+                           points: Int = 6): DataFrame =
+    movingAvgOf(denseGridAll(spark, dir, from, until), ByMetric, points)
+
+  private def movingAvgOf(grid: DataFrame, by: Seq[String],
+                          points: Int): DataFrame = {
+    val w = keyWindow(by).orderBy("ts").rowsBetween(-(points - 1), 0)
+    grid
       .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
       .withColumn("ma",
         sum("vm").over(w).cast("double") / count("vm").over(w) / lit(1e6))
-      .select(col("ts"), col("value"), col("ma"))
-      .orderBy("ts")
+      .select(keyed(by, col("ts"), col("value"), col("ma")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `summarize(series, interval, func)` analog (graphite-web
@@ -393,18 +453,31 @@ object SeriesOps {
     * integer sum with one fixed closing division sequence. */
   def seriesSummarize(spark: SparkSession, dir: String, metric: String,
                       from: Long, until: Long,
-                      bucket: Long = 14400): DataFrame = {
+                      bucket: Long = 14400): DataFrame =
+    summarizeOf(densifyGrid(spark, dir, metric, from, until), Nil,
+      from, bucket)
+
+  /** [[seriesSummarize]] over every cataloged metric: the rollup keyed
+    * (metric, bucket), still windowless and map-side combinable. */
+  def seriesSummarizeMulti(spark: SparkSession, dir: String,
+                           from: Long, until: Long,
+                           bucket: Long = 14400): DataFrame =
+    summarizeOf(denseGridAll(spark, dir, from, until), ByMetric,
+      from, bucket)
+
+  private def summarizeOf(grid: DataFrame, by: Seq[String], from: Long,
+                          bucket: Long): DataFrame = {
     val f = Kernel.align(from, Step)
-    densifyGrid(spark, dir, metric, from, until)
+    grid
       .withColumn("bts", col("ts") - pmod(col("ts") - lit(f), lit(bucket)))
       .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
-      .groupBy(col("bts").as("ts"))
+      .groupBy(keyed(by, col("bts").as("ts")): _*)
       .agg(count(col("vm")).as("n_slots"),
            (sum("vm").cast("double") / lit(1e6)).as("v_sum"),
            (sum("vm").cast("double") / count("vm") / lit(1e6)).as("v_avg"),
            min("value").as("v_min"),
            max("value").as("v_max"))
-      .orderBy("ts")
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `hitcount(series, interval)` analog (graphite-web render/functions.py):
@@ -422,15 +495,28 @@ object SeriesOps {
     * an order-independent integer sum with one closing division. */
   def seriesHitcount(spark: SparkSession, dir: String, metric: String,
                      from: Long, until: Long,
-                     bucket: Long = 14400): DataFrame = {
+                     bucket: Long = 14400): DataFrame =
+    hitcountOf(densifyGrid(spark, dir, metric, from, until), Nil,
+      from, bucket)
+
+  /** [[seriesHitcount]] over every cataloged metric, keyed
+    * (metric, bucket). */
+  def seriesHitcountMulti(spark: SparkSession, dir: String,
+                          from: Long, until: Long,
+                          bucket: Long = 14400): DataFrame =
+    hitcountOf(denseGridAll(spark, dir, from, until), ByMetric,
+      from, bucket)
+
+  private def hitcountOf(grid: DataFrame, by: Seq[String], from: Long,
+                         bucket: Long): DataFrame = {
     val f = Kernel.align(from, Step)
-    densifyGrid(spark, dir, metric, from, until)
+    grid
       .withColumn("bts", col("ts") - pmod(col("ts") - lit(f), lit(bucket)))
       .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
-      .groupBy(col("bts").as("ts"))
+      .groupBy(keyed(by, col("bts").as("ts")): _*)
       .agg(count(col("vm")).as("n_slots"),
            (sum(col("vm") * lit(Step)).cast("double") / lit(1e6)).as("hits"))
-      .orderBy("ts")
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `holtWintersConfidenceBands`-style aberration read (graphite-web
@@ -452,9 +538,21 @@ object SeriesOps {
     * same O(output) contract as every read-path transform here. */
   def seriesBands(spark: SparkSession, dir: String, metric: String,
                   from: Long, until: Long, points: Int = 12,
-                  nSigma: Double = 2.0): DataFrame = {
-    val w = Window.orderBy("ts").rowsBetween(-(points - 1), 0)
-    densifyGrid(spark, dir, metric, from, until)
+                  nSigma: Double = 2.0): DataFrame =
+    bandsOf(densifyGrid(spark, dir, metric, from, until), Nil,
+      points, nSigma)
+
+  /** [[seriesBands]] over every cataloged metric. */
+  def seriesBandsMulti(spark: SparkSession, dir: String,
+                       from: Long, until: Long, points: Int = 12,
+                       nSigma: Double = 2.0): DataFrame =
+    bandsOf(denseGridAll(spark, dir, from, until), ByMetric,
+      points, nSigma)
+
+  private def bandsOf(grid: DataFrame, by: Seq[String], points: Int,
+                      nSigma: Double): DataFrame = {
+    val w = keyWindow(by).orderBy("ts").rowsBetween(-(points - 1), 0)
+    grid
       .withColumn("vk", floor(col("value") * lit(1e3) + lit(0.5)).cast("long"))
       .withColumn("n", count("vk").over(w))
       .withColumn("s1", sum("vk").over(w))
@@ -469,10 +567,10 @@ object SeriesOps {
       .withColumn("aberrant",
         col("value").isNotNull && col("sd").isNotNull &&
           (col("value") > col("upper") || col("value") < col("lower")))
-      .select(col("ts"), col("value"), q6(col("mean")).as("mean"),
+      .select(keyed(by, col("ts"), col("value"), q6(col("mean")).as("mean"),
         q6(col("sd")).as("sd"), q6(col("upper")).as("upper"),
-        q6(col("lower")).as("lower"), col("aberrant"))
-      .orderBy("ts")
+        q6(col("lower")).as("lower"), col("aberrant")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `keepLastValue(series, limit)` analog (graphite-web
@@ -488,11 +586,21 @@ object SeriesOps {
     * (O(output)); values are COPIED, never recomputed — parity is
     * trivial. */
   def seriesKeepLast(spark: SparkSession, dir: String, metric: String,
-                     from: Long, until: Long, limit: Int = 3): DataFrame = {
-    val w = Window.orderBy("ts").rowsBetween(-limit, 0)
-    densifyGrid(spark, dir, metric, from, until)
+                     from: Long, until: Long, limit: Int = 3): DataFrame =
+    keepLastOf(densifyGrid(spark, dir, metric, from, until), Nil, limit)
+
+  /** [[seriesKeepLast]] over every cataloged metric. */
+  def seriesKeepLastMulti(spark: SparkSession, dir: String,
+                          from: Long, until: Long,
+                          limit: Int = 3): DataFrame =
+    keepLastOf(denseGridAll(spark, dir, from, until), ByMetric, limit)
+
+  private def keepLastOf(grid: DataFrame, by: Seq[String],
+                         limit: Int): DataFrame = {
+    val w = keyWindow(by).orderBy("ts").rowsBetween(-limit, 0)
+    grid
       .withColumn("filled", last("value", ignoreNulls = true).over(w))
-      .orderBy("ts")
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `integral(series)` analog (graphite-web render/functions.py): the
@@ -506,13 +614,22 @@ object SeriesOps {
     * frame), so the accumulation is over INTEGER MICRO-UNITS with one
     * closing division. */
   def seriesIntegral(spark: SparkSession, dir: String, metric: String,
-                     from: Long, until: Long): DataFrame = {
-    val w = Window.orderBy("ts").rowsBetween(Window.unboundedPreceding, 0)
-    densifyGrid(spark, dir, metric, from, until)
+                     from: Long, until: Long): DataFrame =
+    integralOf(densifyGrid(spark, dir, metric, from, until), Nil)
+
+  /** [[seriesIntegral]] over every cataloged metric. */
+  def seriesIntegralMulti(spark: SparkSession, dir: String,
+                          from: Long, until: Long): DataFrame =
+    integralOf(denseGridAll(spark, dir, from, until), ByMetric)
+
+  private def integralOf(grid: DataFrame, by: Seq[String]): DataFrame = {
+    val w = keyWindow(by).orderBy("ts")
+      .rowsBetween(Window.unboundedPreceding, 0)
+    grid
       .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
       .withColumn("integral", sum("vm").over(w).cast("double") / lit(1e6))
-      .select(col("ts"), col("value"), col("integral"))
-      .orderBy("ts")
+      .select(keyed(by, col("ts"), col("value"), col("integral")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `timeShift(series, -interval)` comparison read (graphite-web
@@ -649,19 +766,29 @@ object SeriesOps {
     * rounded IEEE op in both engines. */
   def seriesMovingStdev(spark: SparkSession, dir: String, metric: String,
                         from: Long, until: Long,
-                        points: Int = 6): DataFrame = {
-    val w = Window.orderBy("ts").rowsBetween(-(points - 1), 0)
-    densifyGrid(spark, dir, metric, from, until)
+                        points: Int = 6): DataFrame =
+    movingStdevOf(densifyGrid(spark, dir, metric, from, until), Nil, points)
+
+  /** [[seriesMovingStdev]] over every cataloged metric. */
+  def seriesStdevMulti(spark: SparkSession, dir: String,
+                       from: Long, until: Long,
+                       points: Int = 6): DataFrame =
+    movingStdevOf(denseGridAll(spark, dir, from, until), ByMetric, points)
+
+  private def movingStdevOf(grid: DataFrame, by: Seq[String],
+                            points: Int): DataFrame = {
+    val w = keyWindow(by).orderBy("ts").rowsBetween(-(points - 1), 0)
+    grid
       .withColumn("km", floor(col("value") * lit(1e3) + lit(0.5)).cast("long"))
       .withColumn("n", count("km").over(w))
       .withColumn("s1", sum("km").over(w))
       .withColumn("s2", sum(col("km") * col("km")).over(w))
-      .select(col("ts"), col("value"),
+      .select(keyed(by, col("ts"), col("value"),
         when(col("n") >= 2, q6(
           sqrt((col("n") * col("s2") - col("s1") * col("s1")).cast("double") /
             (col("n") * (col("n") - 1)).cast("double")) / lit(1e3)))
-          .as("stdev"))
-      .orderBy("ts")
+          .as("stdev")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** Exponentially weighted moving average over the densified grid
@@ -691,10 +818,19 @@ object SeriesOps {
     * [[seriesEwmaWide]] (r16), which keeps the exact-integer contract by
     * quantizing to milli-units instead of micro-units. */
   def seriesEwma(spark: SparkSession, dir: String, metric: String,
-                 from: Long, until: Long, taps: Int = 16): DataFrame = {
+                 from: Long, until: Long, taps: Int = 16): DataFrame =
+    ewmaOf(densifyGrid(spark, dir, metric, from, until), Nil, taps)
+
+  /** [[seriesEwma]] over every cataloged metric (same taps ≤ 24 bound). */
+  def seriesEwmaMulti(spark: SparkSession, dir: String,
+                      from: Long, until: Long, taps: Int = 16): DataFrame =
+    ewmaOf(denseGridAll(spark, dir, from, until), ByMetric, taps)
+
+  private def ewmaOf(densified: DataFrame, by: Seq[String],
+                     taps: Int): DataFrame = {
     require(taps >= 1 && taps <= 24, s"taps must be in [1,24]: $taps")
-    val w = Window.orderBy("ts")
-    val grid = densifyGrid(spark, dir, metric, from, until)
+    val w = keyWindow(by).orderBy("ts")
+    val grid = densified
       .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
     def tap(k: Int): Column =
       if (k == 0) col("vm") else lag(col("vm"), k).over(w)
@@ -707,11 +843,11 @@ object SeriesOps {
     grid
       .withColumn("num", weighted)
       .withColumn("den", weightSum)
-      .select(col("ts"), col("value"),
+      .select(keyed(by, col("ts"), col("value"),
         when(col("den") > 0, q6(
           col("num").cast("double") / col("den").cast("double") / lit(1e6)))
-          .as("ewma"))
-      .orderBy("ts")
+          .as("ewma")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** WIDE-tap sibling of [[seriesEwma]]: taps in [25,32], the range the
@@ -888,9 +1024,19 @@ object SeriesOps {
     * `median` interpolates the same way). */
   def seriesMovingMedian(spark: SparkSession, dir: String, metric: String,
                          from: Long, until: Long,
-                         points: Int = 6): DataFrame = {
+                         points: Int = 6): DataFrame =
+    movingMedianOf(densifyGrid(spark, dir, metric, from, until), Nil, points)
+
+  /** [[seriesMovingMedian]] over every cataloged metric. */
+  def seriesMovingMedianMulti(spark: SparkSession, dir: String,
+                              from: Long, until: Long,
+                              points: Int = 6): DataFrame =
+    movingMedianOf(denseGridAll(spark, dir, from, until), ByMetric, points)
+
+  private def movingMedianOf(grid: DataFrame, by: Seq[String],
+                             points: Int): DataFrame = {
     require(points >= 1 && points <= 64, s"points must be in [1,64]: $points")
-    val w = Window.orderBy("ts")
+    val w = keyWindow(by).orderBy("ts")
     val lags = (0 until points).map { k =>
       if (k == 0) col("value") else lag(col("value"), k).over(w)
     }
@@ -902,9 +1048,9 @@ object SeriesOps {
       .when(n % 2 === 1, element_at(arr, half))
       .otherwise(
         (element_at(arr, lo) + element_at(arr, lo + 1)) / lit(2.0))
-    densifyGrid(spark, dir, metric, from, until)
-      .select(col("ts"), col("value"), med.as("median"))
-      .orderBy("ts")
+    grid
+      .select(keyed(by, col("ts"), col("value"), med.as("median")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** Percentile CLIP over the window (graphite `removeAbovePercentile`
@@ -1077,10 +1223,9 @@ object SeriesOps {
     * The reconciled series is consumed THREE times below (primary rows,
     * grid-step aggregate, secondary rows), so it is `localCheckpoint`ed —
     * materialized once, result-sized — rather than re-running the
-    * reconcile shuffle per consumer (see [[densifyGridFrom]]). LAZY
-    * (r18 opt): the first consuming job materializes it in-line instead
-    * of a separate blocking job per query; consumers after the first
-    * read blocks either way. */
+    * reconcile shuffle per consumer (see [[densifyGridFrom]]). The
+    * checkpoint is eager: it runs as its own blocking job when the plan
+    * is built, and every consumer reads the blocks. */
   def mergeSeriesFrom(points: DataFrame, meta: DataFrame, primary: String,
                       secondary: String, from: Long, until: Long): DataFrame = {
     val f = Kernel.align(from, Step)
@@ -1187,9 +1332,22 @@ object SeriesOps {
     * O(1)-row moment aggregate. */
   def seriesStlStrength(spark: SparkSession, dir: String, metric: String,
                         from: Long, until: Long, season: Int = 24,
-                        half: Int = 12): DataFrame = {
-    val dec = seriesSeasonalDecompose(spark, dir, metric, from, until,
-      season, half)
+                        half: Int = 12): DataFrame =
+    stlStrengthOf(seriesSeasonalDecompose(spark, dir, metric, from, until,
+      season, half), Nil).select(lit(metric).as("metric"), col("*"))
+
+  /** [[seriesStlStrength]] over every cataloged metric: one row per
+    * metric. */
+  def seriesStlStrengthMulti(spark: SparkSession, dir: String,
+                             from: Long, until: Long, season: Int = 24,
+                             half: Int = 12): DataFrame =
+    stlStrengthOf(seriesSeasonalDecomposeMulti(spark, dir, from, until,
+      season, half), ByMetric)
+
+  /** The strength ratios of a decomposition, one row per series key. */
+  private def stlStrengthOf(decomposed: DataFrame,
+                            by: Seq[String]): DataFrame = {
+    val dec = decomposed
       .where(col("value").isNotNull && col("trend").isNotNull &&
         col("seasonal").isNotNull)
       .withColumn("rm",
@@ -1200,9 +1358,10 @@ object SeriesOps {
         lit(0.5)).cast("long"))
     def varNum(c: String) =
       count(lit(1)) * sum(col(c) * col(c)) - sum(col(c)) * sum(col(c))
-    dec.agg(count(lit(1)).as("n"),
+    dec.groupBy(keyed(by): _*)
+      .agg(count(lit(1)).as("n"),
         varNum("rm").as("vr"), varNum("tm").as("vt"), varNum("sm").as("vs"))
-      .select(lit(metric).as("metric"), col("n"),
+      .select(keyed(by, col("n"),
         // the zero-variance branch closes to an explicit 0.0 on BOTH
         // engines (a constant T+R/S+R window means "no strength"):
         // greatest()'s NULL handling is engine-specific and must never
@@ -1212,7 +1371,8 @@ object SeriesOps {
           .otherwise(lit(0.0)))).as("trend_strength"),
         q6(greatest(lit(0.0), when(col("vs") > 0,
           lit(1.0) - col("vr").cast("double") / col("vs").cast("double"))
-          .otherwise(lit(0.0)))).as("seasonal_strength"))
+          .otherwise(lit(0.0)))).as("seasonal_strength")): _*)
+      .orderBy(keyed(by): _*)
   }
 
   /** FORECAST QA: per-metric MAE and WAPE of [[seriesHoltWintersMulti]]'s
@@ -1428,17 +1588,30 @@ object SeriesOps {
     * (the engine's standard decimal-half defense). */
   def seriesIntegralByInterval(spark: SparkSession, dir: String,
                                metric: String, from: Long, until: Long,
-                               bucket: Long): DataFrame = {
+                               bucket: Long): DataFrame =
+    integralByIntervalOf(densifyGrid(spark, dir, metric, from, until), Nil,
+      from, bucket)
+
+  /** [[seriesIntegralByInterval]] over every cataloged metric, the window
+    * partitioned by (metric, bucket). */
+  def seriesIntegralByIntervalMulti(spark: SparkSession, dir: String,
+                                    from: Long, until: Long,
+                                    bucket: Long = 14400): DataFrame =
+    integralByIntervalOf(denseGridAll(spark, dir, from, until), ByMetric,
+      from, bucket)
+
+  private def integralByIntervalOf(grid: DataFrame, by: Seq[String],
+                                   from: Long, bucket: Long): DataFrame = {
     val f = Kernel.align(from, Step)
-    val w = Window.partitionBy("bucket").orderBy("ts")
+    val w = keyWindow(by, col("bucket")).orderBy("ts")
       .rowsBetween(Window.unboundedPreceding, 0)
-    densifyGrid(spark, dir, metric, from, until)
+    grid
       .withColumn("bucket",
         col("ts") - pmod(col("ts") - lit(f), lit(bucket)))
       .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
       .withColumn("integral", sum("vm").over(w).cast("double") / lit(1e6))
-      .select(col("ts"), col("value"), col("integral"))
-      .orderBy("ts")
+      .select(keyed(by, col("ts"), col("value"), col("integral")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `holtWintersForecast(series)` analog (graphite-web
@@ -1459,826 +1632,36 @@ object SeriesOps {
     * display on both sides). */
   def seriesHoltWinters(spark: SparkSession, dir: String, metric: String,
                         from: Long, until: Long,
-                        season: Int = 24): DataFrame = {
-    val arr = densifyGrid(spark, dir, metric, from, until)
-      .agg(sort_array(collect_list(struct(col("ts"), col("value"))))
-        .as("rows"))
-      .select(
-        expr("transform(rows, r -> r.ts)").as("ts_arr"),
-        graft.functions.GraftFunctions.holtWinters(
-          expr("transform(rows, r -> r.value)"), season).as("f_arr"),
-        expr("transform(rows, r -> r.value)").as("v_arr"))
-    arr
-      .select(explode(arrays_zip(col("ts_arr"), col("v_arr"), col("f_arr")))
-        .as("z"))
-      .select(col("z.ts_arr").as("ts"), col("z.v_arr").as("value"),
-        q6(col("z.f_arr")).as("forecast"))
-      .orderBy("ts")
-  }
+                        season: Int = 24): DataFrame =
+    holtWintersOf(densifyGrid(spark, dir, metric, from, until), Nil, season)
 
-  /** The multi-metric DENSE GRID every `*_multi` transform face runs on
-    * — the render path's real call shape (glob → N series → transform
-    * each): every cataloged metric reconciled to its own coarsest step
-    * ([[reconcileToCoarsest]], the fetchPatternFrom read contract — a
-    * multi-resolution store must not leak duplicate grid rows) and
-    * densified onto its own grid, one (metric, ts, value) frame.
-    * Consumers partition their windows BY METRIC, so the parallelism
-    * axis is metrics and no window ever moves the whole read to one
-    * partition (the single-metric faces' documented caveat, closed by
-    * these variants). O(metrics × window) — result-sized.
-    *
-    * SINGLE-vs-MULTI COVERAGE (r15): 15 window-carrying transforms now
-    * have registered `_multi` faces proving the partitioned render
-    * shape (derivative, moving_avg/sum/minmax/median, zscore, stdev,
-    * keep_last, integral(+by_interval), ewma, interpolate, per_second,
-    * delay, changed — plus the windowless summarize rollup). The
-    * single faces that remain single-metric do so for a documented
-    * structural reason, not oversight: (a) whole-window NORMALIZERS
-    * (min_max, offset_to_zero, changepoint, outlier_mad, npercentile,
-    * autocorrelation, linreg, theil_sen, seasonal/STL family) reduce
-    * the window to O(1)–O(lag) per-metric aggregates first — their
-    * multi composition is a `groupBy(metric)` aggregate (already
-    * parallel), not a partitioned window, and several already ship
-    * that shape (aggregate_line, most_deviant, top_metrics,
-    * percentiles run over ALL metrics); (b) TWO-SERIES joins
-    * (divide/diff/multiply/correlation/as_percent) pair explicit
-    * metrics — `series_divide_multi` proves the N-pair form;
-    * (c) RE-READ overlays (time_shift/time_stack/time_slice) issue a
-    * second store read per shift — the multi form multiplies reads,
-    * not windows. Every unpartitioned `Window.orderBy("ts")` left in
-    * this file is O(result-grid slots) by the [[densifyGrid]]
-    * contract: bounded by the render window, never by the store. */
-  private[graft] def denseGridAll(spark: SparkSession, dir: String,
-                                  from: Long, until: Long): DataFrame = {
-    // r18 opt: the [[fetchForMetrics]] packed-map shape (one
-    // (gstep, ts → value) row per metric) replaces the former eager
-    // checkpoint + two sort-merge joins — see fetchForMetrics for the
-    // argument; identical values. r19: the packed side here covers the
-    // ENTIRE catalog × the render window — the worst case of the
-    // result-sized-broadcast risk — so the join is unhinted (AQE
-    // decides; see fetchForMetrics).
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val meta = Catalog.metricsMeta(spark)
-    val metrics = meta.select("metric")
-    val pts = Catalog.pointsCached(spark, dir)
-      .join(broadcast(metrics), "metric")
-      .where(col("ts") >= f && col("ts") < u)
-    val packed = reconcileToCoarsest(pts, meta, anchor = f)
-      .groupBy("metric")
-      .agg(max("step").as("gstep"),
-        map_from_entries(
-          collect_list(struct(col("ts"), col("value")))).as("m"))
-    metrics
-      .join(packed, Seq("metric"), "left")
-      .withColumn("gstep", coalesce(col("gstep"), lit(Step)))
-      .select(col("metric"),
-        explode(gridSeq(f, u, col("gstep"))).as("ts"),
-        col("m"))
-      .select(col("metric"), col("ts"),
-        element_at(col("m"), col("ts")).as("value"))
-  }
-
-  /** [[seriesDerivative]] over EVERY cataloged metric at once — the
-    * multi-series face of the highest-traffic graphite transform
-    * (r12-VERDICT item 6): the window partitions BY METRIC over the
-    * shared [[denseGridAll]] grid, so the per-metric sort runs where the
-    * metric's grid lives instead of moving the whole read to one
-    * partition. Same delta/rate semantics as the single-metric face. */
-  def seriesDerivativeMulti(spark: SparkSession, dir: String,
-                            from: Long, until: Long): DataFrame = {
-    val w = Window.partitionBy("metric").orderBy("ts")
-    denseGridAll(spark, dir, from, until)
-      .withColumn("delta", col("value") - lag("value", 1).over(w))
-      .withColumn("rate_per_s",
-        when(col("delta") >= 0, col("delta") / lit(Step.toDouble)))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesMovingAvg]] over EVERY cataloged metric — metric-partitioned
-    * trailing window on the shared [[denseGridAll]] grid; the same exact
-    * integer micro-unit window-sum parity defense. */
-  def seriesMovingAvgMulti(spark: SparkSession, dir: String,
-                           from: Long, until: Long,
-                           points: Int = 6): DataFrame = {
-    val w = Window.partitionBy("metric").orderBy("ts")
-      .rowsBetween(-(points - 1), 0)
-    denseGridAll(spark, dir, from, until)
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
-      .withColumn("ma",
-        sum("vm").over(w).cast("double") / count("vm").over(w) / lit(1e6))
-      .select(col("metric"), col("ts"), col("value"), col("ma"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesZscore]] over EVERY cataloged metric — metric-partitioned
-    * trailing-baseline window on the shared [[denseGridAll]] grid; the
-    * same exact integer milli-unit moment sums and one closing double
-    * expression. */
-  def seriesZscoreMulti(spark: SparkSession, dir: String,
-                        from: Long, until: Long, points: Int = 6,
-                        sigma: Double = 2.0): DataFrame = {
-    val w = Window.partitionBy("metric").orderBy("ts")
-      .rowsBetween(-points, -1)
-    denseGridAll(spark, dir, from, until)
-      .withColumn("km", floor(col("value") * lit(1e3) + lit(0.5)).cast("long"))
-      .withColumn("n", count("km").over(w))
-      .withColumn("s1", sum("km").over(w))
-      .withColumn("s2", sum(col("km") * col("km")).over(w))
-      .withColumn("sd",
-        when(col("n") >= 2,
-          sqrt((col("n") * col("s2") - col("s1") * col("s1")).cast("double") /
-            (col("n") * (col("n") - 1)).cast("double")) / lit(1e3)))
-      .withColumn("z",
-        when(col("km").isNotNull && col("sd") > 0, q6(
-          (col("km").cast("double") / lit(1e3) -
-            col("s1").cast("double") / col("n").cast("double") / lit(1e3)) /
-            col("sd"))))
-      .select(col("metric"), col("ts"), col("value"), col("z"),
-        when(col("z").isNotNull, abs(col("z")) > lit(sigma)).as("anomaly"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesKeepLast]] over EVERY cataloged metric — metric-partitioned
-    * gap-fill window on the shared [[denseGridAll]] grid (values copied,
-    * no arithmetic). */
-  def seriesKeepLastMulti(spark: SparkSession, dir: String,
-                          from: Long, until: Long,
-                          limit: Int = 3): DataFrame = {
-    val w = Window.partitionBy("metric").orderBy("ts")
-      .rowsBetween(-limit, 0)
-    denseGridAll(spark, dir, from, until)
-      .withColumn("filled", last("value", ignoreNulls = true).over(w))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesIntegral]] over EVERY cataloged metric — metric-partitioned
-    * running micro-int sum on the shared [[denseGridAll]] grid; same
-    * integer-accumulation parity defense. */
-  def seriesIntegralMulti(spark: SparkSession, dir: String,
-                          from: Long, until: Long): DataFrame = {
-    val w = Window.partitionBy("metric").orderBy("ts")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    denseGridAll(spark, dir, from, until)
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
-      .withColumn("integral", sum("vm").over(w).cast("double") / lit(1e6))
-      .select(col("metric"), col("ts"), col("value"), col("integral"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesEwma]] over EVERY cataloged metric — the same 16 explicit
-    * power-of-two lag taps (exact integer numerator/denominator sums),
-    * each tap's window partitioned by metric on the shared
-    * [[denseGridAll]] grid. Same taps ≤ 24 Long-exactness bound as the
-    * single-metric face (the fixed 16-tap oracle unroll is unaffected). */
-  def seriesEwmaMulti(spark: SparkSession, dir: String,
-                      from: Long, until: Long, taps: Int = 16): DataFrame = {
-    require(taps >= 1 && taps <= 24, s"taps must be in [1,24]: $taps")
-    val w = Window.partitionBy("metric").orderBy("ts")
-    val grid = denseGridAll(spark, dir, from, until)
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
-    def tap(k: Int): Column =
-      if (k == 0) col("vm") else lag(col("vm"), k).over(w)
-    val weighted = (0 until taps).map { k =>
-      coalesce(tap(k) * lit(1L << (taps - 1 - k)), lit(0L))
-    }.reduce(_ + _)
-    val weightSum = (0 until taps).map { k =>
-      when(tap(k).isNotNull, lit(1L << (taps - 1 - k))).otherwise(lit(0L))
-    }.reduce(_ + _)
-    grid
-      .withColumn("num", weighted)
-      .withColumn("den", weightSum)
-      .select(col("metric"), col("ts"), col("value"),
-        when(col("den") > 0, q6(
-          col("num").cast("double") / col("den").cast("double") / lit(1e6)))
-          .as("ewma"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesMovingStdev]] over EVERY cataloged metric — the same exact
-    * integer milli-unit moment sums (n, Σk, Σk² — milli so the squared
-    * sums stay exact in a long), each window partitioned by metric on
-    * the shared [[denseGridAll]] grid. */
-  def seriesStdevMulti(spark: SparkSession, dir: String,
-                       from: Long, until: Long,
-                       points: Int = 6): DataFrame = {
-    val w = Window.partitionBy("metric").orderBy("ts")
-      .rowsBetween(-(points - 1), 0)
-    denseGridAll(spark, dir, from, until)
-      .withColumn("km", floor(col("value") * lit(1e3) + lit(0.5)).cast("long"))
-      .withColumn("n", count("km").over(w))
-      .withColumn("s1", sum("km").over(w))
-      .withColumn("s2", sum(col("km") * col("km")).over(w))
-      .select(col("metric"), col("ts"), col("value"),
-        when(col("n") >= 2, q6(
-          sqrt((col("n") * col("s2") - col("s1") * col("s1")).cast("double") /
-            (col("n") * (col("n") - 1)).cast("double")) / lit(1e3)))
-          .as("stdev"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesMovingMedian]] over EVERY cataloged metric — the same
-    * `points` explicit lag taps → null-filtered sorted array → middle
-    * element, each tap's window partitioned by metric on the shared
-    * [[denseGridAll]] grid (values copied, even-count interpolation one
-    * identical IEEE add+halve). */
-  def seriesMovingMedianMulti(spark: SparkSession, dir: String,
-                              from: Long, until: Long,
-                              points: Int = 6): DataFrame = {
-    require(points >= 1 && points <= 64, s"points must be in [1,64]: $points")
-    val w = Window.partitionBy("metric").orderBy("ts")
-    val lags = (0 until points).map { k =>
-      if (k == 0) col("value") else lag(col("value"), k).over(w)
-    }
-    val arr = array_sort(filter(array(lags: _*), v => v.isNotNull))
-    val n = size(arr)
-    val half = ((n + lit(1)) / lit(2)).cast("int")
-    val lo = (n / lit(2)).cast("int")
-    val med = when(n === 0, lit(null).cast("double"))
-      .when(n % 2 === 1, element_at(arr, half))
-      .otherwise(
-        (element_at(arr, lo) + element_at(arr, lo + 1)) / lit(2.0))
-    denseGridAll(spark, dir, from, until)
-      .select(col("metric"), col("ts"), col("value"), med.as("median"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesInterpolate]] over EVERY cataloged metric — the same
-    * ignore-null neighbor-struct windows and single closing fill
-    * expression, both windows partitioned by metric on the shared
-    * [[denseGridAll]] grid (a metric's leading/trailing gaps never see
-    * another metric's neighbors). */
-  def seriesInterpolateMulti(spark: SparkSession, dir: String,
-                             from: Long, until: Long): DataFrame = {
-    val wPrev = Window.partitionBy("metric").orderBy("ts")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wNext = Window.partitionBy("metric").orderBy("ts")
-      .rowsBetween(1, Window.unboundedFollowing)
-    val obs = when(col("value").isNotNull,
-      struct(col("ts").as("t"), col("value").as("v")))
-    denseGridAll(spark, dir, from, until)
-      .withColumn("p", last(obs, ignoreNulls = true).over(wPrev))
-      .withColumn("nx", first(obs, ignoreNulls = true).over(wNext))
-      .withColumn("interp",
-        when(col("value").isNotNull, col("value"))
-          .otherwise(when(col("p").isNotNull && col("nx").isNotNull,
-            col("p.v") + (col("nx.v") - col("p.v")) *
-              ((col("ts") - col("p.t")) / (col("nx.t") - col("p.t"))))))
-      .select(col("metric"), col("ts"), col("value"), col("interp"),
-        (col("value").isNull && col("interp").isNotNull).as("filled"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesSummarize]] over EVERY cataloged metric — the coarse
-    * re-bucketing grouped by (metric, bucket): a map-side-combinable
-    * rollup (no window at all), bucket sums in exact integer
-    * micro-units, min/max/count order-free. The parallelism axis is
-    * (metric × bucket) — strictly finer than the multi windows'. */
-  def seriesSummarizeMulti(spark: SparkSession, dir: String,
-                           from: Long, until: Long,
-                           bucket: Long = 14400): DataFrame = {
-    val f = Kernel.align(from, Step)
-    denseGridAll(spark, dir, from, until)
-      .withColumn("bts", col("ts") - pmod(col("ts") - lit(f), lit(bucket)))
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
-      .groupBy(col("metric"), col("bts").as("ts"))
-      .agg(count(col("vm")).as("n_slots"),
-           (sum("vm").cast("double") / lit(1e6)).as("v_sum"),
-           (sum("vm").cast("double") / count("vm") / lit(1e6)).as("v_avg"),
-           min("value").as("v_min"),
-           max("value").as("v_max"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesMovingSum]] over EVERY cataloged metric — the trailing
-    * sum/min/max window partitioned by metric on the shared
-    * [[denseGridAll]] grid; exact micro-unit integer window sums,
-    * min/max order-free. */
-  def seriesMovingSumMulti(spark: SparkSession, dir: String,
-                           from: Long, until: Long,
-                           window: Int = 6): DataFrame = {
-    val w = Window.partitionBy("metric").orderBy("ts")
-      .rowsBetween(-(window - 1), 0)
-    denseGridAll(spark, dir, from, until)
-      .withColumn("vm",
-        floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
-      .select(col("metric"), col("ts"), col("value"),
-        q6(sum("vm").over(w) / lit(1e6)).as("msum"),
-        min("value").over(w).as("mmin"),
-        max("value").over(w).as("mmax"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesMovingMinmax]] over EVERY cataloged metric —
-    * comparison-only trailing extremes, window partitioned by metric on
-    * the shared [[denseGridAll]] grid. */
-  def seriesMovingMinmaxMulti(spark: SparkSession, dir: String,
-                              from: Long, until: Long,
-                              points: Int = 6): DataFrame = {
-    val w = Window.partitionBy("metric").orderBy("ts")
-      .rowsBetween(-(points - 1), 0)
-    denseGridAll(spark, dir, from, until)
-      .withColumn("mv_min", min("value").over(w))
-      .withColumn("mv_max", max("value").over(w))
-      .select("metric", "ts", "value", "mv_min", "mv_max")
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesPerSecond]] over EVERY cataloged metric — graphite's
-    * `_nonNegativeDelta` guards (value-over-cap nulled, wrap recovery
-    * requires prev ≤ maxValue) with the lag window partitioned by
-    * metric on the shared [[denseGridAll]] grid. */
-  def seriesPerSecondMulti(spark: SparkSession, dir: String,
-                           from: Long, until: Long,
-                           maxValue: Double = 1000.0): DataFrame = {
-    val w = Window.partitionBy("metric").orderBy("ts")
-    denseGridAll(spark, dir, from, until)
-      .withColumn("prev", lag("value", 1).over(w))
-      .select(col("metric"), col("ts"), col("value"),
-        when(col("value") > lit(maxValue), lit(null).cast("double"))
-        .when(col("value") - col("prev") >= 0,
-          (col("value") - col("prev")) / lit(Step.toDouble))
-        .when(lit(maxValue) >= col("prev"),
-          (lit(maxValue) - col("prev") + col("value") + lit(1.0))
-            / lit(Step.toDouble))
-        .as("rate_per_s"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesDelay]] over EVERY cataloged metric — the slot-domain lag
-    * (values copied, never computed), window partitioned by metric on
-    * the shared [[denseGridAll]] grid. */
-  def seriesDelayMulti(spark: SparkSession, dir: String,
-                       from: Long, until: Long, steps: Int = 3): DataFrame = {
-    val w = Window.partitionBy("metric").orderBy("ts")
-    denseGridAll(spark, dir, from, until)
-      .select(col("metric"), col("ts"), col("value"),
-        lag("value", steps).over(w).as("delayed"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesChanged]] over EVERY cataloged metric — the did-it-move
-    * flag, lag window partitioned by metric on the shared
-    * [[denseGridAll]] grid (comparison on identical doubles, no
-    * arithmetic). */
-  def seriesChangedMulti(spark: SparkSession, dir: String,
-                         from: Long, until: Long): DataFrame = {
-    val w = Window.partitionBy("metric").orderBy("ts")
-    denseGridAll(spark, dir, from, until)
-      .withColumn("prev", lag("value", 1).over(w))
-      .select(col("metric"), col("ts"), col("value"),
-        when(col("value").isNotNull && col("prev").isNotNull &&
-          col("value") =!= col("prev"), 1L).otherwise(0L).as("changed"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesOffsetToZero]] over EVERY cataloged metric — the
-    * rebase-to-window-minimum normalizer with its unbounded frame
-    * partitioned by metric on the shared [[denseGridAll]] grid (the
-    * min is comparison-only, the subtraction one IEEE op). */
-  def seriesOffsetToZeroMulti(spark: SparkSession, dir: String,
-                              from: Long, until: Long): DataFrame = {
-    val w = Window.partitionBy("metric")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    denseGridAll(spark, dir, from, until)
-      .select(col("metric"), col("ts"), col("value"),
-        (col("value") - min("value").over(w)).as("zeroed"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesMinMax]] over EVERY cataloged metric — the [0,1] range
-    * normalizer with its unbounded extrema frames partitioned by
-    * metric on the shared [[denseGridAll]] grid; same flat-series →
-    * 0.0 convention and 6 dp display rounding as the single face. */
-  def seriesMinMaxMulti(spark: SparkSession, dir: String,
-                        from: Long, until: Long): DataFrame = {
-    val w = Window.partitionBy("metric")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    denseGridAll(spark, dir, from, until)
-      .withColumn("mn", min("value").over(w))
-      .withColumn("mx", max("value").over(w))
-      .select(col("metric"), col("ts"), col("value"),
-        when(col("value").isNotNull,
-          when(col("mx") > col("mn"),
-            q6((col("value") - col("mn")) / (col("mx") - col("mn"))))
-            .otherwise(lit(0.0))).as("norm"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesHitcount]] over EVERY cataloged metric — the
-    * value·seconds bucket resample as a (metric, bucket)-keyed rollup
-    * on the shared [[denseGridAll]] grid: no window at all, map-side
-    * combinable, exact micro-unit integer sums with one closing
-    * division. */
-  def seriesHitcountMulti(spark: SparkSession, dir: String,
-                          from: Long, until: Long,
-                          bucket: Long = 14400): DataFrame = {
-    val f = Kernel.align(from, Step)
-    denseGridAll(spark, dir, from, until)
-      .withColumn("bts", col("ts") - pmod(col("ts") - lit(f), lit(bucket)))
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
-      .groupBy(col("metric"), col("bts").as("ts"))
-      .agg(count(col("vm")).as("n_slots"),
-           (sum(col("vm") * lit(Step)).cast("double") / lit(1e6)).as("hits"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesOutlierMad]] over EVERY cataloged metric — the modified
-    * z-score gate with BOTH median passes run as per-metric rank
-    * windows and the medians/counts joined back as O(#metrics)
-    * broadcast relations (the single face's 1-row cross joins,
-    * metric-keyed): exact doubled-integer median/MAD order statistics,
-    * one closing double expression per slot. The grid is
-    * localCheckpoint-ed once and feeds all five subtrees, same as the
-    * single face. */
-  def seriesOutlierMadMulti(spark: SparkSession, dir: String,
-                            from: Long, until: Long,
-                            cutoff: Double = 3.5): DataFrame = {
-    // r18 opt: the single face's window-pick medians, partitioned by
-    // metric — one exchange establishes hash(metric) and every rank /
-    // whole-frame pick chains on it; the former checkpoint + two
-    // (rank + count-broadcast + rollup + join-back) median round-trips
-    // are gone. An all-gap metric keeps n = 0 and is dropped by the
-    // closing filter — exactly the rows the former INNER med join
-    // dropped.
-    val all = Window.partitionBy("metric")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    def med2Col(df: DataFrame, c: String, out: String): DataFrame =
-      df.withColumn("r", row_number().over(Window.partitionBy("metric")
-          .orderBy(col(c).asc_nulls_last, col("ts"))))
-        .withColumn("n", count(col(c)).over(all))
-        .withColumn(out,
-          when(col("n") % 2 === 1,
-            max(when(col("r") === (col("n") + 1) / 2, col(c))).over(all) * 2)
-            .otherwise(
-              max(when(col("r") === col("n") / 2, col(c))).over(all) +
-              max(when(col("r") === col("n") / 2 + 1, col(c))).over(all)))
-        .drop("r")
-    val devs = med2Col(
-        denseGridAll(spark, dir, from, until)
-          .withColumn("vm",
-            floor(col("value") * lit(1e6) + lit(0.5)).cast("long")),
-        "vm", "med2")
-      .withColumn("npres", col("n"))
-      .withColumn("dev",
-        when(col("vm").isNotNull, abs(col("vm") * 2 - col("med2"))))
-    med2Col(devs.drop("n"), "dev", "mad4")
-      .where(col("npres") > 0)
-      .withColumn("z",
-        when(col("vm").isNotNull && col("mad4") > 0, q6(
-          lit(0.6745) * 2 * (col("vm") * 2 - col("med2")).cast("double") /
-            col("mad4"))))
-      .select(col("metric"), col("ts"), col("value"), col("z"),
-        when(col("z").isNotNull, abs(col("z")) > lit(cutoff)).as("outlier"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesBands]] over EVERY cataloged metric — the deviation-band
-    * aberration read with its trailing moment window partitioned by
-    * metric on the shared [[denseGridAll]] grid; same exact milli-int
-    * window sums, band arithmetic, and aberrant comparison as the
-    * single face. */
-  def seriesBandsMulti(spark: SparkSession, dir: String,
-                       from: Long, until: Long, points: Int = 12,
-                       nSigma: Double = 2.0): DataFrame = {
-    val w = Window.partitionBy("metric").orderBy("ts")
-      .rowsBetween(-(points - 1), 0)
-    denseGridAll(spark, dir, from, until)
-      .withColumn("vk", floor(col("value") * lit(1e3) + lit(0.5)).cast("long"))
-      .withColumn("n", count("vk").over(w))
-      .withColumn("s1", sum("vk").over(w))
-      .withColumn("s2", sum(col("vk") * col("vk")).over(w))
-      .withColumn("mean", col("s1").cast("double") / col("n") / lit(1e3))
-      .withColumn("sd",
-        when(col("n") > 1,
-          sqrt((col("n") * col("s2") - col("s1") * col("s1")).cast("double"))
-            / col("n") / lit(1e3)))
-      .withColumn("upper", col("mean") + lit(nSigma) * col("sd"))
-      .withColumn("lower", col("mean") - lit(nSigma) * col("sd"))
-      .withColumn("aberrant",
-        col("value").isNotNull && col("sd").isNotNull &&
-          (col("value") > col("upper") || col("value") < col("lower")))
-      .select(col("metric"), col("ts"), col("value"),
-        q6(col("mean")).as("mean"), q6(col("sd")).as("sd"),
-        q6(col("upper")).as("upper"), q6(col("lower")).as("lower"),
-        col("aberrant"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesChangepoint]] over EVERY cataloged metric — the offline
-    * CUSUM argmax with the per-metric totals and peak rows as
-    * O(#metrics) broadcast join-backs (the single face's 1-row cross
-    * joins, metric-keyed — the [[seriesOutlierMadMulti]] shape) and the
-    * running-sum window partitioned by metric; exact integer
-    * n·vm−total accumulation. */
-  def seriesChangepointMulti(spark: SparkSession, dir: String,
-                             from: Long, until: Long): DataFrame = {
-    // r18 opt: the single face's window chain partitioned by metric —
-    // totals, running CUSUM and the per-metric |S|-argmax all share one
-    // hash(metric) exchange; the former checkpoint + per-metric rollup
-    // + two broadcast join-backs are gone. Same integers, same argmax
-    // struct order.
-    val all = Window.partitionBy("metric")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val wRun = Window.partitionBy("metric").orderBy("ts")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    denseGridAll(spark, dir, from, until)
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
-      .withColumn("total", sum("vm").over(all))
-      .withColumn("n", count("vm").over(all))
-      .withColumn("dev",
-        when(col("vm").isNotNull, col("n") * col("vm") - col("total")))
-      .withColumn("csm", sum("dev").over(wRun))
-      .withColumn("pk",
-        max(when(col("csm").isNotNull && col("n") >= 2,
-          struct(abs(col("csm")).as("a"), (-col("ts")).as("nt")))).over(all))
-      .select(col("metric"), col("ts"), col("value"),
-        (floor(when(col("n") >= 1,
-          col("csm").cast("double") / col("n") / lit(1e6)) * lit(1e6)
-          + lit(0.5)) / lit(1e6)).as("cusum"),
-        when(col("csm").isNotNull && col("n") >= 2,
-          col("ts") === (-col("pk.nt"))).as("changepoint"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesAutocorrelation]] over EVERY cataloged metric — the ACF
-    * rhythm read with the O(maxLag) lag table broadcast against every
-    * metric's present slots and the moment rollup keyed (metric, lag):
-    * map-side combinable, NO window function at all — the finest
-    * parallelism axis after the bucket rollups. Same DECIMAL(38,0)
-    * micro-unit moment sums and closing double sequence as the single
-    * face. */
-  def seriesAutocorrelationMulti(spark: SparkSession, dir: String,
-                                 from: Long, until: Long,
-                                 maxLag: Int = 48): DataFrame = {
-    val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
-    val grid = denseGridAll(spark, dir, from, until)
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast(dec))
-      .where(col("vm").isNotNull)
-    val lags = spark.range(1, maxLag + 1).toDF("lag")
-    val pairs = grid.select(col("metric"), col("ts"), col("vm").as("am"))
-      .crossJoin(broadcast(lags))
-      .withColumn("ts_prev", col("ts") - lit(Step) * col("lag"))
-      .join(grid.select(col("metric"), col("ts").as("ts_prev"),
-        col("vm").as("bm")), Seq("metric", "ts_prev"))
-    pairs
-      .groupBy(col("metric"), col("lag"))
-      .agg(count(lit(1)).cast(dec).as("n"),
-        sum("am").as("sa"), sum("bm").as("sb"),
-        sum(col("am") * col("bm")).as("sab"),
-        sum(col("am") * col("am")).as("saa"),
-        sum(col("bm") * col("bm")).as("sbb"))
-      .withColumn("d1",
-        (col("n") * col("saa") - col("sa") * col("sa")).cast("double"))
-      .withColumn("d2",
-        (col("n") * col("sbb") - col("sb") * col("sb")).cast("double"))
-      .select(col("metric"), col("lag"), col("n").cast("long").as("n_pairs"),
-        when(col("d1") > 0 && col("d2") > 0, q6(
-          (col("n") * col("sab") - col("sa") * col("sb")).cast("double")
-            / sqrt(col("d1") * col("d2")))).as("r"))
-      .orderBy("metric", "lag")
-  }
-
-  /** [[seriesTheilSen]] over EVERY cataloged metric — the robust-trend
-    * pairwise-slope median with the pair join keyed on metric (each
-    * metric's O(w²) pairs build where its slots live), the slope-rank
-    * window partitioned by metric, and the O(#metrics) count relations
-    * broadcast-joined back. One summary row per metric. */
-  def seriesTheilSenMulti(spark: SparkSession, dir: String,
-                          from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    // lazy localCheckpoint (r18 opt): three consumers, one
-    // materialization (the single face's argument, metric-keyed)
-    val g = denseGridAll(spark, dir, from, until)
-      .where(col("value").isNotNull)
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
-      .withColumn("x", expr(s"(ts - $f) div $Step"))
-      .select("metric", "x", "vm")
-      .localCheckpoint()
-    val sl = g.select(col("metric"), col("x").as("xa"), col("vm").as("va"))
-      .join(g.select(col("metric"), col("x").as("xb"), col("vm").as("vb")),
-        Seq("metric"))
-      .where(col("xa") < col("xb"))
-      .select(col("metric"), ((col("vb") - col("va")).cast("double") /
-        (col("xb") - col("xa")).cast("double") / lit(1e6)).as("slope"))
-    // r18 opt: per-metric pair count as a window over the rank's own
-    // partitioning instead of a rollup + broadcast join-back
-    val med = sl
-      .withColumn("r", row_number().over(
-        Window.partitionBy("metric").orderBy("slope")).cast("long"))
-      .withColumn("m", count(lit(1)).over(Window.partitionBy("metric")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .groupBy("metric")
-      .agg((sum(
-        when(col("m") % 2 === 1,
-          when(col("r") === expr("(m + 1) div 2"), col("slope") * 2))
-          .otherwise(when(col("r") === expr("m div 2") ||
-            col("r") === expr("m div 2 + 1"), col("slope")))) / lit(2.0))
-        .as("slope"),
-        max("m").as("n_pairs"))
-    val np = g.groupBy("metric").agg(count(lit(1)).as("n_points"))
-    med.join(broadcast(np), Seq("metric"))
-      .select(col("metric"), col("n_points"), col("n_pairs"),
-        (floor(col("slope") * lit(1e6) + lit(0.5)) / lit(1e6))
-          .as("slope_per_slot"))
-      .orderBy("metric")
-  }
-
-  /** [[seriesHoltWintersBands]] over EVERY cataloged metric — one
-    * native [[graft.functions.GraftFunctions.holtWintersBands]] walk per
-    * metric over the shared [[denseGridAll]] grid (the
-    * [[seriesHoltWintersMulti]] grouped-array shape): the alerting
-    * aberration read for a whole dashboard glob in one plan, parallelism
-    * axis = metrics. Same (forecast, deviation) struct expression as the
-    * single face — the two reads cannot desynchronize. */
-  def seriesHoltWintersBandsMulti(spark: SparkSession, dir: String,
-                                  from: Long, until: Long,
-                                  season: Int = 24,
-                                  k: Double = 3.0): DataFrame = {
-    val arr = denseGridAll(spark, dir, from, until)
-      .groupBy("metric")
-      .agg(sort_array(collect_list(struct(col("ts"), col("value"))))
-        .as("rows"))
-      .select(col("metric"),
-        expr("transform(rows, r -> r.ts)").as("ts_arr"),
-        graft.functions.GraftFunctions.holtWintersBands(
-          expr("transform(rows, r -> r.value)"), season).as("st_arr"),
-        expr("transform(rows, r -> r.value)").as("v_arr"))
-    arr
-      .select(col("metric"),
-        explode(arrays_zip(col("ts_arr"), col("v_arr"), col("st_arr")))
-          .as("z"))
-      .select(col("metric"), col("z.ts_arr").as("ts"),
-        col("z.v_arr").as("value"),
-        col("z.st_arr.f").as("f"), col("z.st_arr.dev").as("dev"))
-      .withColumn("lower", col("f") - lit(k) * col("dev"))
-      .withColumn("upper", col("f") + lit(k) * col("dev"))
-      .select(col("metric"), col("ts"), col("value"),
-        q6(col("f")).as("forecast"),
-        q6(col("lower")).as("lower"),
-        q6(col("upper")).as("upper"),
-        q6(when(col("value").isNull || col("f").isNull, lit(null))
-          .when(col("value") > col("upper"), col("value") - col("upper"))
-          .when(col("value") < col("lower"), col("value") - col("lower"))
-          .otherwise(lit(0.0))).as("aberration"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesSeasonalDecompose]] over EVERY cataloged metric — the
-    * STL-lite trend/seasonal/residual split with the centered trend
-    * window partitioned by metric, the seasonal means keyed
-    * (metric, slot-of-day), and the O(#metrics × season) seasonal table
-    * broadcast back; identical integer-requantization discipline as the
-    * single face. The anomaly/strength multi faces consume this plan —
-    * one decomposition definition, three reads. */
-  def seriesSeasonalDecomposeMulti(spark: SparkSession, dir: String,
-                                   from: Long, until: Long,
-                                   season: Int = 24,
-                                   half: Int = 12): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val w = Window.partitionBy("metric").orderBy("ts").rowsBetween(-half, half)
-    val withTrend = denseGridAll(spark, dir, from, until)
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
-      .withColumn("trend",
-        when(count("vm").over(w) >= 1,
-          sum("vm").over(w).cast("double") / count("vm").over(w) / lit(1e6)))
-      .withColumn("slot",
-        expr(s"pmod((ts - $f) div $Step, $season)").cast("long"))
-      .withColumn("dm",
-        when(col("value").isNotNull && col("trend").isNotNull,
-          floor((col("value") - col("trend")) * lit(1e6) + lit(0.5))
-            .cast("long")))
-    val seasonal = withTrend
-      .groupBy("metric", "slot")
-      .agg((sum("dm").cast("double") / count("dm") / lit(1e6)).as("seasonal"))
-      .where(col("seasonal").isNotNull)
-    // display quantization: floor(x·1e6 + 0.5)/1e6, NOT round(x, 6) —
-    // round()'s half-boundary is decided on the decimal STRING and is
-    // engine-specific (the multi fixture hits -16.3762135 exactly);
-    // floor is one IEEE op both engines replicate bit-for-bit
-    withTrend
-      .join(broadcast(seasonal), Seq("metric", "slot"), "left")
-      .select(col("metric"), col("ts"), col("value"),
-        q6(col("trend")).as("trend"),
-        q6(col("seasonal")).as("seasonal"),
-        q6(when(col("value").isNotNull && col("trend").isNotNull
-            && col("seasonal").isNotNull,
-          col("value") - col("trend") - col("seasonal"))).as("residual"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesAnomalyStl]] over EVERY cataloged metric — residual
-    * z-scores with the per-metric residual moments as an O(#metrics)
-    * broadcast join-back onto [[seriesSeasonalDecomposeMulti]]'s plan;
-    * same MILLI-unit quantization and closing sequence as the single
-    * face. */
-  def seriesAnomalyStlMulti(spark: SparkSession, dir: String,
-                            from: Long, until: Long, season: Int = 24,
-                            half: Int = 12, sigma: Double = 3.0): DataFrame = {
-    val g = seriesSeasonalDecomposeMulti(spark, dir, from, until,
-      season, half)
-      .select(col("metric"), col("ts"), col("value"), col("residual"))
-      .withColumn("rm",
-        floor(col("residual") * lit(1e3) + lit(0.5)).cast("long"))
-    val stats = g.groupBy("metric")
-      .agg(count("rm").as("n"), sum("rm").as("s1"),
-        sum(col("rm") * col("rm")).as("s2"))
-    g.join(broadcast(stats), Seq("metric"))
-      .withColumn("sd",
-        when(col("n") >= 2,
-          sqrt((col("n") * col("s2") - col("s1") * col("s1")).cast("double") /
-            (col("n") * (col("n") - 1)).cast("double")) / lit(1e3)))
-      .withColumn("z",
-        when(col("rm").isNotNull && col("sd") > 0, q6(
-          (col("rm").cast("double") / lit(1e3) -
-            col("s1").cast("double") / col("n").cast("double") / lit(1e3)) /
-            col("sd"))))
-      .select(col("metric"), col("ts"), col("value"), col("residual"),
-        col("z"),
-        when(col("z").isNotNull, abs(col("z")) > lit(sigma)).as("anomaly"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesStlStrength]] over EVERY cataloged metric — the
-    * trend/seasonal strength ratios as one O(#metrics) rollup over
-    * [[seriesSeasonalDecomposeMulti]]'s plan; same integer
-    * variance-numerator contract and explicit zero-variance → 0.0
-    * branch as the single face. */
-  def seriesStlStrengthMulti(spark: SparkSession, dir: String,
-                             from: Long, until: Long, season: Int = 24,
-                             half: Int = 12): DataFrame = {
-    val dec = seriesSeasonalDecomposeMulti(spark, dir, from, until,
-      season, half)
-      .where(col("value").isNotNull && col("trend").isNotNull &&
-        col("seasonal").isNotNull)
-      .withColumn("rm",
-        floor(col("residual") * lit(1e3) + lit(0.5)).cast("long"))
-      .withColumn("tm", floor((col("value") - col("seasonal")) * lit(1e3) +
-        lit(0.5)).cast("long"))
-      .withColumn("sm", floor((col("value") - col("trend")) * lit(1e3) +
-        lit(0.5)).cast("long"))
-    def varNum(c: String) =
-      count(lit(1)) * sum(col(c) * col(c)) - sum(col(c)) * sum(col(c))
-    dec.groupBy("metric")
-      .agg(count(lit(1)).as("n"),
-        varNum("rm").as("vr"), varNum("tm").as("vt"), varNum("sm").as("vs"))
-      .select(col("metric"), col("n"),
-        q6(greatest(lit(0.0), when(col("vt") > 0,
-          lit(1.0) - col("vr").cast("double") / col("vt").cast("double"))
-          .otherwise(lit(0.0)))).as("trend_strength"),
-        q6(greatest(lit(0.0), when(col("vs") > 0,
-          lit(1.0) - col("vr").cast("double") / col("vs").cast("double"))
-          .otherwise(lit(0.0)))).as("seasonal_strength"))
-      .orderBy("metric")
-  }
-
-  /** [[seriesIntegralByInterval]] over EVERY cataloged metric — the
-    * bucket-resetting running sum with its window partitioned by
-    * (metric, bucket) on the shared [[denseGridAll]] grid: strictly
-    * FINER parallelism than the multi windows (every metric×bucket cell
-    * sorts independently); exact micro-unit integer accumulation. */
-  def seriesIntegralByIntervalMulti(spark: SparkSession, dir: String,
-                                    from: Long, until: Long,
-                                    bucket: Long = 14400): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val w = Window.partitionBy("metric", "bucket").orderBy("ts")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    denseGridAll(spark, dir, from, until)
-      .withColumn("bucket",
-        col("ts") - pmod(col("ts") - lit(f), lit(bucket)))
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
-      .withColumn("integral", sum("vm").over(w).cast("double") / lit(1e6))
-      .select(col("metric"), col("ts"), col("value"), col("integral"))
-      .orderBy("metric", "ts")
-  }
-
-  /** [[seriesHoltWinters]] over EVERY cataloged metric at once — the
-    * shape that proves the forecast's scale story: the shared
-    * [[denseGridAll]] multi-metric grid, one `collect_list` per metric
-    * partition, one native-expression call per metric. Metrics are
-    * independent, so the smoother parallelizes across the catalog
-    * exactly like any per-metric aggregate — the sequential recursion
-    * never crosses a partition. Same parity contract (recursive CTE per
-    * metric in the oracle). */
+  /** [[seriesHoltWinters]] over every cataloged metric: one
+    * `collect_list` and one native call per metric, so the sequential
+    * recursion never crosses a partition and the smoother parallelizes
+    * across the catalog like any per-metric aggregate. */
   def seriesHoltWintersMulti(spark: SparkSession, dir: String,
                              from: Long, until: Long,
-                             season: Int = 24): DataFrame = {
-    val arr = denseGridAll(spark, dir, from, until)
-      .groupBy("metric")
+                             season: Int = 24): DataFrame =
+    holtWintersOf(denseGridAll(spark, dir, from, until), ByMetric, season)
+
+  private def holtWintersOf(grid: DataFrame, by: Seq[String],
+                            season: Int): DataFrame = {
+    val arr = grid
+      .groupBy(keyed(by): _*)
       .agg(sort_array(collect_list(struct(col("ts"), col("value"))))
         .as("rows"))
-      .select(col("metric"),
+      .select(keyed(by,
         expr("transform(rows, r -> r.ts)").as("ts_arr"),
         graft.functions.GraftFunctions.holtWinters(
           expr("transform(rows, r -> r.value)"), season).as("f_arr"),
-        expr("transform(rows, r -> r.value)").as("v_arr"))
+        expr("transform(rows, r -> r.value)").as("v_arr")): _*)
     arr
-      .select(col("metric"),
+      .select(keyed(by,
         explode(arrays_zip(col("ts_arr"), col("v_arr"), col("f_arr")))
-          .as("z"))
-      .select(col("metric"), col("z.ts_arr").as("ts"),
-        col("z.v_arr").as("value"), q6(col("z.f_arr")).as("forecast"))
-      .orderBy("metric", "ts")
+          .as("z")): _*)
+      .select(keyed(by, col("z.ts_arr").as("ts"), col("z.v_arr").as("value"),
+        q6(col("z.f_arr")).as("forecast")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `holtWintersConfidenceBands` + `holtWintersAberration` analog
@@ -2296,31 +1679,47 @@ object SeriesOps {
     * doubles vs the oracle's recursive CTE. */
   def seriesHoltWintersBands(spark: SparkSession, dir: String,
                              metric: String, from: Long, until: Long,
-                             season: Int = 24, k: Double = 3.0): DataFrame = {
-    val arr = densifyGrid(spark, dir, metric, from, until)
+                             season: Int = 24, k: Double = 3.0): DataFrame =
+    holtWintersBandsOf(densifyGrid(spark, dir, metric, from, until), Nil,
+      season, k)
+
+  /** [[seriesHoltWintersBands]] over every cataloged metric: the
+    * alerting read for a whole dashboard glob in one plan. */
+  def seriesHoltWintersBandsMulti(spark: SparkSession, dir: String,
+                                  from: Long, until: Long,
+                                  season: Int = 24,
+                                  k: Double = 3.0): DataFrame =
+    holtWintersBandsOf(denseGridAll(spark, dir, from, until), ByMetric,
+      season, k)
+
+  private def holtWintersBandsOf(grid: DataFrame, by: Seq[String],
+                                 season: Int, k: Double): DataFrame = {
+    val arr = grid
+      .groupBy(keyed(by): _*)
       .agg(sort_array(collect_list(struct(col("ts"), col("value"))))
         .as("rows"))
-      .select(
+      .select(keyed(by,
         expr("transform(rows, r -> r.ts)").as("ts_arr"),
         graft.functions.GraftFunctions.holtWintersBands(
           expr("transform(rows, r -> r.value)"), season).as("st_arr"),
-        expr("transform(rows, r -> r.value)").as("v_arr"))
+        expr("transform(rows, r -> r.value)").as("v_arr")): _*)
     arr
-      .select(explode(arrays_zip(col("ts_arr"), col("v_arr"), col("st_arr")))
-        .as("z"))
-      .select(col("z.ts_arr").as("ts"), col("z.v_arr").as("value"),
-        col("z.st_arr.f").as("f"), col("z.st_arr.dev").as("dev"))
+      .select(keyed(by,
+        explode(arrays_zip(col("ts_arr"), col("v_arr"), col("st_arr")))
+          .as("z")): _*)
+      .select(keyed(by, col("z.ts_arr").as("ts"), col("z.v_arr").as("value"),
+        col("z.st_arr.f").as("f"), col("z.st_arr.dev").as("dev")): _*)
       .withColumn("lower", col("f") - lit(k) * col("dev"))
       .withColumn("upper", col("f") + lit(k) * col("dev"))
-      .select(col("ts"), col("value"),
+      .select(keyed(by, col("ts"), col("value"),
         q6(col("f")).as("forecast"),
         q6(col("lower")).as("lower"),
         q6(col("upper")).as("upper"),
         q6(when(col("value").isNull || col("f").isNull, lit(null))
           .when(col("value") > col("upper"), col("value") - col("upper"))
           .when(col("value") < col("lower"), col("value") - col("lower"))
-          .otherwise(lit(0.0))).as("aberration"))
-      .orderBy("ts")
+          .otherwise(lit(0.0))).as("aberration")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** Classical SEASONAL DECOMPOSITION (STL-lite) of one series: trend =
@@ -2340,10 +1739,25 @@ object SeriesOps {
   def seriesSeasonalDecompose(spark: SparkSession, dir: String,
                               metric: String, from: Long, until: Long,
                               season: Int = 24,
-                              half: Int = 12): DataFrame = {
+                              half: Int = 12): DataFrame =
+    decomposeOf(densifyGrid(spark, dir, metric, from, until), Nil,
+      from, season, half)
+
+  /** [[seriesSeasonalDecompose]] over every cataloged metric, seasonal
+    * means keyed (metric, slot-of-day). The anomaly/strength multi faces
+    * consume this plan — one decomposition definition, three reads. */
+  def seriesSeasonalDecomposeMulti(spark: SparkSession, dir: String,
+                                   from: Long, until: Long,
+                                   season: Int = 24,
+                                   half: Int = 12): DataFrame =
+    decomposeOf(denseGridAll(spark, dir, from, until), ByMetric,
+      from, season, half)
+
+  private def decomposeOf(grid: DataFrame, by: Seq[String], from: Long,
+                          season: Int, half: Int): DataFrame = {
     val f = Kernel.align(from, Step)
-    val w = Window.orderBy("ts").rowsBetween(-half, half)
-    val withTrend = densifyGrid(spark, dir, metric, from, until)
+    val w = keyWindow(by).orderBy("ts").rowsBetween(-half, half)
+    val withTrend = grid
       .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
       .withColumn("trend",
         when(count("vm").over(w) >= 1,
@@ -2355,23 +1769,23 @@ object SeriesOps {
           floor((col("value") - col("trend")) * lit(1e6) + lit(0.5))
             .cast("long")))
     val seasonal = withTrend
-      .groupBy("slot")
+      .groupBy(keyed(by, col("slot")): _*)
       .agg((sum("dm").cast("double") / count("dm") / lit(1e6)).as("seasonal"))
       .where(col("seasonal").isNotNull)
     // display quantization: floor(x·1e6 + 0.5)/1e6, NOT round(x, 6) —
-    // the multi face's -16.3762135 half-boundary lesson applies here
-    // identically (sf0.001 hits one on events.purchase): round()'s
-    // half-boundary is decided on the decimal STRING and is
-    // engine-specific; floor is one IEEE op both engines replicate
+    // round()'s half-boundary is decided on the decimal STRING and is
+    // engine-specific (the multi fixture hits -16.3762135 exactly, and
+    // sf0.001 hits one on events.purchase); floor is one IEEE op both
+    // engines replicate bit-for-bit
     withTrend
-      .join(broadcast(seasonal), Seq("slot"), "left")
-      .select(col("ts"), col("value"),
+      .join(broadcast(seasonal), by :+ "slot", "left")
+      .select(keyed(by, col("ts"), col("value"),
         q6(col("trend")).as("trend"),
         q6(col("seasonal")).as("seasonal"),
         q6(when(col("value").isNotNull && col("trend").isNotNull
             && col("seasonal").isNotNull,
-          col("value") - col("trend") - col("seasonal"))).as("residual"))
-      .orderBy("ts")
+          col("value") - col("trend") - col("seasonal"))).as("residual")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** SEASONAL-AWARE anomaly read: z-scores over [[seriesSeasonalDecompose]]'s
@@ -2383,18 +1797,30 @@ object SeriesOps {
     * are quantized to MILLI-units — squared micro sums would overflow a
     * long (the [[seriesStdev]] bound) — and the mean/σ are one integer
     * moment pass with the [[seriesZscore]] closing sequence. Scale:
-    * decompose's O(output) plan + one O(1)-row stats broadcast. */
+    * decompose's O(output) plan + whole-partition moment windows. */
   def seriesAnomalyStl(spark: SparkSession, dir: String, metric: String,
                        from: Long, until: Long, season: Int = 24,
-                       half: Int = 12, sigma: Double = 3.0): DataFrame = {
-    // r18 opt: the three moment scalars are whole-partition window
-    // aggregates over the decompose grid (single-partition) — the
-    // former 1-row aggregate + broadcast cross-join jobs are gone
-    val all = Window.rowsBetween(
+                       half: Int = 12, sigma: Double = 3.0): DataFrame =
+    anomalyStlOf(seriesSeasonalDecompose(spark, dir, metric, from, until,
+      season, half), Nil, sigma)
+
+  /** [[seriesAnomalyStl]] over every cataloged metric. */
+  def seriesAnomalyStlMulti(spark: SparkSession, dir: String,
+                            from: Long, until: Long, season: Int = 24,
+                            half: Int = 12, sigma: Double = 3.0): DataFrame =
+    anomalyStlOf(seriesSeasonalDecomposeMulti(spark, dir, from, until,
+      season, half), ByMetric, sigma)
+
+  private def anomalyStlOf(decomposed: DataFrame, by: Seq[String],
+                           sigma: Double): DataFrame = {
+    // the three moment scalars are whole-partition window aggregates
+    // over the decomposition: no separate rollup job and no broadcast
+    // join-back per query (Timeit: the multi face runs 5 jobs this way,
+    // 9 as a per-metric rollup + broadcast join)
+    val all = keyWindow(by).rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)
-    seriesSeasonalDecompose(spark, dir, metric, from, until,
-      season, half)
-      .select(col("ts"), col("value"), col("residual"))
+    decomposed
+      .select(keyed(by, col("ts"), col("value"), col("residual")): _*)
       .withColumn("rm",
         floor(col("residual") * lit(1e3) + lit(0.5)).cast("long"))
       .withColumn("n", count("rm").over(all))
@@ -2409,9 +1835,9 @@ object SeriesOps {
           (col("rm").cast("double") / lit(1e3) -
             col("s1").cast("double") / col("n").cast("double") / lit(1e3)) /
             col("sd"))))
-      .select(col("ts"), col("value"), col("residual"), col("z"),
-        when(col("z").isNotNull, abs(col("z")) > lit(sigma)).as("anomaly"))
-      .orderBy("ts")
+      .select(keyed(by, col("ts"), col("value"), col("residual"), col("z"),
+        when(col("z").isNotNull, abs(col("z")) > lit(sigma)).as("anomaly")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** Trailing-window Z-SCORE anomaly read: each slot scored against the
@@ -2429,9 +1855,20 @@ object SeriesOps {
     * — one window over the result-sized densified grid. */
   def seriesZscore(spark: SparkSession, dir: String, metric: String,
                    from: Long, until: Long, points: Int = 6,
-                   sigma: Double = 2.0): DataFrame = {
-    val w = Window.orderBy("ts").rowsBetween(-points, -1)
-    densifyGrid(spark, dir, metric, from, until)
+                   sigma: Double = 2.0): DataFrame =
+    zscoreOf(densifyGrid(spark, dir, metric, from, until), Nil,
+      points, sigma)
+
+  /** [[seriesZscore]] over every cataloged metric. */
+  def seriesZscoreMulti(spark: SparkSession, dir: String,
+                        from: Long, until: Long, points: Int = 6,
+                        sigma: Double = 2.0): DataFrame =
+    zscoreOf(denseGridAll(spark, dir, from, until), ByMetric, points, sigma)
+
+  private def zscoreOf(grid: DataFrame, by: Seq[String], points: Int,
+                       sigma: Double): DataFrame = {
+    val w = keyWindow(by).orderBy("ts").rowsBetween(-points, -1)
+    grid
       .withColumn("km", floor(col("value") * lit(1e3) + lit(0.5)).cast("long"))
       .withColumn("n", count("km").over(w))
       .withColumn("s1", sum("km").over(w))
@@ -2445,9 +1882,9 @@ object SeriesOps {
           (col("km").cast("double") / lit(1e3) -
             col("s1").cast("double") / col("n").cast("double") / lit(1e3)) /
             col("sd"))))
-      .select(col("ts"), col("value"), col("z"),
-        when(col("z").isNotNull, abs(col("z")) > lit(sigma)).as("anomaly"))
-      .orderBy("ts")
+      .select(keyed(by, col("ts"), col("value"), col("z"),
+        when(col("z").isNotNull, abs(col("z")) > lit(sigma)).as("anomaly")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** Linear gap INTERPOLATION over the densified grid (graphite
@@ -2464,14 +1901,23 @@ object SeriesOps {
     * grid is per-metric partitioned by the multi-metric variants'
     * contract. */
   def seriesInterpolate(spark: SparkSession, dir: String, metric: String,
-                        from: Long, until: Long): DataFrame = {
-    val wPrev = Window.orderBy("ts")
+                        from: Long, until: Long): DataFrame =
+    interpolateOf(densifyGrid(spark, dir, metric, from, until), Nil)
+
+  /** [[seriesInterpolate]] over every cataloged metric (a metric's
+    * leading/trailing gaps never see another metric's neighbors). */
+  def seriesInterpolateMulti(spark: SparkSession, dir: String,
+                             from: Long, until: Long): DataFrame =
+    interpolateOf(denseGridAll(spark, dir, from, until), ByMetric)
+
+  private def interpolateOf(grid: DataFrame, by: Seq[String]): DataFrame = {
+    val wPrev = keyWindow(by).orderBy("ts")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val wNext = Window.orderBy("ts")
+    val wNext = keyWindow(by).orderBy("ts")
       .rowsBetween(1, Window.unboundedFollowing)
     val obs = when(col("value").isNotNull,
       struct(col("ts").as("t"), col("value").as("v")))
-    densifyGrid(spark, dir, metric, from, until)
+    grid
       .withColumn("p", last(obs, ignoreNulls = true).over(wPrev))
       .withColumn("nx", first(obs, ignoreNulls = true).over(wNext))
       .withColumn("interp",
@@ -2479,9 +1925,9 @@ object SeriesOps {
           .otherwise(when(col("p").isNotNull && col("nx").isNotNull,
             col("p.v") + (col("nx.v") - col("p.v")) *
               ((col("ts") - col("p.t")) / (col("nx.t") - col("p.t"))))))
-      .select(col("ts"), col("value"), col("interp"),
-        (col("value").isNull && col("interp").isNotNull).as("filled"))
-      .orderBy("ts")
+      .select(keyed(by, col("ts"), col("value"), col("interp"),
+        (col("value").isNull && col("interp").isNotNull).as("filled")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** CUSUM mean-shift CHANGEPOINT detection: the cumulative sum of
@@ -2499,17 +1945,25 @@ object SeriesOps {
     * running-sum window over the result-sized grid, one O(1)-row argmax
     * broadcast back. */
   def seriesChangepoint(spark: SparkSession, dir: String, metric: String,
-                        from: Long, until: Long): DataFrame = {
+                        from: Long, until: Long): DataFrame =
+    changepointOf(densifyGrid(spark, dir, metric, from, until), Nil)
+
+  /** [[seriesChangepoint]] over every cataloged metric. */
+  def seriesChangepointMulti(spark: SparkSession, dir: String,
+                             from: Long, until: Long): DataFrame =
+    changepointOf(denseGridAll(spark, dir, from, until), ByMetric)
+
+  private def changepointOf(grid: DataFrame, by: Seq[String]): DataFrame = {
     // r18 opt (guide §2.4): total/count, the running CUSUM and the
-    // |S|-argmax are all windows over the single-partition grid — the
-    // former checkpoint + two 1-row aggregates + two broadcast
+    // |S|-argmax are all windows over the key's partition of the grid —
+    // the former checkpoint + two 1-row aggregates + two broadcast
     // cross-joins (the three-consumer DAG split) become one window
     // chain, zero extra exchanges, identical integers throughout.
-    val all = Window.rowsBetween(
+    val all = keyWindow(by).rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)
-    val wRun = Window.orderBy("ts")
+    val wRun = keyWindow(by).orderBy("ts")
       .rowsBetween(Window.unboundedPreceding, 0)
-    densifyGrid(spark, dir, metric, from, until)
+    grid
       .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
       .withColumn("total", sum("vm").over(all))
       .withColumn("n", count("vm").over(all))
@@ -2521,15 +1975,15 @@ object SeriesOps {
       .withColumn("pk",
         max(when(col("csm").isNotNull && col("n") >= 2,
           struct(abs(col("csm")).as("a"), (-col("ts")).as("nt")))).over(all))
-      .select(col("ts"), col("value"),
+      .select(keyed(by, col("ts"), col("value"),
         // floor-quantized display: csm/n is an integer ratio, exact
         // half-boundaries occur whenever n's reduced factor is 2
         (floor(when(col("n") >= 1,
           col("csm").cast("double") / col("n") / lit(1e6)) * lit(1e6)
           + lit(0.5)) / lit(1e6)).as("cusum"),
         when(col("csm").isNotNull && col("n") >= 2,
-          col("ts") === (-col("pk.nt"))).as("changepoint"))
-      .orderBy("ts")
+          col("ts") === (-col("pk.nt"))).as("changepoint")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** Sample AUTOCORRELATION function (ACF): per lag k in [1, maxLag],
@@ -2546,19 +2000,32 @@ object SeriesOps {
     * combinable on the lag key. */
   def seriesAutocorrelation(spark: SparkSession, dir: String,
                             metric: String, from: Long, until: Long,
-                            maxLag: Int = 48): DataFrame = {
+                            maxLag: Int = 48): DataFrame =
+    autocorrelationOf(densifyGrid(spark, dir, metric, from, until), Nil,
+      maxLag)
+
+  /** [[seriesAutocorrelation]] over every cataloged metric: the moment
+    * rollup keyed (metric, lag), still window-free. */
+  def seriesAutocorrelationMulti(spark: SparkSession, dir: String,
+                                 from: Long, until: Long,
+                                 maxLag: Int = 48): DataFrame =
+    autocorrelationOf(denseGridAll(spark, dir, from, until), ByMetric,
+      maxLag)
+
+  private def autocorrelationOf(densified: DataFrame, by: Seq[String],
+                                maxLag: Int): DataFrame = {
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
-    val grid = densifyGrid(spark, dir, metric, from, until)
+    val grid = densified
       .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast(dec))
       .where(col("vm").isNotNull)
-    val lags = spark.range(1, maxLag + 1).toDF("lag")
-    val pairs = grid.select(col("ts"), col("vm").as("am"))
+    val lags = densified.sparkSession.range(1, maxLag + 1).toDF("lag")
+    val pairs = grid.select(keyed(by, col("ts"), col("vm").as("am")): _*)
       .crossJoin(broadcast(lags))
       .withColumn("ts_prev", col("ts") - lit(Step) * col("lag"))
-      .join(grid.select(col("ts").as("ts_prev"), col("vm").as("bm")),
-        Seq("ts_prev"))
+      .join(grid.select(keyed(by, col("ts").as("ts_prev"),
+        col("vm").as("bm")): _*), by :+ "ts_prev")
     pairs
-      .groupBy(col("lag"))
+      .groupBy(keyed(by, col("lag")): _*)
       .agg(count(lit(1)).cast(dec).as("n"),
         sum("am").as("sa"), sum("bm").as("sb"),
         sum(col("am") * col("bm")).as("sab"),
@@ -2568,11 +2035,11 @@ object SeriesOps {
         (col("n") * col("saa") - col("sa") * col("sa")).cast("double"))
       .withColumn("d2",
         (col("n") * col("sbb") - col("sb") * col("sb")).cast("double"))
-      .select(col("lag"), col("n").cast("long").as("n_pairs"),
+      .select(keyed(by, col("lag"), col("n").cast("long").as("n_pairs"),
         when(col("d1") > 0 && col("d2") > 0, q6(
           (col("n") * col("sab") - col("sa") * col("sb")).cast("double")
-            / sqrt(col("d1") * col("d2")))).as("r"))
-      .orderBy("lag")
+            / sqrt(col("d1") * col("d2")))).as("r")): _*)
+      .orderBy(keyed(by, col("lag")): _*)
   }
 
   /** THEIL–SEN robust trend estimate: the median of all pairwise slopes
@@ -2589,9 +2056,9 @@ object SeriesOps {
   def seriesTheilSen(spark: SparkSession, dir: String, metric: String,
                      from: Long, until: Long): DataFrame = {
     val f = Kernel.align(from, Step)
-    // lazy localCheckpoint (r18 opt): the window-sized grid feeds three
-    // subtrees (both pair sides + the point count) — materialize once
-    // inside the first consuming job instead of re-running the read per
+    // localCheckpoint (r18 opt; eager — it runs its own job): the
+    // window-sized grid feeds three subtrees (both pair sides + the point
+    // count) — materialize once instead of re-running the read per
     // consumer
     val g = densifyGrid(spark, dir, metric, from, until)
       .where(col("value").isNotNull)
@@ -2629,6 +2096,54 @@ object SeriesOps {
         // half-boundaries, and dx=2 slope pairs produce exact halves)
         (floor(col("slope") * lit(1e6) + lit(0.5)) / lit(1e6))
           .as("slope_per_slot"))
+  }
+
+  /** [[seriesTheilSen]] over EVERY cataloged metric — the robust-trend
+    * pairwise-slope median with the pair join keyed on metric (each
+    * metric's O(w²) pairs build where its slots live), the slope-rank
+    * window partitioned by metric, and the O(#metrics) count relations
+    * broadcast-joined back. One summary row per metric. A separate
+    * body, not a keyed one: the single face's non-equi self-join needs
+    * its broadcast hint (CartesianRailSpec), this one is a metric
+    * equi-join. */
+  def seriesTheilSenMulti(spark: SparkSession, dir: String,
+                          from: Long, until: Long): DataFrame = {
+    val f = Kernel.align(from, Step)
+    // localCheckpoint (eager: one extra job) — three consumers, one
+    // materialization (the single face's argument, metric-keyed)
+    val g = denseGridAll(spark, dir, from, until)
+      .where(col("value").isNotNull)
+      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
+      .withColumn("x", expr(s"(ts - $f) div $Step"))
+      .select("metric", "x", "vm")
+      .localCheckpoint()
+    val sl = g.select(col("metric"), col("x").as("xa"), col("vm").as("va"))
+      .join(g.select(col("metric"), col("x").as("xb"), col("vm").as("vb")),
+        Seq("metric"))
+      .where(col("xa") < col("xb"))
+      .select(col("metric"), ((col("vb") - col("va")).cast("double") /
+        (col("xb") - col("xa")).cast("double") / lit(1e6)).as("slope"))
+    // r18 opt: per-metric pair count as a window over the rank's own
+    // partitioning instead of a rollup + broadcast join-back
+    val med = sl
+      .withColumn("r", row_number().over(
+        Window.partitionBy("metric").orderBy("slope")).cast("long"))
+      .withColumn("m", count(lit(1)).over(Window.partitionBy("metric")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .groupBy("metric")
+      .agg((sum(
+        when(col("m") % 2 === 1,
+          when(col("r") === expr("(m + 1) div 2"), col("slope") * 2))
+          .otherwise(when(col("r") === expr("m div 2") ||
+            col("r") === expr("m div 2 + 1"), col("slope")))) / lit(2.0))
+        .as("slope"),
+        max("m").as("n_pairs"))
+    val np = g.groupBy("metric").agg(count(lit(1)).as("n_points"))
+    med.join(broadcast(np), Seq("metric"))
+      .select(col("metric"), col("n_points"), col("n_pairs"),
+        (floor(col("slope") * lit(1e6) + lit(0.5)) / lit(1e6))
+          .as("slope_per_slot"))
+      .orderBy("metric")
   }
 
   /** Robust OUTLIER flagging via the modified z-score (Iglewicz–Hoaglin
@@ -2687,6 +2202,56 @@ object SeriesOps {
       .orderBy("ts")
   }
 
+  /** [[seriesOutlierMad]] over EVERY cataloged metric — the modified
+    * z-score gate with BOTH median passes run as per-metric rank
+    * windows and the medians/counts joined back as O(#metrics)
+    * broadcast relations (the single face's 1-row cross joins,
+    * metric-keyed): exact doubled-integer median/MAD order statistics,
+    * one closing double expression per slot. A separate body, not a
+    * keyed one: this face drops all-gap metrics (`npres > 0`), the
+    * single face keeps an all-gap window's rows. */
+  def seriesOutlierMadMulti(spark: SparkSession, dir: String,
+                            from: Long, until: Long,
+                            cutoff: Double = 3.5): DataFrame = {
+    // r18 opt: the single face's window-pick medians, partitioned by
+    // metric — one exchange establishes hash(metric) and every rank /
+    // whole-frame pick chains on it; the former checkpoint + two
+    // (rank + count-broadcast + rollup + join-back) median round-trips
+    // are gone. An all-gap metric keeps n = 0 and is dropped by the
+    // closing filter — exactly the rows the former INNER med join
+    // dropped.
+    val all = Window.partitionBy("metric")
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    def med2Col(df: DataFrame, c: String, out: String): DataFrame =
+      df.withColumn("r", row_number().over(Window.partitionBy("metric")
+          .orderBy(col(c).asc_nulls_last, col("ts"))))
+        .withColumn("n", count(col(c)).over(all))
+        .withColumn(out,
+          when(col("n") % 2 === 1,
+            max(when(col("r") === (col("n") + 1) / 2, col(c))).over(all) * 2)
+            .otherwise(
+              max(when(col("r") === col("n") / 2, col(c))).over(all) +
+              max(when(col("r") === col("n") / 2 + 1, col(c))).over(all)))
+        .drop("r")
+    val devs = med2Col(
+        denseGridAll(spark, dir, from, until)
+          .withColumn("vm",
+            floor(col("value") * lit(1e6) + lit(0.5)).cast("long")),
+        "vm", "med2")
+      .withColumn("npres", col("n"))
+      .withColumn("dev",
+        when(col("vm").isNotNull, abs(col("vm") * 2 - col("med2"))))
+    med2Col(devs.drop("n"), "dev", "mad4")
+      .where(col("npres") > 0)
+      .withColumn("z",
+        when(col("vm").isNotNull && col("mad4") > 0, q6(
+          lit(0.6745) * 2 * (col("vm") * 2 - col("med2")).cast("double") /
+            col("mad4"))))
+      .select(col("metric"), col("ts"), col("value"), col("z"),
+        when(col("z").isNotNull, abs(col("z")) > lit(cutoff)).as("outlier"))
+      .orderBy("metric", "ts")
+  }
+
   // ————————————— graphite functions, round-12 wave —————————————
 
   /** `movingSum` / `movingMin` / `movingMax` (graphite-web
@@ -2698,16 +2263,26 @@ object SeriesOps {
     * O(output) window over the densified grid, partitioned per metric in
     * the multi-metric composition. */
   def seriesMovingSum(spark: SparkSession, dir: String, metric: String,
-                      from: Long, until: Long, window: Int = 6): DataFrame = {
-    val w = Window.orderBy("ts").rowsBetween(-(window - 1), 0)
-    densifyGrid(spark, dir, metric, from, until)
+                      from: Long, until: Long, window: Int = 6): DataFrame =
+    movingSumOf(densifyGrid(spark, dir, metric, from, until), Nil, window)
+
+  /** [[seriesMovingSum]] over every cataloged metric. */
+  def seriesMovingSumMulti(spark: SparkSession, dir: String,
+                           from: Long, until: Long,
+                           window: Int = 6): DataFrame =
+    movingSumOf(denseGridAll(spark, dir, from, until), ByMetric, window)
+
+  private def movingSumOf(grid: DataFrame, by: Seq[String],
+                          window: Int): DataFrame = {
+    val w = keyWindow(by).orderBy("ts").rowsBetween(-(window - 1), 0)
+    grid
       .withColumn("vm",
         floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
-      .select(col("ts"), col("value"),
+      .select(keyed(by, col("ts"), col("value"),
         q6(sum("vm").over(w) / lit(1e6)).as("msum"),
         min("value").over(w).as("mmin"),
-        max("value").over(w).as("mmax"))
-      .orderBy("ts")
+        max("value").over(w).as("mmax")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `logarithm(series, base=10)` (graphite-web): pointwise log, null
@@ -2744,17 +2319,25 @@ object SeriesOps {
     * the normalization is one fixed IEEE sequence on identical doubles
     * in both engines. */
   def seriesMinMax(spark: SparkSession, dir: String, metric: String,
-                   from: Long, until: Long): DataFrame = {
-    val w = Window.partitionBy()
-    densifyGrid(spark, dir, metric, from, until)
+                   from: Long, until: Long): DataFrame =
+    minMaxOf(densifyGrid(spark, dir, metric, from, until), Nil)
+
+  /** [[seriesMinMax]] over every cataloged metric. */
+  def seriesMinMaxMulti(spark: SparkSession, dir: String,
+                        from: Long, until: Long): DataFrame =
+    minMaxOf(denseGridAll(spark, dir, from, until), ByMetric)
+
+  private def minMaxOf(grid: DataFrame, by: Seq[String]): DataFrame = {
+    val w = keyWindow(by)
+    grid
       .withColumn("mn", min("value").over(w))
       .withColumn("mx", max("value").over(w))
-      .select(col("ts"), col("value"),
+      .select(keyed(by, col("ts"), col("value"),
         when(col("value").isNotNull,
           when(col("mx") > col("mn"),
             q6((col("value") - col("mn")) / (col("mx") - col("mn"))))
-            .otherwise(lit(0.0))).as("norm"))
-      .orderBy("ts")
+            .otherwise(lit(0.0))).as("norm")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** The window's interpolated `p`-quantile of one series' non-gap
@@ -2862,14 +2445,22 @@ object SeriesOps {
     * from the previous slot's, else 0 — gaps and series starts emit 0
     * (graphite's None handling). One lag window over the dense grid. */
   def seriesChanged(spark: SparkSession, dir: String, metric: String,
-                    from: Long, until: Long): DataFrame = {
-    val w = Window.orderBy("ts")
-    densifyGrid(spark, dir, metric, from, until)
+                    from: Long, until: Long): DataFrame =
+    changedOf(densifyGrid(spark, dir, metric, from, until), Nil)
+
+  /** [[seriesChanged]] over every cataloged metric. */
+  def seriesChangedMulti(spark: SparkSession, dir: String,
+                         from: Long, until: Long): DataFrame =
+    changedOf(denseGridAll(spark, dir, from, until), ByMetric)
+
+  private def changedOf(grid: DataFrame, by: Seq[String]): DataFrame = {
+    val w = keyWindow(by).orderBy("ts")
+    grid
       .withColumn("prev", lag("value", 1).over(w))
-      .select(col("ts"), col("value"),
+      .select(keyed(by, col("ts"), col("value"),
         when(col("value").isNotNull && col("prev").isNotNull &&
-          col("value") =!= col("prev"), 1L).otherwise(0L).as("changed"))
-      .orderBy("ts")
+          col("value") =!= col("prev"), 1L).otherwise(0L).as("changed")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `multiplySeries(a, b)` (graphite-web): the slot-wise product of two
@@ -2932,13 +2523,24 @@ object SeriesOps {
     * sibling transforms. */
   def seriesMovingMinmax(spark: SparkSession, dir: String, metric: String,
                          from: Long, until: Long,
-                         points: Int = 6): DataFrame = {
-    val w = Window.orderBy("ts").rowsBetween(-(points - 1), 0)
-    densifyGrid(spark, dir, metric, from, until)
+                         points: Int = 6): DataFrame =
+    movingMinmaxOf(densifyGrid(spark, dir, metric, from, until), Nil, points)
+
+  /** [[seriesMovingMinmax]] over every cataloged metric. */
+  def seriesMovingMinmaxMulti(spark: SparkSession, dir: String,
+                              from: Long, until: Long,
+                              points: Int = 6): DataFrame =
+    movingMinmaxOf(denseGridAll(spark, dir, from, until), ByMetric, points)
+
+  private def movingMinmaxOf(grid: DataFrame, by: Seq[String],
+                             points: Int): DataFrame = {
+    val w = keyWindow(by).orderBy("ts").rowsBetween(-(points - 1), 0)
+    grid
       .withColumn("mv_min", min("value").over(w))
       .withColumn("mv_max", max("value").over(w))
-      .select("ts", "value", "mv_min", "mv_max")
-      .orderBy("ts")
+      .select(keyed(by, col("ts"), col("value"), col("mv_min"),
+        col("mv_max")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `diffSeries(a, b)` analog (graphite-web): A − B per grid slot, null
@@ -3166,19 +2768,29 @@ object SeriesOps {
     * [[seriesDerivative]] contract). */
   def seriesPerSecond(spark: SparkSession, dir: String, metric: String,
                       from: Long, until: Long,
-                      maxValue: Double = 1000.0): DataFrame = {
-    val w = Window.orderBy("ts")
-    densifyGrid(spark, dir, metric, from, until)
+                      maxValue: Double = 1000.0): DataFrame =
+    perSecondOf(densifyGrid(spark, dir, metric, from, until), Nil, maxValue)
+
+  /** [[seriesPerSecond]] over every cataloged metric. */
+  def seriesPerSecondMulti(spark: SparkSession, dir: String,
+                           from: Long, until: Long,
+                           maxValue: Double = 1000.0): DataFrame =
+    perSecondOf(denseGridAll(spark, dir, from, until), ByMetric, maxValue)
+
+  private def perSecondOf(grid: DataFrame, by: Seq[String],
+                          maxValue: Double): DataFrame = {
+    val w = keyWindow(by).orderBy("ts")
+    grid
       .withColumn("prev", lag("value", 1).over(w))
-      .select(col("ts"), col("value"),
+      .select(keyed(by, col("ts"), col("value"),
         when(col("value") > lit(maxValue), lit(null).cast("double"))
         .when(col("value") - col("prev") >= 0,
           (col("value") - col("prev")) / lit(Step.toDouble))
         .when(lit(maxValue) >= col("prev"),
           (lit(maxValue) - col("prev") + col("value") + lit(1.0))
             / lit(Step.toDouble))
-        .as("rate_per_s"))
-      .orderBy("ts")
+        .as("rate_per_s")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `nonNegativeDerivative(series)` (graphite-web, default
@@ -3212,13 +2824,21 @@ object SeriesOps {
     * copied, never computed — deterministic in any engine. Scale:
     * O(output) window over the result-sized densified grid. */
   def seriesDelay(spark: SparkSession, dir: String, metric: String,
-                  from: Long, until: Long, steps: Int = 3): DataFrame = {
-    val w = Window.orderBy("ts")
-    densifyGrid(spark, dir, metric, from, until)
-      .select(col("ts"), col("value"),
-        lag("value", steps).over(w).as("delayed"))
-      .orderBy("ts")
-  }
+                  from: Long, until: Long, steps: Int = 3): DataFrame =
+    delayOf(densifyGrid(spark, dir, metric, from, until), Nil, steps)
+
+  /** [[seriesDelay]] over every cataloged metric. */
+  def seriesDelayMulti(spark: SparkSession, dir: String,
+                       from: Long, until: Long, steps: Int = 3): DataFrame =
+    delayOf(denseGridAll(spark, dir, from, until), ByMetric, steps)
+
+  private def delayOf(grid: DataFrame, by: Seq[String],
+                      steps: Int): DataFrame =
+    grid
+      .select(keyed(by, col("ts"), col("value"),
+        lag("value", steps).over(keyWindow(by).orderBy("ts"))
+          .as("delayed")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
 
   /** `offsetToZero(series)` (graphite-web): subtract the in-window
     * minimum from every point, so the series baseline sits at zero —
@@ -3231,13 +2851,21 @@ object SeriesOps {
     * contract) — Spark evaluates it as one pass, never a per-row
     * rescan; no second read of the store. */
   def seriesOffsetToZero(spark: SparkSession, dir: String, metric: String,
-                         from: Long, until: Long): DataFrame = {
-    val w = Window.rowsBetween(
+                         from: Long, until: Long): DataFrame =
+    offsetToZeroOf(densifyGrid(spark, dir, metric, from, until), Nil)
+
+  /** [[seriesOffsetToZero]] over every cataloged metric. */
+  def seriesOffsetToZeroMulti(spark: SparkSession, dir: String,
+                              from: Long, until: Long): DataFrame =
+    offsetToZeroOf(denseGridAll(spark, dir, from, until), ByMetric)
+
+  private def offsetToZeroOf(grid: DataFrame, by: Seq[String]): DataFrame = {
+    val w = keyWindow(by).rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)
-    densifyGrid(spark, dir, metric, from, until)
-      .select(col("ts"), col("value"),
-        (col("value") - min("value").over(w)).as("zeroed"))
-      .orderBy("ts")
+    grid
+      .select(keyed(by, col("ts"), col("value"),
+        (col("value") - min("value").over(w)).as("zeroed")): _*)
+      .orderBy(keyed(by, col("ts")): _*)
   }
 
   /** `sortByTotal(seriesList)` (graphite-web): every metric ranked by

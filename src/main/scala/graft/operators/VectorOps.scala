@@ -1199,10 +1199,11 @@ object VectorOps {
     // nprobe) once, and take each point's top-k as a TakeOrdered over
     // the shared scored table filtered to its prefix. The scored table
     // (candidate-bounded, the same rows every branch re-scored before)
-    // and the O(k) exact baseline are lazily localCheckpointed — one
-    // materialization each, 4 consumers. Per-point candidates, sims,
-    // top-k ordering (sim desc, vec_id) and hit counts are
-    // bit-identical to the per-subtree form.
+    // and the O(k) exact baseline are plain subplans: the union
+    // branches share their exchanges through exchange reuse, and the
+    // broadcast hints stay visible to the plan rails. Per-point
+    // candidates, sims, top-k ordering (sim desc, vec_id) and hit counts
+    // are bit-identical to the per-subtree form.
     val e = emb(spark, dir)
     val nCentroids = 16
     val cents = ivfSeedCentroids(spark, dir, nCentroids)
@@ -1221,9 +1222,7 @@ object VectorOps {
       .crossJoin(broadcast(qv))
       .withColumn("sim", cosine(col("vecd"), col("qv")))
       .select("vec_id", "crank", "sim")
-      .localCheckpoint()
     val exact = cosineTopk(spark, dir, queryId, k).select("vec_id")
-      .localCheckpoint()
     nprobes.map { np =>
       scored.where(col("crank") <= np)
         .orderBy(desc("sim"), col("vec_id"))
@@ -1247,9 +1246,10 @@ object VectorOps {
     * joins and rollup are metadata-sized no matter the corpus. */
   def annRecall(spark: SparkSession, dir: String, queryId: Long = 0,
                 k: Int = 10): DataFrame = {
-    // r19: the exact baseline is consumed once per method — lazily
-    // checkpoint its O(k) rows so the corpus scan + TakeOrdered behind
-    // it runs once, not once per overlap branch (guide §2.4)
+    // r19: the exact baseline is consumed once per method — checkpoint
+    // its O(k) rows (eagerly: one job, here) so the corpus scan +
+    // TakeOrdered behind it runs once, not once per overlap branch
+    // (guide §2.4)
     val exact = cosineTopk(spark, dir, queryId, k).select("vec_id")
       .localCheckpoint()
     def overlap(method: String, approx: DataFrame): DataFrame =
@@ -1569,9 +1569,10 @@ object VectorOps {
   def annPqRecallTrained(spark: SparkSession, dir: String,
                          queryId: Long = 0, k: Int = 10, m: Int = 32,
                          ksub: Int = 16): DataFrame = {
-    // r19: O(k)-row lazy checkpoint — one exact-baseline pass for both
-    // codebook variants instead of one per union branch (guide §2.4)
-    val exact = pqExactTopk(spark, dir, queryId, k).localCheckpoint()
+    // one exact-baseline subplan for both codebook variants: the union
+    // branches share its exchanges through exchange reuse, and its
+    // broadcast hint stays visible to the plan rails
+    val exact = pqExactTopk(spark, dir, queryId, k)
     pqOverlap("pq_seed", annPqTopk(spark, dir, queryId, k, m, ksub),
         exact, k)
       .unionAll(pqOverlap("pq_trained",

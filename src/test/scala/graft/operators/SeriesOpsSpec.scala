@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.core.Kernel
@@ -1518,32 +1519,82 @@ class SeriesOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("keepLast/integral/ewma multi faces equal their single-metric runs") {
-    def cells(rows: Array[org.apache.spark.sql.Row], from: Int) =
-      rows.map(r => (from until r.length).map(j =>
-        if (r.isNullAt(j)) None else Some(r.get(j))))
-    val cases: Seq[(Array[org.apache.spark.sql.Row],
-                    String => Array[org.apache.spark.sql.Row])] = Seq(
-      (SeriesOps.seriesKeepLastMulti(spark, Sf0001,
-         SeriesOps.From, SeriesOps.Until, 3).collect(),
-       m => SeriesOps.seriesKeepLast(spark, Sf0001, m,
-         SeriesOps.From, SeriesOps.Until, 3).collect()),
-      (SeriesOps.seriesIntegralMulti(spark, Sf0001,
-         SeriesOps.From, SeriesOps.Until).collect(),
-       m => SeriesOps.seriesIntegral(spark, Sf0001, m,
-         SeriesOps.From, SeriesOps.Until).collect()),
-      (SeriesOps.seriesEwmaMulti(spark, Sf0001,
-         SeriesOps.From, SeriesOps.Until, 16).collect(),
-       m => SeriesOps.seriesEwma(spark, Sf0001, m,
-         SeriesOps.From, SeriesOps.Until, 16).collect()))
-    cases.foreach { case (multi, single) =>
-      val byMetric = multi.groupBy(_.getString(0))
-      assert(byMetric.keySet.size === 5)
+  test("every multi face equals its single-metric face on each fixture metric") {
+    // the twin-equivalence rail: each single face must return exactly
+    // the multi face's rows for that metric, minus the metric column —
+    // keyed transforms and the pairs kept as two bodies alike
+    import SeriesOps._
+    val (s, d, f, u) = (spark, Sf0001, From, Until)
+    val pairs: Seq[(String, DataFrame, String => DataFrame)] = Seq(
+      ("derivative", seriesDerivativeMulti(s, d, f, u),
+        m => seriesDerivative(s, d, m, f, u)),
+      ("moving_avg", seriesMovingAvgMulti(s, d, f, u),
+        m => seriesMovingAvg(s, d, m, f, u)),
+      ("zscore", seriesZscoreMulti(s, d, f, u),
+        m => seriesZscore(s, d, m, f, u)),
+      ("keep_last", seriesKeepLastMulti(s, d, f, u),
+        m => seriesKeepLast(s, d, m, f, u)),
+      ("integral", seriesIntegralMulti(s, d, f, u),
+        m => seriesIntegral(s, d, m, f, u)),
+      ("ewma", seriesEwmaMulti(s, d, f, u),
+        m => seriesEwma(s, d, m, f, u)),
+      ("stdev", seriesStdevMulti(s, d, f, u),
+        m => seriesMovingStdev(s, d, m, f, u)),
+      ("moving_median", seriesMovingMedianMulti(s, d, f, u),
+        m => seriesMovingMedian(s, d, m, f, u)),
+      ("interpolate", seriesInterpolateMulti(s, d, f, u),
+        m => seriesInterpolate(s, d, m, f, u)),
+      ("summarize", seriesSummarizeMulti(s, d, f, u),
+        m => seriesSummarize(s, d, m, f, u)),
+      ("moving_sum", seriesMovingSumMulti(s, d, f, u),
+        m => seriesMovingSum(s, d, m, f, u)),
+      ("moving_minmax", seriesMovingMinmaxMulti(s, d, f, u),
+        m => seriesMovingMinmax(s, d, m, f, u)),
+      ("per_second", seriesPerSecondMulti(s, d, f, u),
+        m => seriesPerSecond(s, d, m, f, u)),
+      ("delay", seriesDelayMulti(s, d, f, u),
+        m => seriesDelay(s, d, m, f, u)),
+      ("changed", seriesChangedMulti(s, d, f, u),
+        m => seriesChanged(s, d, m, f, u)),
+      ("offset_to_zero", seriesOffsetToZeroMulti(s, d, f, u),
+        m => seriesOffsetToZero(s, d, m, f, u)),
+      ("min_max", seriesMinMaxMulti(s, d, f, u),
+        m => seriesMinMax(s, d, m, f, u)),
+      ("hitcount", seriesHitcountMulti(s, d, f, u),
+        m => seriesHitcount(s, d, m, f, u)),
+      ("outlier_mad", seriesOutlierMadMulti(s, d, f, u),
+        m => seriesOutlierMad(s, d, m, f, u)),
+      ("bands", seriesBandsMulti(s, d, f, u),
+        m => seriesBands(s, d, m, f, u)),
+      ("changepoint", seriesChangepointMulti(s, d, f, u),
+        m => seriesChangepoint(s, d, m, f, u)),
+      ("autocorrelation", seriesAutocorrelationMulti(s, d, f, u),
+        m => seriesAutocorrelation(s, d, m, f, u)),
+      ("theil_sen", seriesTheilSenMulti(s, d, f, u),
+        m => seriesTheilSen(s, d, m, f, u)),
+      ("holt_winters_bands", seriesHoltWintersBandsMulti(s, d, f, u),
+        m => seriesHoltWintersBands(s, d, m, f, u)),
+      ("seasonal_decompose", seriesSeasonalDecomposeMulti(s, d, f, u),
+        m => seriesSeasonalDecompose(s, d, m, f, u)),
+      ("anomaly_stl", seriesAnomalyStlMulti(s, d, f, u),
+        m => seriesAnomalyStl(s, d, m, f, u)),
+      ("stl_strength", seriesStlStrengthMulti(s, d, f, u),
+        m => seriesStlStrength(s, d, m, f, u)),
+      ("integral_by_interval", seriesIntegralByIntervalMulti(s, d, f, u),
+        m => seriesIntegralByInterval(s, d, m, f, u, 14400)),
+      ("holt_winters", seriesHoltWintersMulti(s, d, f, u),
+        m => seriesHoltWinters(s, d, m, f, u)))
+    assert(pairs.length === 29)
+    pairs.foreach { case (name, multi, single) =>
+      val mi = multi.columns.indexOf("metric")
+      val byMetric = multi.collect().toSeq.groupBy(_.getString(mi))
+      assert(byMetric.keySet.size === 5, name)
       byMetric.foreach { case (metric, rows) =>
-        val want = cells(single(metric), 1)
-        val got = cells(rows.sortBy(_.getLong(1)), 2)
-        assert(got.length === want.length, s"rows for $metric")
-        assert(got.toSeq === want.toSeq, s"cells for $metric")
+        val want = single(metric).drop("metric")
+        assert(multi.columns.toSeq.patch(mi, Nil, 1) === want.columns.toSeq,
+          s"$name columns")
+        val got = rows.map(r => Row.fromSeq(r.toSeq.patch(mi, Nil, 1)))
+        assert(got === want.collect().toSeq, s"$name rows for $metric")
       }
     }
   }
