@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core
 import graft.core.{Catalog, Kernel}
@@ -25,17 +25,24 @@ import graft.streaming.{Ingest, Maintenance}
   * (reference NoData → None-padding, ≈L530).
   *
   * Read cost: every request (`fetch`, `fetchSparse`, `aggregate`,
-  * `fetchPattern`, `find`, `hasNode`) makes ONE metadata lookup
-  * ([[core.MetaStore.lookup]]: the existence check, the glob's match list
-  * and the reconcile's metadata, as a metadata-sized local relation —
-  * nothing is cached across requests, so a `createNode`/`deleteNode` is
-  * visible to the next read) and, on a store-backed engine, ONE
-  * partition-pruned store scan of the matched metrics' buckets × the
-  * step-aligned window's dates ([[Maintenance.prunedReadMetrics]]),
-  * read with a declared schema. A one-metric read then runs in a single
-  * partition from scan to result; a multi-metric read pays one
-  * hash(metric) exchange. The harness-catalog engine reads
-  * `Catalog.pointsCached` instead.
+  * `fetchPattern`, `find`, `hasNode`) takes its node metadata — the
+  * existence check, the glob's match list and each metric's aggregation
+  * method — from the resolved node table the engine HOLDS on the driver
+  * ([[core.MetaStore.NodeTable]], ceres' node cache): one listing of the
+  * metadata directory per request, and one re-resolving job only when the
+  * listing changed, so a `createNode`/`deleteNode` by any writer is
+  * visible to the next read. The held table costs O(#nodes) driver
+  * memory. `find` and `hasNode` run no Spark job. On a store-backed
+  * engine a point read then runs ONE partition-pruned store scan of the
+  * matched metrics' buckets × the step-aligned window's dates
+  * ([[Maintenance.prunedReadMetrics]]), read with a declared schema, and
+  * hands the reconcile and grid their methods, anchor and grid bounds as
+  * lookups into one per-request metric-keyed map literal
+  * ([[SeriesOps.ReadInputs.mapped]]): no metadata broadcast, and a new
+  * window recompiles only the scan stage's code. A one-metric read runs
+  * in a single partition from scan to result (one job); a multi-metric
+  * read pays one hash(metric) exchange. The harness-catalog engine reads
+  * `Catalog.pointsCached` and its inline catalog instead.
   */
 final class Engine(val spark: SparkSession, val dir: String,
                    val metaDir: Option[String] = None,
@@ -74,18 +81,33 @@ final class Engine(val spark: SparkSession, val dir: String,
         else scan.repartition(col("metric")))
     }
 
-  /** The resolved metadata of the nodes matching `pred` (a predicate on
-    * `metric`), sorted by metric, as a local relation: one lookup job on
-    * a MetaStore-backed engine, none on the harness's inline catalog. */
-  private def metaWhere(pred: Column): DataFrame =
-    metaDir match {
-      case Some(d) => core.MetaStore.lookup(spark, d, pred)
-      case None => core.MetaStore.local(spark,
-        Catalog.metricsMeta(spark).where(pred).collect().toSeq)
-    }
+  /** The node table held across requests (MetaStore-backed engines). */
+  private val nodeTable = metaDir.map(new core.MetaStore.NodeTable(spark, _))
 
-  private def metricsIn(matched: DataFrame): Seq[String] =
-    matched.select("metric").collect().map(_.getString(0)).toSeq
+  /** Every live node's resolved metadata: the held table, or the
+    * harness's inline catalog (a local relation, no job). */
+  private def nodes: core.MetaStore.Nodes =
+    nodeTable.fold(new core.MetaStore.Nodes(
+      Catalog.metricsMeta(spark).collect().toSeq))(_.nodes)
+
+  /** The nodes whose metric matches the glob, sorted by metric: matched
+    * on the driver as `rlike` would (a regex find), no Spark job. */
+  private def globMatches(ns: core.MetaStore.Nodes,
+                          pattern: String): Seq[Row] = {
+    val rx = java.util.regex.Pattern.compile(Kernel.globToRegex(pattern))
+      .asPredicate
+    ns.rows.filter(r => rx.test(r.getString(0)))
+  }
+
+  /** The read cores' inputs for `metrics`, each metric's method taken
+    * from `ns`: a metric with points but no live node (deleted, or
+    * written without `createNode`) maps to a null method, which the
+    * reconcile reads as the reference default 'average', as the
+    * whole-store path's left join does. */
+  private def inputs(ns: core.MetaStore.Nodes, metrics: Seq[String],
+                     from: Long, until: Long): SeriesOps.ReadInputs =
+    SeriesOps.ReadInputs.mapped(metrics.map(m => m -> ns.byMetric.get(m)
+      .map(_.getAs[String]("aggregationMethod")).orNull), from, until)
 
   /** The live node-metadata table: a mutable MetaStore when `metaDir` is
     * given (CeresTree.createNode-capable), else the harness's inline
@@ -129,41 +151,45 @@ final class Engine(val spark: SparkSession, val dir: String,
     * the matches' buckets but reads every date). */
   def find(pattern: String, from: Option[Long] = None,
            until: Option[Long] = None): DataFrame = {
-    val matched = metaWhere(col("metric").rlike(Kernel.globToRegex(pattern)))
+    val matched = globMatches(nodes, pattern)
+    val local = core.MetaStore.local(spark, matched)
     (from, until) match {
-      case (None, None) => matched.select("metric")
-      case _ => SeriesOps.findIntervalFrom(pointsOf(metricsIn(matched), None),
-        matched, pattern, from.getOrElse(Long.MinValue),
-        until.getOrElse(Long.MaxValue))
+      case (None, None) => local.select("metric")
+      case _ => SeriesOps.findIntervalFrom(
+        pointsOf(matched.map(_.getString(0)), None), local, pattern,
+        from.getOrElse(Long.MinValue), until.getOrElse(Long.MaxValue))
     }
   }
 
   /** CeresTree.hasNode. */
-  def hasNode(metric: String): Boolean =
-    !metaWhere(col("metric") === metric).isEmpty
+  def hasNode(metric: String): Boolean = nodes.byMetric.contains(metric)
 
   /** CeresTree.fetch → CeresNode.read: the dense grid over the
     * reference-aligned window. Raises NodeNotFound for an unknown metric
     * (reference CeresTree.store/fetch contract ≈L245–270) before any
     * store read. */
   def fetch(metric: String, from: Long, until: Long): DataFrame = {
-    val m = metaWhere(col("metric") === metric)
-    if (m.isEmpty) throw new NoSuchElementException(s"NodeNotFound: $metric")
-    SeriesOps.densifyGridFrom(pointsOf(Seq(metric), Some((from, until))), m,
-      metric, from, until)
+    val ns = nodes
+    if (!ns.byMetric.contains(metric))
+      throw new NoSuchElementException(s"NodeNotFound: $metric")
+    SeriesOps.densifyGridFrom(pointsOf(Seq(metric), Some((from, until))),
+      inputs(ns, Seq(metric), from, until), metric)
   }
 
   /** Sparse read (no grid padding) — CeresNode.read before shaping. */
   def fetchSparse(metric: String, from: Long, until: Long): DataFrame =
     SeriesOps.fetchRangeFrom(pointsOf(Seq(metric), Some((from, until))),
-      metaWhere(col("metric") === metric), metric, from, until)
+      inputs(nodes, Seq(metric), from, until), metric)
 
   /** Pattern read — every glob match densified onto its own grid in one
     * (metric, ts, value) frame (the graphite-web render path). */
   def fetchPattern(pattern: String, from: Long, until: Long): DataFrame = {
-    val matched = metaWhere(col("metric").rlike(Kernel.globToRegex(pattern)))
-    SeriesOps.fetchPatternFrom(pointsOf(metricsIn(matched), Some((from, until))),
-      matched, pattern, from, until)
+    val ns = nodes
+    val matched = globMatches(ns, pattern)
+    val metrics = matched.map(_.getString(0))
+    SeriesOps.fetchForMetrics(pointsOf(metrics, Some((from, until))),
+      inputs(ns, metrics, from, until),
+      core.MetaStore.local(spark, matched).select("metric"))
   }
 
   /** CeresTree.store → CeresNode.write: batch ingest of (metric, ts,

@@ -6,11 +6,26 @@ import org.apache.spark.sql.SparkSession
 /** Plan-capture tool for the optimization rounds (guide §1.1/§7.2):
   * `runMain graft.PlanDump <sfDir> <outDir> [query ...]` writes each
   * query's `.explain("formatted")` text to `<outDir>/<query>.txt`
-  * (all queries when none are named). Also prints a one-line plan-shape
+  * (all queries when none are named), [[normalize]]d so plans written by
+  * two runs or two commits diff clean. Also prints a one-line plan-shape
   * summary (exchange count / join strategies / codegen spans) per query
   * so a registry-wide sweep is greppable. Not part of the driver
   * contract. */
 object PlanDump {
+
+  /** `plan` without the counters that change from run to run or edit to
+    * edit: expression ids (`#12`), exchange ids (`plan_id=34`), RDD ids
+    * (`MapPartitionsRDD[56]`), RDD call-site labels (`localCheckpoint at
+    * SeriesOps.scala:78`), lambda instance names (`Lambda…/0x…@…`) and
+    * this JVM's pid in BuildOnce scratch paths (`…_p789`). */
+  private[graft] def normalize(plan: String): String =
+    plan.replaceAll("#[0-9]+", "")
+      .replaceAll("plan_id=[0-9]+", "plan_id=")
+      .replaceAll("RDD\\[[0-9]+\\]", "RDD[]")
+      .replaceAll(" at [A-Za-z0-9_$]+\\.scala:[0-9]+", "")
+      .replaceAll("Lambda\\$[0-9]+/0x[0-9a-f]+@[0-9a-f]+", "Lambda")
+      .replaceAll(s"_p${ProcessHandle.current().pid()}(?![0-9])", "_p")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -34,8 +49,8 @@ object PlanDump {
         case Some(fn) =>
           try {
             val df = fn(spark, sfDir)
-            val plan = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
+            val plan = normalize(df.queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode))
             Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
             val exch = plan.linesIterator.count(l =>
               l.contains(" Exchange") || l.startsWith("Exchange"))

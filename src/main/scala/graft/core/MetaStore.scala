@@ -1,5 +1,7 @@
 package graft.core
 
+import java.util.concurrent.atomic.AtomicReference
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -80,8 +82,8 @@ object MetaStore {
       .agg(coalesce(max("version"), lit(-1L))).head().getLong(0) + 1L
 
   /** Last-writer-wins: per metric the highest-`version` row, tombstones
-    * (null timeStep) dropped. The one definition [[read]] and [[lookup]]
-    * share. */
+    * (null timeStep) dropped. The one definition [[read]], [[lookup]]
+    * and [[NodeTable]] share. */
   private def resolve(log: DataFrame): DataFrame =
     log.groupBy("metric")
       .agg(max_by(struct("timeStep", "aggregationMethod", "xFilesFactor",
@@ -103,12 +105,71 @@ object MetaStore {
     * sorted by metric: equal to `read(...).where(pred)`, in ONE Spark job
     * with no exchange. The log is filtered before resolving (exact,
     * since `pred` only sees `metric`) and the filtered history is
-    * resolved in a single partition. Nothing is cached: a put or delete
-    * is visible to the next lookup. */
+    * resolved in a single partition. Each call reads the log; a
+    * `graft.Engine` serves its reads from a [[NodeTable]] instead. */
   def lookup(spark: SparkSession, metaDir: String, pred: Column): DataFrame =
     if (!Fs.exists(spark, metaDir)) local(spark, Seq.empty)
     else local(spark,
       resolve(log(spark, metaDir).where(pred).coalesce(1)).collect().toSeq)
+
+  /** One entry of the log directory's listing: file name, length and
+    * modification time. */
+  type Listed = (String, Long, Long)
+
+  /** The log directory's listing, sorted by name (empty when the
+    * directory does not exist): ONE filesystem list call, no Spark job.
+    * Every [[put]], [[delete]] and [[compact]] into the directory adds
+    * or replaces a uniquely-named file (and rewrites `_SUCCESS`), and no
+    * writer rewrites a file in place, so an unchanged listing means an
+    * unchanged log. */
+  def listing(spark: SparkSession, metaDir: String): Seq[Listed] = {
+    val p = new Path(metaDir)
+    val listed =
+      try p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    listed.toSeq
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+      .sortBy(_._1)
+  }
+
+  /** Resolved node rows ([[Schema]]) held on the driver: sorted by
+    * metric, and indexed by metric. */
+  final class Nodes(resolved: Seq[Row]) {
+    val rows: Seq[Row] = resolved.sortBy(_.getString(0))
+    val byMetric: Map[String, Row] = rows.map(r => r.getString(0) -> r).toMap
+  }
+
+  /** The resolved node table of `metaDir`, held on the driver across
+    * requests — ceres' node cache (`CeresTree.setNodeCachingBehavior
+    * ('all')`). [[nodes]] lists the log directory on every call and
+    * re-resolves the whole log (one Spark job, no exchange: [[resolve]]
+    * over the log in one partition) only when the listing differs from
+    * the one the held rows were resolved under, so a write by any
+    * writer — this process or another — is visible to the next call, and
+    * an unchanged log costs one listing and no Spark job. The listing is
+    * taken BEFORE the log is read: a write landing between the two
+    * changes the next listing, so it is never missed. Neither the
+    * listing nor a re-resolve holds a lock: concurrent callers only
+    * swap the held (listing, rows) pair, and a pair replaced by an older
+    * one costs one more re-resolve, never a stale answer. Holds O(#nodes)
+    * rows of driver memory (one per live node, plus the metric index). */
+  final class NodeTable(spark: SparkSession, metaDir: String) {
+    private val held = new AtomicReference[(Seq[Listed], Nodes)]
+
+    /** The live nodes, as of this call's listing. */
+    def nodes: Nodes = {
+      val now = listing(spark, metaDir)
+      Option(held.get) match {
+        case Some((seen, ns)) if seen == now => ns
+        case _ =>
+          val ns = new Nodes(
+            if (!Fs.exists(spark, metaDir)) Nil
+            else resolve(log(spark, metaDir).coalesce(1)).collect().toSeq)
+          held.set((now, ns))
+          ns
+      }
+    }
+  }
 
   /** Metadata rows as a local relation, sorted by metric. */
   private[graft] def local(spark: SparkSession, rows: Seq[Row]): DataFrame = {

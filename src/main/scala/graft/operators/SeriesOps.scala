@@ -98,18 +98,74 @@ object SeriesOps {
 
   // ———————————————————————————— read path (§2.2) ——————————————————————————
 
-  /** The dense render grid over [f, u) as a sequence column, exploded by
-    * every densify core. PLAN-TIME degenerate-window guard (r18 ADVICE):
-    * `sequence` with a positive step THROWS at runtime when u - 1 < f —
-    * reachable because `until < from` survives Kernel.align/alignUntil —
-    * where the pre-r18 `spark.range(f, u, step)` grid returned an empty
-    * frame. f and u are always plan-time literals here, so the guard is
-    * a Scala `if`: the valid-window plan is bit-identical to the bare
-    * sequence, and a degenerate window explodes an empty array (zero
-    * grid rows, exactly the old behavior). */
-  private def gridSeq(f: Long, u: Long, step: Column): Column =
-    if (u - 1 >= f) sequence(lit(f), lit(u - 1), step)
-    else array().cast("array<bigint>")
+  /** The per-window inputs of the read cores ([[reconcileOf]],
+    * [[densifyGridFrom]], [[metricGrid]]) besides the points: the
+    * step-aligned window [f, u) as plan-time values (scan bounds, the
+    * degenerate-window guard), the reconcile anchor and first grid slot
+    * (`from`), the last grid slot (`last`), and each metric's
+    * aggregation method — either the node table, joined by broadcast on
+    * `metric` (`Left`), or a method column (`Right`).
+    *
+    * Two sources, one body per core:
+    *  - [[ReadInputs.literals]] — plan-time literals and the broadcast
+    *    metadata join: every registry face and whole-store read;
+    *  - [[ReadInputs.mapped]] — lookups into ONE per-request map literal
+    *    (metric → method, anchor, last slot) built from node rows the
+    *    caller already holds (`graft.Engine`): no metadata broadcast,
+    *    and no window-dependent code after the scan. Spark's codegen
+    *    inlines Long literals into the generated Java but references map
+    *    and string literals, so with these inputs only the scan stage's
+    *    code (its literal ts filter, which keeps the pushed filters)
+    *    depends on the window, and a new window reuses every other
+    *    compiled stage. The lookups are keyed on the `metric` COLUMN,
+    *    after the scan: `ConstantPropagation` folds a lookup that shares
+    *    a filter with `metric = 'm'` back into an inlined literal. */
+  private[graft] final case class ReadInputs(
+      f: Long, u: Long, from: Column, last: Column,
+      method: Either[DataFrame, Column]) {
+
+    /** Lookups into the map, keyed on a `metric` column (class doc). */
+    def mapped: Boolean = method.isRight
+
+    /** The dense render grid over [f, u) at `step` as a sequence column,
+      * exploded by every densify core. PLAN-TIME degenerate-window guard
+      * (r18 ADVICE): `sequence` with a positive step THROWS at runtime
+      * when u - 1 < f — reachable because `until < from` survives
+      * Kernel.align/alignUntil — where the pre-r18 `spark.range(f, u,
+      * step)` grid returned an empty frame. f and u are always known
+      * when the plan is built, so the guard is a Scala `if`: the
+      * valid-window plan is the bare sequence, and a degenerate window
+      * explodes an empty array (zero grid rows, the old behavior). */
+    def grid(step: Column): Column =
+      if (u - 1 >= f) sequence(from, last, step)
+      else array().cast("array<bigint>")
+  }
+
+  private[graft] object ReadInputs {
+
+    /** Plan-time literals and the broadcast join of `meta`. */
+    def literals(meta: DataFrame, from: Long, until: Long): ReadInputs = {
+      val f = Kernel.align(from, Step)
+      val u = Kernel.alignUntil(until, Step)
+      ReadInputs(f, u, lit(f), lit(u - 1), Left(meta))
+    }
+
+    /** Lookups into one map literal over `methods` (metric → aggregation
+      * method; null for a metric without a node, read as 'average'),
+      * keyed on the `metric` column. Every metric the read's points can
+      * hold must be a key: the anchor and grid bounds come from the
+      * same entry. */
+    def mapped(methods: Seq[(String, String)], from: Long,
+               until: Long): ReadInputs = {
+      val f = Kernel.align(from, Step)
+      val u = Kernel.alignUntil(until, Step)
+      val keys = typedLit(methods.map { case (m, method) =>
+        m -> ((method, f, u - 1)) }.toMap)
+      def at(field: String): Column =
+        element_at(keys, col("metric")).getField(field)
+      ReadInputs(f, u, at("_2"), at("_3"), Right(at("_1")))
+    }
+  }
 
   /** Per-metric aggregation-method dispatch used by the read-path reconcile
     * and the rollup: one codegen'd when-chain over pre-computed candidate
@@ -138,15 +194,26 @@ object SeriesOps {
     * itself — semantics are unchanged.
     */
   def reconcileToCoarsest(pts: DataFrame, meta: DataFrame,
-                          anchor: Long = 0L): DataFrame = {
-    pts
+                          anchor: Long = 0L): DataFrame =
+    reconcileOf(pts, Left(meta), lit(anchor))
+
+  /** THE reconcile body, with the anchor and the method source as
+    * [[ReadInputs]] give them: `Left(meta)` joins the node table by
+    * broadcast (the registry plan), `Right(method)` is a per-row column
+    * (an `Engine` request's map lookup, no join). */
+  private def reconcileOf(pts: DataFrame, method: Either[DataFrame, Column],
+                          anchor: Column): DataFrame = {
+    val windowed = pts
       .withColumn("target_step",
         max("step").over(Window.partitionBy("metric")))
-      // left join + reference default: a metric without metadata aggregates
-      // as 'average' (the reference's DEFAULT metadata value) instead of
-      // silently vanishing from results
-      .join(broadcast(meta.select("metric", "aggregationMethod")),
-        Seq("metric"), "left")
+    // left join (or a null mapped method) + reference default: a metric
+    // without metadata aggregates as 'average' (the reference's DEFAULT
+    // metadata value) instead of silently vanishing from results
+    method.fold(
+        meta => windowed.join(
+          broadcast(meta.select("metric", "aggregationMethod")),
+          Seq("metric"), "left"),
+        m => windowed.withColumn("aggregationMethod", m))
       .withColumn("aggregationMethod",
         coalesce(col("aggregationMethod"), lit("average")))
       // buckets anchor at the WINDOW START (the reference's aggregateSeries
@@ -181,12 +248,15 @@ object SeriesOps {
     * the reconcile aggregates everything onto the coarsest step present for
     * the metric before the result is shaped. */
   def fetchRangeFrom(points: DataFrame, meta: DataFrame, metric: String,
-                     from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val pts = points
-      .where(col("metric") === metric && col("ts") >= f && col("ts") < u)
-    reconcileToCoarsest(pts, meta, anchor = f)
+                     from: Long, until: Long): DataFrame =
+    fetchRangeFrom(points, ReadInputs.literals(meta, from, until), metric)
+
+  /** [[fetchRangeFrom]] with its window and methods from `in`. */
+  private[graft] def fetchRangeFrom(points: DataFrame, in: ReadInputs,
+                                    metric: String): DataFrame = {
+    val pts = points.where(col("metric") === metric &&
+      col("ts") >= in.f && col("ts") < in.u)
+    reconcileOf(pts, in.method, in.from)
       .select("ts", "value")
       .orderBy("ts")
   }
@@ -206,15 +276,14 @@ object SeriesOps {
   def densifyGrid(spark: SparkSession, dir: String, metric: String,
                   from: Long, until: Long,
                   metaOpt: Option[DataFrame] = None): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val pts = Catalog.pointsCached(spark, dir)
-      .where(col("metric") === metric && col("ts") >= f && col("ts") < u)
-    reconcileToCoarsest(pts,
-      metaOpt.getOrElse(Catalog.metricsMeta(spark)), anchor = f)
+    val in = ReadInputs.literals(
+      metaOpt.getOrElse(Catalog.metricsMeta(spark)), from, until)
+    val pts = Catalog.pointsCached(spark, dir).where(col("metric") === metric &&
+      col("ts") >= in.f && col("ts") < in.u)
+    reconcileOf(pts, in.method, in.from)
       .agg(map_from_entries(
         collect_list(struct(col("ts"), col("value")))).as("m"))
-      .select(explode(gridSeq(f, u, lit(Step))).as("ts"),
+      .select(explode(in.grid(lit(Step))).as("ts"),
         col("m"))
       .select(col("ts"), element_at(col("m"), col("ts")).as("value"))
       .orderBy("ts")
@@ -238,18 +307,28 @@ object SeriesOps {
     * there only to keep two consumers from re-running the reconcile)
     * is no longer needed at all. The map row is O(one metric × one
     * window) — the bound the old join plan already accepted — and the
-    * store is still scanned exactly once (pinned by PlanSpec). */
+    * store is still scanned exactly once (pinned by PlanSpec).
+    *
+    * With [[ReadInputs.mapped]] inputs the one-row aggregate also carries
+    * the metric (`coalesce(first("metric"), lit(metric))`: an empty
+    * window has no rows), so the grid bounds look up by the column. */
   def densifyGridFrom(points: DataFrame, meta: DataFrame, metric: String,
-                      from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val pts = points
-      .where(col("metric") === metric && col("ts") >= f && col("ts") < u)
-    reconcileToCoarsest(pts, meta, anchor = f)
+                      from: Long, until: Long): DataFrame =
+    densifyGridFrom(points, ReadInputs.literals(meta, from, until), metric)
+
+  /** [[densifyGridFrom]] with its window and methods from `in`. */
+  private[graft] def densifyGridFrom(points: DataFrame, in: ReadInputs,
+                                     metric: String): DataFrame = {
+    val pts = points.where(col("metric") === metric &&
+      col("ts") >= in.f && col("ts") < in.u)
+    val key =
+      if (in.mapped) Seq(coalesce(first("metric"), lit(metric)).as("metric"))
+      else Nil
+    reconcileOf(pts, in.method, in.from)
       .agg(coalesce(max("step"), lit(Step)).as("gstep"),
         map_from_entries(
-          collect_list(struct(col("ts"), col("value")))).as("m"))
-      .select(explode(gridSeq(f, u, col("gstep"))).as("ts"),
+          collect_list(struct(col("ts"), col("value")))).as("m") +: key: _*)
+      .select(explode(in.grid(col("gstep"))).as("ts"),
         col("m"))
       .select(col("ts"), element_at(col("m"), col("ts")).as("value"))
       .orderBy("ts")
@@ -271,7 +350,9 @@ object SeriesOps {
     fetchPatternFrom(Catalog.pointsCached(spark, dir),
       Catalog.metricsMeta(spark), pattern, from, until)
 
-  /** [[fetchPattern]] over explicit points/meta (the Engine face). */
+  /** [[fetchPattern]] over explicit points/meta (the whole-store and
+    * store-layout faces; `graft.Engine` calls [[fetchForMetrics]] with its
+    * held node rows). */
   def fetchPatternFrom(points: DataFrame, meta: DataFrame, pattern: String,
                        from: Long, until: Long): DataFrame = {
     val rx = Kernel.globToRegex(pattern)
@@ -288,17 +369,19 @@ object SeriesOps {
   private[graft] def fetchForMetrics(points: DataFrame, meta: DataFrame,
                                      matched: DataFrame,
                                      from: Long, until: Long): DataFrame =
-    metricGrid(points, meta, matched, from, until).orderBy("metric", "ts")
+    fetchForMetrics(points, ReadInputs.literals(meta, from, until), matched)
+
+  /** [[fetchForMetrics]] with its window and methods from `in`. */
+  private[graft] def fetchForMetrics(points: DataFrame, in: ReadInputs,
+                                     matched: DataFrame): DataFrame =
+    metricGrid(points, in, matched).orderBy("metric", "ts")
 
   /** [[fetchForMetrics]] before its closing sort: the one place the
     * (metric, ts, value) multi-metric grid is built. */
-  private def metricGrid(points: DataFrame, meta: DataFrame,
-                         matched: DataFrame,
-                         from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
+  private def metricGrid(points: DataFrame, in: ReadInputs,
+                         matched: DataFrame): DataFrame = {
     val pts = points.join(broadcast(matched), "metric")
-      .where(col("ts") >= f && col("ts") < u)
+      .where(col("ts") >= in.f && col("ts") < in.u)
     // r18 opt (guide §2.4): pack each metric's reconciled window into one
     // (gstep, ts → value map) row — O(#matched) rows, each bounded by the
     // render window — instead of the former eager-checkpoint + two
@@ -314,7 +397,7 @@ object SeriesOps {
     // result through the driver's 8 GB broadcast cap. `packed` is
     // already hash(metric)-partitioned by its groupBy, so the at-scale
     // plan adds no exchange on the big side.
-    val packed = reconcileToCoarsest(pts, meta, anchor = f)
+    val packed = reconcileOf(pts, in.method, in.from)
       .groupBy("metric")
       .agg(max("step").as("gstep"),
         map_from_entries(
@@ -323,7 +406,7 @@ object SeriesOps {
       .join(packed, Seq("metric"), "left")
       .withColumn("gstep", coalesce(col("gstep"), lit(Step)))
       .select(col("metric"),
-        explode(gridSeq(f, u, col("gstep"))).as("ts"),
+        explode(in.grid(col("gstep"))).as("ts"),
         col("m"))
       .select(col("metric"), col("ts"),
         element_at(col("m"), col("ts")).as("value"))
@@ -350,8 +433,8 @@ object SeriesOps {
   private[graft] def denseGridAll(spark: SparkSession, dir: String,
                                   from: Long, until: Long): DataFrame = {
     val meta = Catalog.metricsMeta(spark)
-    metricGrid(Catalog.pointsCached(spark, dir), meta, meta.select("metric"),
-      from, until)
+    metricGrid(Catalog.pointsCached(spark, dir),
+      ReadInputs.literals(meta, from, until), meta.select("metric"))
   }
 
   /** The series key of [[denseGridAll]]'s grid. */
@@ -1228,12 +1311,12 @@ object SeriesOps {
     * is built, and every consumer reads the blocks. */
   def mergeSeriesFrom(points: DataFrame, meta: DataFrame, primary: String,
                       secondary: String, from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
+    val in = ReadInputs.literals(meta, from, until)
+    val f = in.f
     val pts = points
-      .where(col("ts") >= f && col("ts") < u)
+      .where(col("ts") >= f && col("ts") < in.u)
       .where(col("metric").isin(primary, secondary))
-    val series = reconcileToCoarsest(pts, meta, anchor = f).localCheckpoint()
+    val series = reconcileOf(pts, in.method, in.from).localCheckpoint()
     val a = series.where(col("metric") === primary)
       .select(col("ts"), col("value").as("va"))
     // grid at the primary's reconciled step (one-row aggregate -> sequence
@@ -1241,7 +1324,7 @@ object SeriesOps {
     val aStep = series.where(col("metric") === primary)
       .agg(coalesce(max("step"), lit(Step)).as("gstep"))
     val grid = aStep.select(
-      explode(gridSeq(f, u, col("gstep"))).as("ts"),
+      explode(in.grid(col("gstep"))).as("ts"),
       col("gstep"))
     // align secondary onto the primary grid; earliest value per cell wins
     val b = series.where(col("metric") === secondary)

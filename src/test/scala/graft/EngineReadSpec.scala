@@ -4,15 +4,20 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter,
+  SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.debug.codegenStringSeq
+import org.apache.spark.metrics.source.CodegenMetrics
 import graft.core.MetaStore
 import graft.operators.SeriesOps
 import graft.streaming.{Ingest, Maintenance}
 
-/** A store-backed engine's reads: one metadata lookup plus one
-  * partition-pruned store scan per request, within a job budget, with
-  * the answers of the whole-store path. */
+/** A store-backed engine's reads: node metadata from the engine's held
+  * node table plus one partition-pruned store scan per request, within a
+  * job budget, with the answers of the whole-store path; a new window
+  * recompiles only the scan stage; node writes by any writer are visible
+  * to the next read. */
 class EngineReadSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val Hour = 3600L
@@ -77,18 +82,42 @@ class EngineReadSpec extends AnyFunSuite {
     drained() - j0
   }
 
-  /** Every file scan of the executed (adaptive) plan. */
-  private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = {
-    val here = p match {
-      case f: FileSourceScanExec => Seq(f)
-      case _ => Seq.empty
-    }
+  /** Every node of the executed (adaptive) plan, query stages and
+    * subqueries included. */
+  private def nodesOf(p: SparkPlan): Seq[SparkPlan] = {
     val children = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case q: QueryStageExec => Seq(q.plan)
       case other => other.children
     }
-    here ++ children.flatMap(fileScans) ++ p.subqueries.flatMap(fileScans)
+    p +: (children.flatMap(nodesOf) ++ p.subqueries.flatMap(nodesOf))
+  }
+
+  /** Every file scan of the executed (adaptive) plan. */
+  private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] =
+    nodesOf(p).collect { case f: FileSourceScanExec => f }
+
+  /** The operators one whole-stage-codegen stage compiles, and the
+    * operators feeding its inputs. */
+  private def stageOps(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: InputAdapter => Seq(a, a.child)
+    case _ => p +: p.children.flatMap(stageOps)
+  }
+
+  /** The generated code of every whole-stage-codegen stage of `df`'s
+    * executed plan, split into the stages that read a file (the scan
+    * stage) and the rest, each in stage-id order. */
+  private def stageCode(df: DataFrame): (Seq[String], Seq[String]) = {
+    df.collect()
+    val stages = nodesOf(df.queryExecution.executedPlan)
+      .collect { case w: WholeStageCodegenExec => w }
+      .sortBy(_.codegenStageId)
+    val (scan, rest) = stages.partition(w =>
+      stageOps(w.child).exists(_.isInstanceOf[FileSourceScanExec]))
+    // codegenStringSeq(w) lists w's nested stages too: keep w's own
+    def code(ws: Seq[WholeStageCodegenExec]) = ws.map(w =>
+      codegenStringSeq(w).collectFirst { case (t, c, _) if t == w.toString => c }.get)
+    (code(scan), code(rest))
   }
 
   private def assertOnePrunedScan(df: DataFrame, storeDir: String): Unit = {
@@ -120,9 +149,9 @@ class EngineReadSpec extends AnyFunSuite {
     val (eng, storeDir, _) = store
     val m = metricOf("sum")
     val reads = Seq[(String, Long, () => DataFrame)](
-      ("fetch", 3L, () => eng.fetch(m, From, Until)),
-      ("find", 1L, () => eng.find("svc.*.lat")),
-      ("fetchPattern", 8L, () => eng.fetchPattern("svc.*.lat", From, Until)))
+      ("fetch", 1L, () => eng.fetch(m, From, Until)),
+      ("find", 0L, () => eng.find("svc.*.lat")),
+      ("fetchPattern", 6L, () => eng.fetchPattern("svc.*.lat", From, Until)))
     for ((name, budget, read) <- reads) {
       read().collect() // warm-up
       val n = jobsOf(read().collect())
@@ -131,6 +160,97 @@ class EngineReadSpec extends AnyFunSuite {
     }
     assertOnePrunedScan(eng.fetch(m, From, Until), storeDir)
     assertOnePrunedScan(eng.fetchPattern("svc.*.lat", From, Until), storeDir)
+  }
+
+  test("a new window recompiles only the scan stage") {
+    val (eng, _, _) = store
+    val m = metricOf("average")
+    // per read, two windows no other read in this suite uses, both
+    // across the rolled daily history and the hourly tail
+    val reads = Seq[(String, Seq[(Long, Long)], ((Long, Long)) => DataFrame)](
+      ("fetch", Seq((Day + 3 * Hour, 4 * Day + 11 * Hour),
+        (Day + 9 * Hour, 5 * Day + 2 * Hour)),
+        w => eng.fetch(m, w._1, w._2)),
+      ("fetchPattern", Seq((Day + 5 * Hour, 4 * Day + 13 * Hour),
+        (Day + 7 * Hour, 5 * Day + 4 * Hour)),
+        w => eng.fetchPattern("svc.*.lat", w._1, w._2)))
+    for ((name, windows, read) <- reads) {
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+      val (scanA, restA) = stageCode(read(windows(0)))
+      val c0 = compiles.getCount
+      val (scanB, restB) = stageCode(read(windows(1)))
+      info(s"$name: ${scanA.size} scan stage(s), ${restA.size} later " +
+        s"stage(s); ${compiles.getCount - c0} compilations for the new window")
+      assert(scanA.size === 1 && scanB.size === 1, name)
+      assert(restA.nonEmpty, s"$name: no codegen stage after the scan")
+      // the scan stage carries the window's literal ts bounds (pushed
+      // filters), so it alone differs
+      assert(scanA != scanB, s"$name: the scan stage should see the window")
+      val differing = restA.indices.filter(i => restB.lift(i) != Some(restA(i)))
+      assert(restA.size == restB.size && differing.isEmpty,
+        s"$name: stage(s) after the scan depend on the window: " +
+          differing.map(i => restA(i).linesIterator.take(3).mkString(" ")))
+    }
+  }
+
+  test("node writes by any writer are visible to the next read") {
+    val (_, storeDir, metaDir) = store
+    // a private copy of the node log: this test rewrites metadata
+    val fresh = Files.createTempDirectory("graft-engine-fresh")
+      .resolve("meta").toString
+    MetaStore.compact(spark, metaDir, fresh)
+    val eng = Engine.openStore(spark, storeDir, fresh)
+    val other = Engine.openStore(spark, storeDir, fresh)
+    val m = metricOf("sum")
+    val points = Ingest.storeView(spark, storeDir)
+    def whole() = grid(SeriesOps.densifyGridFrom(points,
+      MetaStore.read(spark, fresh), m, From, Until))
+    val asSum = grid(eng.fetch(m, From, Until))
+    assert(asSum === whole())
+    assert(eng.find("new.*").collect().isEmpty && !eng.hasNode("new.a"))
+    // another engine's createNode
+    other.createNode("new.a", Hour, "max", 0.5)
+    assert(eng.hasNode("new.a"))
+    assert(eng.find("new.*").collect().map(_.getString(0)).toSeq === Seq("new.a"))
+    assert(grid(eng.fetch("new.a", From, Until)).forall(_.isNullAt(1)))
+    // a direct MetaStore.put changes the method the next read reconciles by
+    MetaStore.put(spark, fresh, m, Hour, "min", 0.5,
+      Seq(MetaStore.Retention(Hour, 48L), MetaStore.Retention(Day, 30L)))
+    val asMin = grid(eng.fetch(m, From, Until))
+    assert(asMin !== asSum)
+    assert(asMin === whole())
+    // another engine's deleteNode
+    other.deleteNode("new.a")
+    assert(!eng.hasNode("new.a") && eng.find("new.*").collect().isEmpty)
+    val e = intercept[NoSuchElementException](eng.fetch("new.a", From, Until))
+    assert(e.getMessage.contains("NodeNotFound"))
+  }
+
+  test("a metric with points but no node reads as the whole-store path") {
+    val (_, storeDir, metaDir) = store
+    // a private copy of the node log: this test deletes a node
+    val fresh = Files.createTempDirectory("graft-engine-nonode")
+      .resolve("meta").toString
+    MetaStore.compact(spark, metaDir, fresh)
+    val eng = Engine.openStore(spark, storeDir, fresh)
+    val m = metricOf("sum")
+    eng.deleteNode(m)
+    val points = Ingest.storeView(spark, storeDir)
+    val whole = grid(SeriesOps.fetchRangeFrom(points,
+      MetaStore.read(spark, fresh), m, From, Until))
+    assert(whole.nonEmpty && whole.forall(!_.isNullAt(0)))
+    assert(grid(eng.fetchSparse(m, From, Until)) === whole)
+    // read as 'average', the values are fractions: equal up to the order
+    // of floating-point summation
+    for (agg <- Methods) {
+      val got = eng.aggregate(m, agg, From, Until)
+      val want = graft.core.Kernel.aggregate(agg,
+        whole.map(r => Some(r.getDouble(1))))
+      assert(want.isDefined && got.isDefined, agg)
+      assert(math.abs(got.get - want.get) <= 1e-9 * math.max(1.0,
+        math.abs(want.get)), s"$agg: $got vs $want")
+    }
+    intercept[NoSuchElementException](eng.fetch(m, From, Until))
   }
 
   test("fetch and fetchPattern equal the whole-store read on a multi-resolution store") {
