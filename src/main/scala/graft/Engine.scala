@@ -35,14 +35,18 @@ import graft.streaming.{Ingest, Maintenance}
   * memory. `find` and `hasNode` run no Spark job. On a store-backed
   * engine a point read then runs ONE partition-pruned store scan of the
   * matched metrics' buckets × the step-aligned window's dates
-  * ([[Maintenance.prunedReadMetrics]]), read with a declared schema, and
-  * hands the reconcile and grid their methods, anchor and grid bounds as
+  * ([[Maintenance.storeRead]] over [[Maintenance.storeScan]], the one
+  * place a points store is opened: declared schema, layout from the
+  * `_buckets` marker), and hands the reconcile and grid their methods, anchor and grid bounds as
   * lookups into one per-request metric-keyed map literal
   * ([[SeriesOps.ReadInputs.mapped]]): no metadata broadcast, and a new
   * window recompiles only the scan stage's code. A one-metric read runs
   * in a single partition from scan to result (one job); a multi-metric
-  * read pays one hash(metric) exchange. The harness-catalog engine reads
-  * `Catalog.pointsCached` and its inline catalog instead.
+  * read pays one hash(metric) exchange. The registry's `_store` faces
+  * (`fetch_range_store`, `densify_grid_store`, `fetch_pattern_store`)
+  * are these reads, so the DuckDB oracle checks this path. The
+  * harness-catalog engine reads `Catalog.pointsCached` and its inline
+  * catalog instead.
   */
 final class Engine(val spark: SparkSession, val dir: String,
                    val metaDir: Option[String] = None,

@@ -16,8 +16,9 @@ object PlanDump {
   /** `plan` without the counters that change from run to run or edit to
     * edit: expression ids (`#12`), exchange ids (`plan_id=34`), RDD ids
     * (`MapPartitionsRDD[56]`), RDD call-site labels (`localCheckpoint at
-    * SeriesOps.scala:78`), lambda instance names (`Lambda…/0x…@…`) and
-    * this JVM's pid in BuildOnce scratch paths (`…_p789`). */
+    * SeriesOps.scala:78`), lambda instance names (`Lambda…/0x…@…`), this
+    * JVM's pid in BuildOnce scratch paths (`…_p789`) and the order of the
+    * distinct-aggregate groups ([[sortDistinctGroups]]). */
   private[graft] def normalize(plan: String): String =
     plan.replaceAll("#[0-9]+", "")
       .replaceAll("plan_id=[0-9]+", "plan_id=")
@@ -25,6 +26,53 @@ object PlanDump {
       .replaceAll(" at [A-Za-z0-9_$]+\\.scala:[0-9]+", "")
       .replaceAll("Lambda\\$[0-9]+/0x[0-9a-f]+@[0-9a-f]+", "Lambda")
       .replaceAll(s"_p${ProcessHandle.current().pid()}(?![0-9])", "_p")
+      .split("(?m)^(?=\\([0-9]+\\) Expand$)").map(sortDistinctGroups).mkString
+
+  /** An `Expand`'s projection list and output columns. */
+  private val ExpandArgs = "(?m)^Arguments: \\[(\\[.*\\])\\], \\[(.*)\\]$".r
+
+  /** Spark's distinct-aggregate rewrite numbers its distinct groups
+    * (`gid`) and lays out their `Expand` columns in the iteration order
+    * of a hash map keyed on expression ids, so one plan prints under a
+    * different group order from run to run. `section` starts at an
+    * `Expand` and runs to the next one (the Expand's consumers follow it
+    * in the formatted plan): its groups are put in the order of their
+    * column texts, renumbering `gid` and reordering the group columns in
+    * every later line of the section. A section without a `gid` column
+    * (the plan's head, a grouping-set Expand) is returned unchanged. */
+  private def sortDistinctGroups(section: String): String = {
+    val m = ExpandArgs.findFirstMatchIn(section).orNull
+    val out = if (m == null) Nil else topLevel(m.group(2))
+    val g = out.indexOf("gid")
+    if (g < 0) return section
+    val rows = topLevel(m.group(1)).map(r => topLevel(r.drop(1).dropRight(1)))
+    val d = (0 until g).filter(j => rows.exists(_(j) == "null"))
+    def cols(r: Seq[String]) = d.filter(r(_) != "null")
+    val (groups, rest) = rows.partition(cols(_).nonEmpty)
+    val sorted = groups.sortBy(cols(_).map(out).mkString(", "))
+    val gid = sorted.map(_(g)).zip(groups.map(_(g))).toMap
+    val newD = sorted.flatMap(cols)
+    val order = out.indices.map(j => if (d.contains(j)) newD(d.indexOf(j)) else j)
+    def list(xs: Seq[String]) = xs.mkString("[", ", ", "]")
+    section.substring(0, m.start(1) - 1) +
+      list((rest ++ sorted).map(r => list(order.map(j =>
+        if (j == g) gid.getOrElse(r(g), r(g)) else r(j))))) +
+      ", " + list(order.map(out)) +
+      "\\(gid = ([0-9]+)\\)".r.replaceAllIn(
+        section.substring(m.end).replace(d.map(out).mkString(", "),
+          newD.map(out).mkString(", ")),
+        x => s"(gid = ${gid.getOrElse(x.group(1), x.group(1))})")
+  }
+
+  /** `s` split at its top-level ", " — outside parentheses and brackets. */
+  private def topLevel(s: String): Seq[String] = {
+    var depth = 0
+    val cuts = s.indices.filter { i =>
+      depth += "([".count(_ == s(i)) - ")]".count(_ == s(i))
+      depth == 0 && s.startsWith(", ", i)
+    }
+    (-2 +: cuts).zip(cuts :+ s.length).map { case (a, b) => s.substring(a + 2, b) }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)

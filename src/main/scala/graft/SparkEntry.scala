@@ -892,7 +892,7 @@ object SparkEntry {
   }
 
   /** Flagship grid-read oracle — shared by `densify_grid` (flat scan)
-    * and `densify_grid_store` (pruned (pb, pd) layout). */
+    * and `densify_grid_store` (`Engine.fetch` off the (pb, pd) store). */
   private lazy val DensifyGridSql: String =
     s"""$PtsCte SELECT g.ts, p.value
        | FROM (SELECT ts FROM range(1704412800, 1705021200, 3600) t(ts)) g
@@ -901,7 +901,8 @@ object SparkEntry {
        | ORDER BY ts""".stripMargin
 
   /** Pattern-read oracle — shared by `fetch_pattern` (flat scan) and
-    * `fetch_pattern_store` (pruned (pb, pd) layout): identical answers.
+    * `fetch_pattern_store` (`Engine.fetchPattern` off the (pb, pd)
+    * store): identical answers.
     * The match set resolves from the META catalog with the SAME anchored
     * regex the engine compiles from the glob (`events.*` →
     * `^events\.[^.]*$`), then LEFT-joins points — so a metadata match
@@ -2036,7 +2037,8 @@ object SparkEntry {
   }
 
   /** The `fetch_range` oracle — shared by `fetch_range_store`, whose
-    * partition-pruned store read must return the identical window. */
+    * `Engine.fetchSparse` off the (pb, pd) store must return the
+    * identical window. */
   private val FetchRangeSql: String =
     s"""$PtsCte SELECT ts, value FROM pts
        | WHERE metric = 'events.purchase' AND ts >= 1704412800 AND ts < 1705021200
@@ -2252,6 +2254,23 @@ object SparkEntry {
         .otherwise(ladder(PerNodeTiersB)))
   }
 
+  /** The harness corpus served as a real store, through the user-facing
+    * [[Engine.openStore]]: the (pb, pd) points store and a metadata log
+    * holding [[graft.core.Catalog.metricsMeta]] (the form
+    * `MetaStore.compact` writes), each BuildOnce-written per JVM per
+    * corpus — in production the ingest side maintains both; queries only
+    * read them. The `_store` faces are this engine's requests. */
+  private def storeEngine(s: SparkSession, d: String): Engine = {
+    import graft.core.{BuildOnce, Catalog, MetaStore}
+    val store = BuildOnce.dir(s, "graft_points_store", d) { path =>
+      graft.streaming.Ingest.appendToStore(Catalog.pointsCached(s, d), path)
+    }
+    val meta = BuildOnce.dir(s, "graft_points_meta", d) { path =>
+      MetaStore.writeResolved(Catalog.metricsMeta(s), path)
+    }
+    Engine.openStore(s, store, meta)
+  }
+
   /** Flagship query on sf=0.001: dense hourly grid of events.purchase over
     * the read window — scan, align, max-wins compact, reconcile, grid
     * join. */
@@ -2270,25 +2289,22 @@ object SparkEntry {
     // —— §2.2 read path ——
     "fetch_range" -> ((s, d) => SeriesOps.fetchRange(s, d, "events.purchase",
       SeriesOps.From, SeriesOps.Until)),
-    // the SAME read served from the (pb, pd)-bucketed store layout via
-    // partition-pruned candidate I/O (PartitionFilters, pinned in
+    // the SAME read served by a store-backed Engine: one partition-pruned
+    // scan of the metric's bucket × dates (PartitionFilters, pinned in
     // PlanSpec) — every range read's at-100 TB shape, on fetch_range's
     // oracle
-    "fetch_range_store" -> ((s, d) => graft.streaming.Maintenance
-      .fetchRangeStore(s, d, "events.purchase",
-        SeriesOps.From, SeriesOps.Until)),
-    // the pattern read off the (pb, pd) store: one pruned scan for the
-    // union of the matches' bucket directories × dates
-    "fetch_pattern_store" -> ((s, d) => graft.streaming.Maintenance
-      .fetchPatternStore(s, d, "events.*",
-        SeriesOps.From, SeriesOps.Until)),
+    "fetch_range_store" -> ((s, d) => storeEngine(s, d)
+      .fetchSparse("events.purchase", SeriesOps.From, SeriesOps.Until)),
+    // the Engine's pattern read: one pruned scan for the union of the
+    // matches' bucket directories × dates
+    "fetch_pattern_store" -> ((s, d) => storeEngine(s, d)
+      .fetchPattern("events.*", SeriesOps.From, SeriesOps.Until)),
     "densify_grid" -> ((s, d) => SeriesOps.densifyGrid(s, d, "events.purchase",
       SeriesOps.From, SeriesOps.Until)),
-    // the flagship grid read off the (pb, pd) store — pruned scan,
-    // reconcile, grid padding; densify_grid's oracle verbatim
-    "densify_grid_store" -> ((s, d) => graft.streaming.Maintenance
-      .densifyGridStore(s, d, "events.purchase",
-        SeriesOps.From, SeriesOps.Until)),
+    // the flagship grid read as Engine.fetch off the (pb, pd) store —
+    // pruned scan, reconcile, grid padding; densify_grid's oracle verbatim
+    "densify_grid_store" -> ((s, d) => storeEngine(s, d)
+      .fetch("events.purchase", SeriesOps.From, SeriesOps.Until)),
     // graphite functions-layer reads over the densified grid: counter →
     // delta/per-second rate (nonNegativeDerivative), and the trailing
     // 6-slot movingAverage (integer micro-unit window sums for parity)

@@ -96,7 +96,8 @@ object SliceCheck {
   private[cli] def checkLines(spark: SparkSession, a: Args): Iterator[String] = {
     import scala.jdk.CollectionConverters._
     graft.operators.SeriesOps.storeCheck(
-        spark.read.parquet(a.storeDir).select("metric", "step", "ts", "value"))
+        graft.streaming.Maintenance.storeScan(spark, a.storeDir)._1
+          .select("metric", "step", "ts", "value"))
       .toLocalIterator().asScala
       .map(r => s"${r.getString(0)} dup_rows=${r.getLong(1)} " +
         s"misaligned=${r.getLong(2)} overlap=${r.getLong(3)}")

@@ -2,7 +2,7 @@ package graft.core
 
 import java.util.concurrent.atomic.AtomicReference
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,7 +31,7 @@ object MetaStore {
       StructField("precision", LongType),
       StructField("points", LongType)))))))
 
-  /** The log's DECLARED schema, read by [[read]], [[lookup]] and the
+  /** The log's DECLARED schema, read by [[read]], [[NodeTable]] and the
     * version probe: no read infers it (an inference pass is a Spark job
     * per read). Parquet resolves columns by name, so files written by
     * [[put]] (`version` before `retentions`) and by [[compact]]
@@ -82,8 +82,8 @@ object MetaStore {
       .agg(coalesce(max("version"), lit(-1L))).head().getLong(0) + 1L
 
   /** Last-writer-wins: per metric the highest-`version` row, tombstones
-    * (null timeStep) dropped. The one definition [[read]], [[lookup]]
-    * and [[NodeTable]] share. */
+    * (null timeStep) dropped. The one definition [[read]] and
+    * [[NodeTable]] share. */
   private def resolve(log: DataFrame): DataFrame =
     log.groupBy("metric")
       .agg(max_by(struct("timeStep", "aggregationMethod", "xFilesFactor",
@@ -99,18 +99,6 @@ object MetaStore {
   def read(spark: SparkSession, metaDir: String): DataFrame =
     if (!Fs.exists(spark, metaDir)) local(spark, Seq.empty)
     else resolve(log(spark, metaDir))
-
-  /** The resolved rows of the nodes matching `pred` — a predicate on
-    * `metric` alone (one metric, a glob's regex) — as a local relation
-    * sorted by metric: equal to `read(...).where(pred)`, in ONE Spark job
-    * with no exchange. The log is filtered before resolving (exact,
-    * since `pred` only sees `metric`) and the filtered history is
-    * resolved in a single partition. Each call reads the log; a
-    * `graft.Engine` serves its reads from a [[NodeTable]] instead. */
-  def lookup(spark: SparkSession, metaDir: String, pred: Column): DataFrame =
-    if (!Fs.exists(spark, metaDir)) local(spark, Seq.empty)
-    else local(spark,
-      resolve(log(spark, metaDir).where(pred).coalesce(1)).collect().toSeq)
 
   /** One entry of the log directory's listing: file name, length and
     * modification time. */
@@ -180,8 +168,12 @@ object MetaStore {
   /** Compaction (the metadata defrag analog): rewrite the log as its
     * resolved view at version 0. */
   def compact(spark: SparkSession, metaDir: String, destDir: String): Unit =
-    read(spark, metaDir)
-      .withColumn("version", lit(0L))
+    writeResolved(read(spark, metaDir), destDir)
+
+  /** Write resolved node rows ([[Schema]]) as a log at version 0 — the
+    * form [[compact]] writes. */
+  private[graft] def writeResolved(nodes: DataFrame, destDir: String): Unit =
+    nodes.withColumn("version", lit(0L))
       .write.mode("overwrite").parquet(destDir)
 
   // ———————————————————————— tree-level properties ————————————————————————

@@ -350,9 +350,9 @@ object SeriesOps {
     fetchPatternFrom(Catalog.pointsCached(spark, dir),
       Catalog.metricsMeta(spark), pattern, from, until)
 
-  /** [[fetchPattern]] over explicit points/meta (the whole-store and
-    * store-layout faces; `graft.Engine` calls [[fetchForMetrics]] with its
-    * held node rows). */
+  /** [[fetchPattern]] over explicit points/meta (the whole-store read;
+    * `graft.Engine`, which serves the `fetch_pattern_store` face, calls
+    * [[fetchForMetrics]] with its held node rows). */
   def fetchPatternFrom(points: DataFrame, meta: DataFrame, pattern: String,
                        from: Long, until: Long): DataFrame = {
     val rx = Kernel.globToRegex(pattern)

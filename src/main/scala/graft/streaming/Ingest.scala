@@ -36,8 +36,8 @@ object Ingest {
     StructField("value", DoubleType)))
 
   /** The store's data columns — what [[compactBatch]] emits and every
-    * writer lands under the (pb, pd) partition columns. Pruned reads
-    * ([[Maintenance.prunedRead]]) declare it instead of inferring it. */
+    * writer lands under the (pb, pd) partition columns. Every store read
+    * declares it ([[Maintenance.storeScan]]) instead of inferring it. */
   val storeSchema: StructType = StructType(Seq(
     StructField("metric", StringType),
     StructField("step", LongType),
@@ -57,7 +57,7 @@ object Ingest {
   /** Append a compacted points batch to a store in the engine's ONE
     * store layout: PARTITIONED BY (pb = bounded metric hash bucket,
     * pd = UTC date) — the same (pb, pd) scheme [[Maintenance.compactStore]]
-    * writes and [[Maintenance.prunedRead]]/[[Maintenance.runPruned]]
+    * writes and [[Maintenance.storeRead]]/[[Maintenance.runPruned]]
     * prune. Raw-metric partitioning is a non-starter at 100 TB metric
     * cardinality (millions of tiny directories kill any file listing);
     * the bounded bucket × date grid keeps directory counts fixed while
@@ -122,13 +122,13 @@ object Ingest {
       .agg(max("value").as("value"))
       .select("metric", "step", "ts", "value")
 
-  /** Whole-store view of an ingested store: [[dedupe]] over every file.
-    * Layout-agnostic (the schema is inferred and the four data columns
-    * selected, so (pb, pd)-bucketed and legacy metric-partitioned stores
+  /** Whole-store view of an ingested store: [[dedupe]] over every file,
+    * opened through [[Maintenance.storeScan]] (declared schema, layout
+    * from the `_buckets` marker, so (pb, pd)-bucketed and legacy stores
     * both read); the store maintenance passes and `graft.Engine.points`
     * use it. A store-backed engine's REQUESTS (fetch, pattern, find,
-    * aggregate) never do: they read through [[Maintenance.prunedRead]]'s
-    * declared-schema, partition-pruned scan. */
+    * aggregate) never do: they read through [[Maintenance.storeRead]]'s
+    * partition-pruned scan. */
   def storeView(spark: SparkSession, sinkDir: String): DataFrame =
-    dedupe(spark.read.parquet(sinkDir))
+    dedupe(Maintenance.storeScan(spark, sinkDir)._1)
 }

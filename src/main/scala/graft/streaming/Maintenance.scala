@@ -328,133 +328,59 @@ object Maintenance {
         s"caller passed $buckets — writers and readers of one store " +
         "must agree (see MetricBuckets)")
 
-  /** Partition-pruned read of a (pb, pd) store ([[compactStore]] /
-    * bucketed-ingest layout): the bucket equality and date-range
-    * predicates bind to the PARTITION columns, so the scan lists and
-    * opens only `1/MetricBuckets` of the directories × the dates
-    * overlapping [from, until) — `PartitionFilters` in the plan, pinned
-    * by PlanSpec and IngestSpec. Callers pass the STEP-ALIGNED window
-    * (`align(from)`, `alignUntil(until)`): [[SeriesOps.fetchRangeFrom]]
-    * widens the read to those bounds, so pruning on the raw
-    * `[from, until)` would drop rows the alignment includes. Row-level
-    * metric/ts predicates re-apply on top (pushed to parquet row
-    * groups). Raw rows: cross-batch duplicates are NOT resolved here
-    * ([[Ingest.dedupe]] does that on top). Output schema = the points
-    * schema, so this composes directly with `SeriesOps.fetchRangeFrom`.
-    * See [[storeRead]] for the declared schema and legacy layouts. */
-  def prunedRead(spark: SparkSession, storeDir: String, metric: String,
-                 from: Long, until: Long,
-                 buckets: Int = MetricBuckets): DataFrame =
-    prunedReadMetrics(spark, storeDir, Seq(metric), from, until, buckets)
+  /** The one place a points store is opened: the pruned [[storeRead]],
+    * the whole-store [[Ingest.storeView]], [[runPruned]]'s discovery and
+    * rewrite and the slice check all scan through here. The schema is
+    * DECLARED — [[Ingest.storeSchema]], plus the `pb`/`pd` partition
+    * columns when the `_buckets` marker is present — so no open runs a
+    * schema-inference job, and the layout is decided by the marker
+    * ([[recordOrCheckBuckets]]), never by inspecting the store's columns:
+    * a marker means the (pb, pd) layout at the recorded count; no marker
+    * means a legacy layout (flat, or `metric=`-partitioned), whose
+    * partition directories Spark still discovers. Returns the raw rows —
+    * cross-batch duplicates are NOT resolved ([[Ingest.dedupe]] does that
+    * on top) — and the recorded bucket count. */
+  private[graft] def storeScan(spark: SparkSession,
+                               storeDir: String): (DataFrame, Option[Int]) = {
+    val recorded = recordedBuckets(spark, storeDir)
+    val schema = recorded.fold(Ingest.storeSchema)(_ =>
+      Ingest.storeSchema.add("pb", LongType).add("pd", DateType))
+    (spark.read.schema(schema).parquet(storeDir), recorded)
+  }
 
-  /** Multi-metric [[prunedRead]]: the scan lists only the UNION of the
-    * metrics' bucket directories × overlapping dates — the pattern
-    * read's candidate I/O, one pruned scan for all matches (the
-    * `ann_ivf_batch_store` shape on the points store). */
-  def prunedReadMetrics(spark: SparkSession, storeDir: String,
-                        metrics: Seq[String], from: Long, until: Long,
-                        buckets: Int = MetricBuckets): DataFrame =
-    storeRead(spark, storeDir, metrics, Some((from, until)), Some(buckets))
-
-  /** The one pruned store read behind [[prunedRead]],
-    * [[prunedReadMetrics]] and every store-backed `graft.Engine` read:
-    * `metrics`' rows, within `window` when one is given (every date
-    * otherwise, pruned on buckets alone).
+  /** The pruned store read behind every store-backed `graft.Engine`
+    * request: `metrics`' raw rows ([[storeScan]]), within `window` when
+    * one is given (every date otherwise, pruned on buckets alone).
     *
-    * The store is read with a DECLARED schema — [[Ingest.storeSchema]]
-    * plus the partition columns — so no read runs a schema-inference
-    * job, and the layout is decided by the `_buckets` marker
-    * ([[recordOrCheckBuckets]]), never by inspecting the store's
-    * columns: a marker means the (pb, pd) layout, pruned by bucket and
-    * date at the marker's count (`buckets`, when given, must match it —
-    * a reader at the wrong count silently misses rows); no marker means
-    * a legacy layout (flat, or `metric=`-partitioned), which still reads
-    * with the row-level predicates alone and whatever pruning that
-    * layout supports, so readers keep working mid-migration. */
+    * On the (pb, pd) layout the bucket equality and date-range predicates
+    * bind to the PARTITION columns, so the scan lists and opens only the
+    * metrics' bucket directories × the dates overlapping the window —
+    * `PartitionFilters` in the plan, pinned by PlanSpec and IngestSpec —
+    * at the marker's count (`buckets`, when given, must match it: a
+    * reader at the wrong count silently misses rows). Callers pass the
+    * STEP-ALIGNED window: the read cores widen a request to those
+    * bounds, so pruning on the raw window would drop rows the alignment
+    * includes. A legacy layout reads with the row-level metric/ts
+    * predicates alone (pushed to parquet row groups on every layout), so
+    * readers keep working mid-migration. Output schema = the points
+    * schema, so this composes directly with the `SeriesOps` read cores. */
   private[graft] def storeRead(spark: SparkSession, storeDir: String,
                                metrics: Seq[String],
                                window: Option[(Long, Long)],
                                buckets: Option[Int]): DataFrame = {
-    val recorded = recordedBuckets(spark, storeDir)
+    val (scan, recorded) = storeScan(spark, storeDir)
     for (n <- recorded; b <- buckets) checkBuckets(storeDir, n, b)
     val inWindow = window.map { case (f, u) => col("ts") >= f && col("ts") < u }
     val rows = col("metric").isin(metrics: _*) +: inWindow.toSeq
-    val pruned = recorded match {
-      case None => spark.read.schema(Ingest.storeSchema).parquet(storeDir)
-      case Some(n) =>
-        val inDates = window.map { case (f, u) =>
-          col("pd") >= utcDate(lit(f)) && col("pd") <= utcDate(lit(u - 1))
-        }
-        val parts = col("pb").isin(metrics.map(metricBucket(_, n)).distinct: _*) +:
-          inDates.toSeq
-        spark.read.schema(Ingest.storeSchema
-            .add("pb", LongType).add("pd", DateType))
-          .parquet(storeDir)
-          .where(parts.reduce(_ && _))
+    val pruned = recorded.fold(scan) { n =>
+      val inDates = window.map { case (f, u) =>
+        col("pd") >= utcDate(lit(f)) && col("pd") <= utcDate(lit(u - 1))
+      }
+      val parts = col("pb").isin(metrics.map(metricBucket(_, n)).distinct: _*) +:
+        inDates.toSeq
+      scan.where(parts.reduce(_ && _))
     }
     pruned.where(rows.reduce(_ && _)).select("metric", "step", "ts", "value")
-  }
-
-  /** [[SeriesOps.fetchPattern]] SERVED FROM the (pb, pd) store layout:
-    * glob matches resolve from metadata (an O(matches) driver list —
-    * partition pruning needs planning-time literals, the probe-cell
-    * contract), then ONE pruned scan feeds the multi-metric
-    * reconcile+densify. Shares `fetch_pattern`'s oracle — identical
-    * answer to the flat-scan read. */
-  def fetchPatternStore(spark: SparkSession, dir: String, pattern: String,
-                        from: Long, until: Long): DataFrame = {
-    val store = graft.core.BuildOnce.dir(spark, "graft_points_store", dir) {
-      path => Ingest.appendToStore(Catalog.pointsCached(spark, dir), path)
-    }
-    val f = graft.core.Kernel.align(from, Catalog.Step)
-    val u = graft.core.Kernel.alignUntil(until, Catalog.Step)
-    val meta = Catalog.metricsMeta(spark)
-    val rx = graft.core.Kernel.globToRegex(pattern)
-    val metrics = meta.where(col("metric").rlike(rx))
-      .select("metric").collect().map(_.getString(0)).toSeq
-    SeriesOps.fetchPatternFrom(
-      prunedReadMetrics(spark, store, metrics, f, u),
-      meta, pattern, from, until)
-  }
-
-  /** Registered face of the pruned points-store read — `fetch_range`
-    * SERVED FROM a (pb, pd)-bucketed store layout: the store is
-    * BuildOnce-written per JVM per corpus via [[Ingest.appendToStore]]
-    * (the same build-once contract as `VectorOps.annIvfTopkStoreQuery`
-    * and the feature indexes — in production the ingest side maintains
-    * the layout; queries only read it), and the step-aligned window is
-    * served through [[prunedRead]], so the scan lists and opens only the
-    * metric's bucket directory × the overlapping dates
-    * (`PartitionFilters`, pinned in PlanSpec on THIS query). This is
-    * every range read's at-100 TB shape — the partition-pruning analog
-    * of the reference's byte-offset slice seek (`ceres.py`
-    * `CeresSlice.read` ≈L710) — and the answer is identical to the
-    * flat-scan `fetch_range`, so it shares that query's oracle SQL. */
-  def fetchRangeStore(spark: SparkSession, dir: String, metric: String,
-                      from: Long, until: Long): DataFrame = {
-    val store = graft.core.BuildOnce.dir(spark, "graft_points_store", dir) {
-      path => Ingest.appendToStore(Catalog.pointsCached(spark, dir), path)
-    }
-    val f = graft.core.Kernel.align(from, Catalog.Step)
-    val u = graft.core.Kernel.alignUntil(until, Catalog.Step)
-    SeriesOps.fetchRangeFrom(
-      prunedRead(spark, store, metric, f, u),
-      Catalog.metricsMeta(spark), metric, from, until)
-  }
-
-  /** The FLAGSHIP dense-grid read served from the (pb, pd) layout —
-    * [[fetchRangeStore]]'s shape with `densify_grid`'s result contract
-    * (and its oracle): one pruned scan, reconcile, grid padding. */
-  def densifyGridStore(spark: SparkSession, dir: String, metric: String,
-                       from: Long, until: Long): DataFrame = {
-    val store = graft.core.BuildOnce.dir(spark, "graft_points_store", dir) {
-      path => Ingest.appendToStore(Catalog.pointsCached(spark, dir), path)
-    }
-    val f = graft.core.Kernel.align(from, Catalog.Step)
-    val u = graft.core.Kernel.alignUntil(until, Catalog.Step)
-    SeriesOps.densifyGridFrom(
-      prunedRead(spark, store, metric, f, u),
-      Catalog.metricsMeta(spark), metric, from, until)
   }
 
   /** CLI argument parsing, separated so the contract is testable without
@@ -535,15 +461,21 @@ object Maintenance {
     val meta = metaOpt.getOrElse(Catalog.metricsMeta(spark))
     val configs = retentionConfigs(meta).filter(_._2.nonEmpty)
     if (configs.isEmpty) return
+    // the layout check comes BEFORE the marker write: a marker on a store
+    // without the (pb, pd) layout would make every later pruned read
+    // filter on null pb/pd and return no rows
+    val root = new org.apache.hadoop.fs.Path(storeDir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    require(fs.exists(root) &&
+      fs.listStatus(root).exists(_.getPath.getName.startsWith("pb=")),
+      s"runPruned needs the (pb, pd) compacted layout: $storeDir")
     recordOrCheckBuckets(spark, storeDir, buckets)
 
     // phase 1: dates holding band-matched rows + their cascade floor
     // dates. This discovery read is NOT the rewrite's input (phase 2
     // re-reads below) — so the steady-state no-op pass costs one
     // partition discovery and no file snapshot.
-    val discover = spark.read.parquet(storeDir)
-    require(Seq("pb", "pd").forall(discover.columns.contains),
-      s"runPruned needs the (pb, pd) compacted layout: $storeDir")
+    val (discover, _) = storeScan(spark, storeDir)
     import spark.implicits._
     val cfgBands = configs.flatMap { case (cfg, tiers) =>
       bands(now, tiers).map { case (t, start, _) => (cfg, t.precision, start) }
@@ -564,7 +496,7 @@ object Maintenance {
     if (affectedDates.isEmpty) return
 
     // snapshot (pb dir, pd dir) -> data files BEFORE the phase-2 store
-    // DataFrame exists: spark.read.parquet captures its file listing at
+    // DataFrame exists: opening the store captures its file listing at
     // read time, so a snapshot taken after it could include a file
     // appended AFTER the read — in the snapshot but absent from
     // `maintained`, i.e. eligible for the empty-partition delete below.
@@ -572,8 +504,6 @@ object Maintenance {
     // old as the rewrite's input. Foreign directory names (no pb=/pd=
     // prefix) are skipped by construction — no partition-value parsing
     // that could abort the cleanup loop.
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val preSnapshot: Map[(String, String), Seq[String]] = (for {
       pbDir <- fs.listStatus(root).toSeq
       if pbDir.getPath.getName.startsWith("pb=")
@@ -585,7 +515,7 @@ object Maintenance {
     // phase 2: maintain the affected partitions only, write them back —
     // over a FRESH read whose listing is at least as new as the snapshot
     // (the empty-partition delete removes only snapshot-listed files)
-    val store = spark.read.parquet(storeDir)
+    val (store, _) = storeScan(spark, storeDir)
     val view = Ingest.dedupe(store.where(col("pd").isInCollection(affectedDates)))
     val maintained = maintainPerNode(view, meta, now)
       .withColumn("pb", pmod(xxhash64(col("metric")), lit(buckets.toLong)))

@@ -306,7 +306,7 @@ class EngineReadSpec extends AnyFunSuite {
     // the layout self-describes its bucket count: a reader passing
     // another one fails instead of silently missing rows
     intercept[IllegalArgumentException] {
-      Maintenance.prunedRead(spark, storeDir, m, From, Until, buckets = 4)
+      Maintenance.storeRead(spark, storeDir, Seq(m), Some((From, Until)), Some(4))
     }
   }
 }

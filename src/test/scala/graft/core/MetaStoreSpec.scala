@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.{Engine, SparkTestBase}
 import MetaStore.Retention
 
-/** The metadata log: declared-schema reads and the one-job lookup. */
+/** The metadata log: declared-schema reads and last-writer-wins resolution. */
 class MetaStoreSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
@@ -51,28 +51,25 @@ class MetaStoreSpec extends AnyFunSuite {
     val want = rows(MetaStore.read(spark, putOnly))
     assert(want.map(_.getString(0)) === Seq("svc.a", "svc.b", "web.c", "web.d"))
     assert(rows(MetaStore.read(spark, mixed)) === want)
-    assert(rows(MetaStore.lookup(spark, mixed, lit(true))) === want)
   }
 
-  test("lookup equals read.where(pred) under updates and tombstones") {
-    val dir = tmpLog("meta-lookup")
+  test("read resolves last-writer-wins under updates and tombstones") {
+    val dir = tmpLog("meta-read")
     history(dir)
-    val preds = Seq(
-      col("metric") === "svc.a",          // updated
-      col("metric") === "svc.b",          // tombstoned
-      col("metric") === "svc.nope",       // unknown
-      col("metric").rlike(Kernel.globToRegex("svc.*")),
-      col("metric").rlike(Kernel.globToRegex("*.?")),
-      lit(true))
-    for (p <- preds) {
-      val got = MetaStore.lookup(spark, dir, p).collect().toSeq
-      assert(got === rows(MetaStore.read(spark, dir).where(p)), p.toString)
-    }
-    val a = MetaStore.lookup(spark, dir, col("metric") === "svc.a").head()
+    // svc.a reads its update, the tombstoned svc.b is gone
+    val got = rows(MetaStore.read(spark, dir))
+    assert(got.map(_.getString(0)) === Seq("svc.a", "web.c"))
+    val a = got.head
     assert(a.getLong(1) === 300L && a.getString(2) === "min" &&
+      a.getDouble(3) === 0.75 &&
       a.getSeq[Row](4).map(r => (r.getLong(0), r.getLong(1))) === Seq((3600L, 24L)))
+    // a re-created node reads its newest write
+    more(dir)
+    val b = MetaStore.read(spark, dir).where(col("metric") === "svc.b").collect()
+    assert(b.map(r => (r.getString(2), r.getSeq[Row](4).size)).toSeq ===
+      Seq(("sum", 2)))
     // a log that does not exist yet resolves to no nodes
-    assert(MetaStore.lookup(spark, tmpLog("meta-none"), lit(true)).isEmpty)
+    assert(MetaStore.read(spark, tmpLog("meta-none")).isEmpty)
   }
 
   test("unknown or tombstoned nodes raise NodeNotFound before any store read") {

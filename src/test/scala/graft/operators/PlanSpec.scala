@@ -204,7 +204,8 @@ class PlanSpec extends AnyFunSuite {
     // two-day read of one metric over the month-long five-metric store
     val from = SeriesOps.From
     val until = SeriesOps.From + 2 * 86400L
-    val df = Maintenance.prunedRead(spark, dest, "events.purchase", from, until)
+    val df = Maintenance.storeRead(spark, dest, Seq("events.purchase"),
+      Some((from, until)), Some(Maintenance.MetricBuckets))
     val p = plan(df)
     // NOTE: Spark may truncate the filter list in the plan string (long
     // attribute ids push it past the toString field budget), so inspect a
@@ -228,7 +229,8 @@ class PlanSpec extends AnyFunSuite {
 
     // and the general read composes over the pruned scan
     val fetched = SeriesOps.fetchRangeFrom(
-      Maintenance.prunedRead(spark, dest, "events.purchase", from, until),
+      Maintenance.storeRead(spark, dest, Seq("events.purchase"),
+        Some((from, until)), Some(Maintenance.MetricBuckets)),
       graft.core.Catalog.metricsMeta(spark), "events.purchase", from, until)
     assert(fetched.count() > 0)
   }
@@ -302,27 +304,20 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("fetch_pattern_store: one PartitionFilters-pruned scan, flat parity") {
-    // the registered face checkpoints the reconcile (lineage truncated),
-    // so the scan shape is asserted on the pruned read it consumes
-    val store = graft.core.BuildOnce.dir(spark, "graft_points_store",
-      Sf0001) { path => graft.streaming.Ingest.appendToStore(
-        graft.core.Catalog.pointsCached(spark, Sf0001), path) }
-    val f = graft.core.Kernel.align(SeriesOps.From, graft.core.Catalog.Step)
-    val u = graft.core.Kernel.alignUntil(SeriesOps.Until,
-      graft.core.Catalog.Step)
-    val metrics = Seq("events.purchase", "events.view", "events.click",
-      "events.signup", "events.error")
-    val pruned = graft.streaming.Maintenance.prunedReadMetrics(
-      spark, store, metrics, f, u)
-    val p = plan(pruned)
+    // the REGISTERED face (Engine.fetchPattern over the BuildOnce store):
+    // one store scan, its bucket and date predicates bound to the (pb, pd)
+    // partition columns
+    val df = graft.SparkEntry.queries("fetch_pattern_store")(spark, Sf0001)
+    val p = plan(df)
+    assert("FileScan parquet".r.findAllMatchIn(p).size === 1,
+      s"expected one store scan:\n$p")
     val idx = p.indexOf("PartitionFilters: [")
     assert(idx >= 0, s"expected PartitionFilters on the store scan:\n$p")
     val pf = p.substring(idx, math.min(p.length, idx + 250))
-    assert(!pf.startsWith("PartitionFilters: []") && pf.contains("pb"),
-      s"bucket predicates must bind to the partition columns: $pf")
+    assert(!pf.startsWith("PartitionFilters: []") &&
+      pf.contains("pb") && pf.contains("pd"),
+      s"bucket and date predicates must bind to the partition columns: $pf")
     // end-to-end parity with the flat-scan pattern read
-    val df = graft.streaming.Maintenance.fetchPatternStore(spark, Sf0001,
-      "events.*", SeriesOps.From, SeriesOps.Until)
     val expect = SeriesOps.fetchPattern(spark, Sf0001, "events.*",
       SeriesOps.From, SeriesOps.Until).collect().map(_.toString).toSeq
     assert(df.collect().map(_.toString).toSeq === expect)
@@ -411,11 +406,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("registered fetch_range_store serves the window partition-pruned") {
-    // the REGISTERED store-served range read (not just the raw
-    // prunedRead): both the metric-bucket and date predicates must bind
-    // to the (pb, pd) partition columns of the BuildOnce-written store
-    val df = graft.streaming.Maintenance.fetchRangeStore(spark, Sf0001,
-      "events.purchase", SeriesOps.From, SeriesOps.Until)
+    // the REGISTERED store-served range read (Engine.fetchSparse, not
+    // just the raw storeRead): both the metric-bucket and date predicates
+    // must bind to the (pb, pd) partition columns of the BuildOnce store
+    val df = graft.SparkEntry.queries("fetch_range_store")(spark, Sf0001)
     val p = plan(df)
     val idx = p.indexOf("PartitionFilters: [")
     assert(idx >= 0, s"expected PartitionFilters in the store scan:\n$p")

@@ -14,6 +14,12 @@ class IngestSpec extends AnyFunSuite {
   private def tmp(name: String): String =
     Files.createTempDirectory(s"graft-$name").toString
 
+  /** `metric`'s raw rows in [from, until), read at `buckets`. */
+  private def pruned(store: String, metric: String, from: Long, until: Long,
+                     buckets: Int = Maintenance.MetricBuckets) =
+    Maintenance.storeRead(spark, store, Seq(metric), Some((from, until)),
+      Some(buckets))
+
   test("streaming ingest compacts each batch and defers cross-batch dedup") {
     import spark.implicits._
     val src = tmp("src"); val sink = tmp("sink"); val ckpt = tmp("ckpt")
@@ -62,7 +68,7 @@ class IngestSpec extends AnyFunSuite {
     assert(new java.io.File(s"$sink/pb=$pbA/pd=1970-01-01").isDirectory)
     assert(!new java.io.File(s"$sink/metric=a").exists)
     // a (metric, range) read of the STREAM-ingested store partition-prunes
-    val plan = Maintenance.prunedRead(spark, sink, "a", 0L, 3600L)
+    val plan = pruned(sink, "a", 0L, 3600L)
       .queryExecution.executedPlan.toString
     val idx = plan.indexOf("PartitionFilters: [")
     assert(idx >= 0, s"expected PartitionFilters in scan:\n$plan")
@@ -71,14 +77,14 @@ class IngestSpec extends AnyFunSuite {
       pf.contains("pb") && pf.contains("pd"),
       s"bucket and date predicates must reach the partition filter: $pf")
     // and the pruned read returns exactly metric a's compacted points
-    assert(Maintenance.prunedRead(spark, sink, "a", 0L, 3600L).collect()
+    assert(pruned(sink, "a", 0L, 3600L).collect()
       .map(r => (r.getString(0), r.getLong(2), r.getDouble(3))).toSeq ===
       Seq(("a", 60L, 1.0)))
     // legacy metric-partitioned stores still read mid-migration
     val legacy = tmp("plegacy") + "/store"
     Seq(("a", 60L, 60L, 1.0)).toDF("metric", "step", "ts", "value")
       .write.partitionBy("metric").parquet(legacy)
-    assert(Maintenance.prunedRead(spark, legacy, "a", 0L, 3600L)
+    assert(pruned(legacy, "a", 0L, 3600L)
       .count() === 1L)
   }
 
@@ -103,7 +109,7 @@ class IngestSpec extends AnyFunSuite {
         assert(new java.io.File(s"$sink/pb=$pb/pd=$pd").isDirectory,
           s"writer must land $m in its bucket at $buckets buckets")
         for (store <- Seq(sink, dest))
-          assert(Maintenance.prunedRead(spark, store, m, 0L, 200000L, buckets)
+          assert(pruned(store, m, 0L, 200000L, buckets)
             .collect().map(r => (r.getString(0), r.getLong(2), r.getDouble(3)))
             .toSeq === Seq((m, ts, v)),
             s"pruned read of $m must see its row at $buckets buckets")
@@ -138,7 +144,7 @@ class IngestSpec extends AnyFunSuite {
       val pb = Maintenance.metricBucket(m, buckets)
       assert(new java.io.File(s"$sink/pb=$pb/pd=1970-01-01").isDirectory,
         s"$m must land in its configured bucket")
-      assert(Maintenance.prunedRead(spark, sink, m, 0L, 86400L, buckets)
+      assert(pruned(sink, m, 0L, 86400L, buckets)
         .collect().map(r => (r.getString(0), r.getLong(2), r.getDouble(3)))
         .toSeq === Seq((m, ts, v)))
     }
@@ -160,14 +166,14 @@ class IngestSpec extends AnyFunSuite {
       Ingest.appendToStore(batch, sink, buckets = 16)
     }
     intercept[IllegalArgumentException] {
-      Maintenance.prunedRead(spark, sink, "m", 0L, 86400L, buckets = 16)
+      pruned(sink, "m", 0L, 86400L, buckets = 16)
     }
     // matching count keeps working; marker-less legacy dirs check nothing
-    assert(Maintenance.prunedRead(spark, sink, "m", 0L, 86400L, buckets = 4)
+    assert(pruned(sink, "m", 0L, 86400L, buckets = 4)
       .count() === 1)
     val legacy = tmp("marker-legacy") + "/store"
     batch.write.parquet(legacy)
-    assert(Maintenance.prunedRead(spark, legacy, "m", 0L, 86400L).count() === 1)
+    assert(pruned(legacy, "m", 0L, 86400L).count() === 1)
   }
 
   test("compactStore validates the layout contract BEFORE overwriting") {
@@ -182,7 +188,7 @@ class IngestSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Maintenance.compactStore(spark, src, dest, buckets = 16)
     }
-    assert(Maintenance.prunedRead(spark, dest, "m", 0L, 86400L, buckets = 4)
+    assert(pruned(dest, "m", 0L, 86400L, buckets = 4)
       .count() === 1, "failed rewrite must leave the store readable")
   }
 
@@ -207,7 +213,7 @@ class IngestSpec extends AnyFunSuite {
     Maintenance.compactStore(spark, src, dest, buckets = 4)
     assert(!oldF.exists, "superseded backup must be cleared")
     assert(new java.io.File(dest, "_buckets").isFile)
-    assert(Maintenance.prunedRead(spark, dest, "m", 0L, 86400L, buckets = 4)
+    assert(pruned(dest, "m", 0L, 86400L, buckets = 4)
       .collect().map(r => (r.getString(0), r.getDouble(3))).toSeq ===
       Seq(("m", 1.0)))
   }

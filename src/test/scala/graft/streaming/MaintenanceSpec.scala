@@ -105,16 +105,22 @@ class MaintenanceSpec extends AnyFunSuite {
       .toMap
   }
 
-  test("runPruned rewrites only band-affected partitions; steady state writes nothing") {
+  /** Metric `m` on an hourly-then-daily ladder. */
+  private def hourlyDailyMeta = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pruned")
-      .toString + "/store"
-    val meta = Seq(("m", 3600L, "sum", 0.0, Seq((3600L, 24L), (86400L, 4L))))
+    Seq(("m", 3600L, "sum", 0.0, Seq((3600L, 24L), (86400L, 4L))))
       .toDF("metric", "timeStep", "aggregationMethod", "xFilesFactor",
         "rawRetentions")
       .withColumn("retentions",
         expr("transform(rawRetentions, r -> struct(r._1 AS precision, r._2 AS points))"))
       .drop("rawRetentions")
+  }
+
+  test("runPruned rewrites only band-affected partitions; steady state writes nothing") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_pruned")
+      .toString + "/store"
+    val meta = hourlyDailyMeta
     val now = 1706659200L // 2024-01-31 00:00 UTC
     // bands: hourly [Jan 30, Jan 31), daily [Jan 26, Jan 30)
     val pts = Seq(
@@ -165,6 +171,25 @@ class MaintenanceSpec extends AnyFunSuite {
     // steady state: a second pass finds no dirty rows and writes NOTHING
     Maintenance.runPruned(spark, tmp, now, Some(meta))
     assert(snapshot(tmp) === after, "steady-state pass must not touch any file")
+  }
+
+  test("runPruned refuses a store without the (pb, pd) layout and leaves it unmarked") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_flat")
+      .toString + "/store"
+    Seq(("m", 3600L, 1706572800L, 1.0), ("m", 3600L, 1706400000L, 3.0))
+      .toDF("metric", "step", "ts", "value").write.parquet(tmp)
+    val e = intercept[IllegalArgumentException] {
+      Maintenance.runPruned(spark, tmp, 1706659200L, Some(hourlyDailyMeta))
+    }
+    assert(e.getMessage.contains("(pb, pd) compacted layout"))
+    // a marker would declare the (pb, pd) layout: every later read would
+    // filter on null pb/pd and return no rows
+    assert(!new java.io.File(tmp, "_buckets").exists,
+      "a refused pass must not mark the store")
+    assert(Maintenance.storeRead(spark, tmp, Seq("m"),
+      Some((0L, 2000000000L)), None).count() === 2)
+    assert(Ingest.storeView(spark, tmp).count() === 2)
   }
 
   test("maintainPerNode builds each metric's bands from ITS OWN retentions") {
