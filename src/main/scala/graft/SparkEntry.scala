@@ -2254,22 +2254,29 @@ object SparkEntry {
         .otherwise(ladder(PerNodeTiersB)))
   }
 
+  private val storeEngines =
+    new java.util.concurrent.ConcurrentHashMap[String, Engine]()
+
   /** The harness corpus served as a real store, through the user-facing
     * [[Engine.openStore]]: the (pb, pd) points store and a metadata log
     * holding [[graft.core.Catalog.metricsMeta]] (the form
     * `MetaStore.compact` writes), each BuildOnce-written per JVM per
     * corpus — in production the ingest side maintains both; queries only
-    * read them. The `_store` faces are this engine's requests. */
-  private def storeEngine(s: SparkSession, d: String): Engine = {
-    import graft.core.{BuildOnce, Catalog, MetaStore}
-    val store = BuildOnce.dir(s, "graft_points_store", d) { path =>
-      graft.streaming.Ingest.appendToStore(Catalog.pointsCached(s, d), path)
-    }
-    val meta = BuildOnce.dir(s, "graft_points_meta", d) { path =>
-      MetaStore.writeResolved(Catalog.metricsMeta(s), path)
-    }
-    Engine.openStore(s, store, meta)
-  }
+    * read them. The `_store` faces are this engine's requests. One engine
+    * is held per (application, corpus), keyed as `Catalog.appCached`
+    * keys its tables, the way a user holds one: its node table resolves
+    * the metadata log once, and each later request only revalidates it. */
+  private def storeEngine(s: SparkSession, d: String): Engine =
+    storeEngines.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
+      import graft.core.{BuildOnce, Catalog, MetaStore}
+      val store = BuildOnce.dir(s, "graft_points_store", d) { path =>
+        graft.streaming.Ingest.appendToStore(Catalog.pointsCached(s, d), path)
+      }
+      val meta = BuildOnce.dir(s, "graft_points_meta", d) { path =>
+        MetaStore.writeResolved(Catalog.metricsMeta(s), path)
+      }
+      Engine.openStore(s, store, meta)
+    })
 
   /** Flagship query on sf=0.001: dense hourly grid of events.purchase over
     * the read window — scan, align, max-wins compact, reconcile, grid

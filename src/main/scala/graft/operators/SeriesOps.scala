@@ -145,8 +145,7 @@ object SeriesOps {
 
     /** Plan-time literals and the broadcast join of `meta`. */
     def literals(meta: DataFrame, from: Long, until: Long): ReadInputs = {
-      val f = Kernel.align(from, Step)
-      val u = Kernel.alignUntil(until, Step)
+      val (f, u) = aligned(from, until)
       ReadInputs(f, u, lit(f), lit(u - 1), Left(meta))
     }
 
@@ -157,14 +156,36 @@ object SeriesOps {
       * same entry. */
     def mapped(methods: Seq[(String, String)], from: Long,
                until: Long): ReadInputs = {
-      val f = Kernel.align(from, Step)
-      val u = Kernel.alignUntil(until, Step)
+      val (f, u) = aligned(from, until)
       val keys = typedLit(methods.map { case (m, method) =>
         m -> ((method, f, u - 1)) }.toMap)
       def at(field: String): Column =
         element_at(keys, col("metric")).getField(field)
       ReadInputs(f, u, at("_2"), at("_3"), Right(at("_1")))
     }
+  }
+
+  /** The step-aligned read window [f, u) of [from, until]: `CeresNode.read`'s
+    * bounds ([[Kernel.align]], [[Kernel.alignUntil]]). */
+  private def aligned(from: Long, until: Long): (Long, Long) =
+    (Kernel.align(from, Step), Kernel.alignUntil(until, Step))
+
+  /** Every metric's points in the aligned window: the one scan of each
+    * cross-series window read (the selection family, percentiles,
+    * regressions, per-slot rollups). */
+  private def windowPoints(spark: SparkSession, dir: String, from: Long,
+                           until: Long): DataFrame = {
+    val (f, u) = aligned(from, until)
+    Catalog.pointsCached(spark, dir).where(col("ts") >= f && col("ts") < u)
+  }
+
+  /** The aligned window's slot grid, one `ts` row per step: the padding
+    * of the per-slot rollups ([[seriesCount]], [[seriesRangeOfSeries]],
+    * [[seriesStddevSeries]]). */
+  private def slotGrid(spark: SparkSession, from: Long,
+                       until: Long): DataFrame = {
+    val (f, u) = aligned(from, until)
+    spark.range(f, u, Step).toDF("ts")
   }
 
   /** Per-metric aggregation-method dispatch used by the read-path reconcile
@@ -361,7 +382,7 @@ object SeriesOps {
   }
 
   /** The multi-series read core shared by [[fetchPatternFrom]] and the
-    * series-selection functions ([[seriesAverageAbove]]): every metric in
+    * series-selection faces ([[selected]]): every metric in
     * `matched` reconciled to its own coarsest step and densified onto its
     * own grid, one (metric, ts, value) frame. `matched` must be a
     * metadata-sized (metric) relation — it broadcasts onto the point
@@ -737,37 +758,306 @@ object SeriesOps {
       .orderBy("ts")
   }
 
-  /** `highestAverage(seriesList, n)` analog (graphite-web
-    * render/functions.py): the n metrics with the highest in-window mean
-    * value, ranked — the "which services are hottest this week"
-    * cross-series read, and the first MULTI-metric operator shape (the
-    * single-series reads filter to one metric; this aggregates them
-    * all).
-    *
-    * Scale: one pruned scan of the window (all metrics), a map-side-
-    * combinable groupBy(metric) onto the O(#metrics) summary table, and
-    * a top-n over that metadata-sized result — no window function over
-    * point data, no per-metric loop. Parity: per-metric means sum
-    * INTEGER MICRO-UNITS (order-independent; a float sum's accumulation
-    * order differs between engines and a flipped 15th decimal would
-    * reorder near-tied ranks); ties break on metric name. */
-  def seriesTopMetrics(spark: SparkSession, dir: String,
-                       from: Long, until: Long, n: Int = 3): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
+  // ————— series selection (highest / lowest / sortBy / filterSeries) —————
+  //
+  // graphite-web writes this family once: `highestMax`, `lowestCurrent`
+  // and the rest are `highest`/`lowest(seriesList, n, func)`, and
+  // `averageAbove`, `maximumBelow` and the rest are `filterSeries(
+  // seriesList, func, operator, threshold)`. So here: one window scan
+  // ([[windowPoints]]), one per-metric statistic per `func`, and one of
+  // two tails — [[ranked]] or [[filtered]]. Scale: the statistic is a
+  // map-side-combinable groupBy(metric) onto O(#metrics) rows; the rank
+  // window and the gate run on that rollup only, never on point data.
+  //
+  // Each statistic maps the window to one row per metric. Means and
+  // totals sum INTEGER MICRO-UNITS and σ sums MILLI-unit moments
+  // (micro-unit squares would overflow a long): exact at any summation
+  // order, so near-tied ranks and gates agree across engines. Extremes,
+  // the newest point and counts are comparison-only.
+
+  /** The mean, `avg_value`. */
+  private def avgValue(pts: DataFrame): DataFrame =
+    pts.withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
       .groupBy("metric")
       .agg((sum("vm").cast("double") / count("vm") / lit(1e6)).as("avg_value"))
-      // cast: Spark's row_number is INT, DuckDB's BIGINT — the driver
-      // compares schemas
+
+  /** The newest point: `current_value` at `current_ts`, the max ts (the
+    * compacted store holds one value per (metric, ts), so the pick is
+    * unique). */
+  private def currentValue(pts: DataFrame): DataFrame =
+    pts.groupBy("metric")
+      .agg(max_by(col("value"), col("ts")).as("current_value"),
+        max("ts").as("current_ts"))
+
+  /** The peak, `max_value`. */
+  private def maxValue(pts: DataFrame): DataFrame =
+    pts.groupBy("metric").agg(max("value").as("max_value"))
+
+  /** The trough, `min_value`. */
+  private def minValue(pts: DataFrame): DataFrame =
+    pts.groupBy("metric").agg(min("value").as("min_value"))
+
+  /** The sum, `total_value`. */
+  private def totalValue(pts: DataFrame): DataFrame =
+    pts.withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
+      .groupBy("metric")
+      .agg((sum("vm").cast("double") / lit(1e6)).as("total_value"))
+
+  /** The population standard deviation, `sigma` = √(n·s2 − s1²)/n: one
+    * fixed closing IEEE sequence from the exact milli-unit sums. */
+  private def sigma(pts: DataFrame): DataFrame =
+    pts.withColumn("km", floor(col("value") * lit(1e3) + lit(0.5)).cast("long"))
+      .groupBy("metric")
+      .agg(count(lit(1)).as("n"), sum("km").as("s1"),
+        sum(col("km") * col("km")).as("s2"))
+      .withColumn("sigma",
+        q6(sqrt((col("n") * col("s2") - col("s1") * col("s1"))
+          .cast("double")) / col("n") / lit(1e3)))
+
+  /** The present-point count, `present` (a present point IS a non-null
+    * slot: gaps are absent rows). */
+  private def present(pts: DataFrame): DataFrame =
+    pts.groupBy("metric").agg(count(lit(1)).as("present"))
+
+  /** graphite's `highest` / `lowest` / `sortBy`: the window's metrics
+    * ranked by `order` over their statistic `stat`, ties to the metric
+    * name, the first `n` when given — (rnk, metric, shown…). `rnk` is
+    * cast to long: Spark's row_number is INT, DuckDB's BIGINT, and the
+    * driver compares schemas. */
+  private def ranked(spark: SparkSession, dir: String, from: Long,
+                     until: Long)(stat: DataFrame => DataFrame, order: Column,
+                                  n: Option[Int], shown: String*): DataFrame = {
+    val r = stat(windowPoints(spark, dir, from, until))
       .withColumn("rnk", row_number().over(
-        Window.orderBy(desc("avg_value"), col("metric"))).cast("long"))
-      .where(col("rnk") <= n)
-      .select("rnk", "metric", "avg_value")
+        Window.orderBy(order, col("metric"))).cast("long"))
+    n.fold(r)(k => r.where(col("rnk") <= k))
+      .select("rnk", "metric" +: shown: _*)
       .orderBy("rnk")
   }
+
+  /** graphite's `filterSeries`: the window's metrics whose statistic
+    * `stat` passes `keep`, read through [[selected]]. */
+  private def filtered(spark: SparkSession, dir: String, from: Long,
+                       until: Long)(stat: DataFrame => DataFrame,
+                                    keep: Column): DataFrame =
+    selected(spark, dir, stat(windowPoints(spark, dir, from, until))
+      .where(keep).select("metric"), from, until)
+
+  /** The dense grids of the metrics in `kept`, a metadata-sized (metric)
+    * relation: the render path's multi-series read core
+    * ([[fetchForMetrics]]), so a selection cannot drift from
+    * `fetch_pattern`. */
+  private def selected(spark: SparkSession, dir: String, kept: DataFrame,
+                       from: Long, until: Long): DataFrame =
+    fetchForMetrics(Catalog.pointsCached(spark, dir),
+      Catalog.metricsMeta(spark), kept, from, until)
+
+  /** `highestAverage(seriesList, n)` (graphite-web): the n metrics with
+    * the highest in-window mean — "which services are hottest this
+    * week". */
+  def seriesTopMetrics(spark: SparkSession, dir: String,
+                       from: Long, until: Long, n: Int = 3): DataFrame =
+    ranked(spark, dir, from, until)(avgValue, desc("avg_value"), Some(n),
+      "avg_value")
+
+  /** `lowestAverage(seriesList, n)` (graphite-web): the n metrics with
+    * the lowest in-window mean — "which services went quiet". */
+  def seriesLowestAverage(spark: SparkSession, dir: String,
+                          from: Long, until: Long, n: Int = 3): DataFrame =
+    ranked(spark, dir, from, until)(avgValue, col("avg_value"), Some(n),
+      "avg_value")
+
+  /** `highestCurrent(seriesList, n)` (graphite-web): the n metrics whose
+    * newest in-window value is highest — "what's hot right now". */
+  def seriesHighestCurrent(spark: SparkSession, dir: String,
+                           from: Long, until: Long, n: Int = 3): DataFrame =
+    ranked(spark, dir, from, until)(currentValue, desc("current_value"),
+      Some(n), "current_ts", "current_value")
+
+  /** `lowestCurrent(seriesList, n)` (graphite-web): the n metrics whose
+    * newest in-window value is lowest — "what went quiet just now". */
+  def seriesLowestCurrent(spark: SparkSession, dir: String,
+                          from: Long, until: Long, n: Int = 3): DataFrame =
+    ranked(spark, dir, from, until)(currentValue, col("current_value"),
+      Some(n), "current_ts", "current_value")
+
+  /** `highestMax(seriesList, n)` (graphite-web): the n metrics with the
+    * largest in-window peak — "which services spiked hardest". */
+  def seriesHighestMax(spark: SparkSession, dir: String,
+                       from: Long, until: Long, n: Int = 3): DataFrame =
+    ranked(spark, dir, from, until)(maxValue, desc("max_value"), Some(n),
+      "max_value")
+
+  /** `sortByMaxima(seriesList)` (graphite-web): every metric ranked by
+    * its in-window peak, descending (the panel ordering function). */
+  def seriesSortByMaxima(spark: SparkSession, dir: String,
+                         from: Long, until: Long): DataFrame =
+    ranked(spark, dir, from, until)(maxValue, desc("max_value"), None,
+      "max_value")
+
+  /** `sortByMinima(seriesList)` (graphite-web): every metric ranked by
+    * its in-window trough, ascending. */
+  def seriesSortByMinima(spark: SparkSession, dir: String,
+                         from: Long, until: Long): DataFrame =
+    ranked(spark, dir, from, until)(minValue, col("min_value"), None,
+      "min_value")
+
+  /** `sortByTotal(seriesList)` (graphite-web): every metric ranked by its
+    * in-window sum, descending — "who consumed the most this week". */
+  def seriesSortByTotal(spark: SparkSession, dir: String,
+                        from: Long, until: Long): DataFrame =
+    ranked(spark, dir, from, until)(totalValue, desc("total_value"), None,
+      "total_value")
+
+  /** `mostDeviant(seriesList, n)` (graphite-web): the n metrics with the
+    * largest in-window standard deviation — "which metrics are the
+    * noisiest". */
+  def seriesMostDeviant(spark: SparkSession, dir: String,
+                        from: Long, until: Long, n: Int = 3): DataFrame =
+    ranked(spark, dir, from, until)(sigma, desc("sigma"), Some(n), "sigma")
+
+  // The filter faces keep graphite's comparators: `averageAbove` and
+  // `currentAbove` keep at `>=`, `maximumAbove` and `minimumAbove` at
+  // `>`, every `…Below` at `<=` — so a metric exactly at the threshold
+  // passes both mean gates and both current gates, but only the Below
+  // gate of the max and min pairs.
+
+  /** `averageAbove(seriesList, n)` (graphite-web): the metrics whose
+    * in-window mean is at least `threshold`. */
+  def seriesAverageAbove(spark: SparkSession, dir: String,
+                         from: Long, until: Long,
+                         threshold: Double): DataFrame =
+    filtered(spark, dir, from, until)(avgValue, col("avg_value") >= threshold)
+
+  /** `averageBelow(seriesList, n)` (graphite-web): the metrics whose
+    * in-window mean is at most `threshold`. */
+  def seriesAverageBelow(spark: SparkSession, dir: String,
+                         from: Long, until: Long,
+                         threshold: Double): DataFrame =
+    filtered(spark, dir, from, until)(avgValue, col("avg_value") <= threshold)
+
+  /** `currentAbove(seriesList, n)` (graphite-web): the metrics whose
+    * newest in-window value is at least `threshold` — "hide what's idle
+    * right now". */
+  def seriesCurrentAbove(spark: SparkSession, dir: String,
+                         from: Long, until: Long,
+                         threshold: Double): DataFrame =
+    filtered(spark, dir, from, until)(currentValue,
+      col("current_value") >= threshold)
+
+  /** `currentBelow(seriesList, n)` (graphite-web): the metrics whose
+    * newest in-window value is at most `threshold`. */
+  def seriesCurrentBelow(spark: SparkSession, dir: String,
+                         from: Long, until: Long,
+                         threshold: Double): DataFrame =
+    filtered(spark, dir, from, until)(currentValue,
+      col("current_value") <= threshold)
+
+  /** `maximumAbove(seriesList, n)` (graphite-web): the metrics whose
+    * in-window peak exceeds `threshold` — "anything that peaked". */
+  def seriesMaximumAbove(spark: SparkSession, dir: String,
+                         from: Long, until: Long,
+                         threshold: Double): DataFrame =
+    filtered(spark, dir, from, until)(maxValue, col("max_value") > threshold)
+
+  /** `maximumBelow(seriesList, n)` (graphite-web): the metrics whose
+    * in-window peak stays at or below `threshold` — "what never
+    * spiked". */
+  def seriesMaximumBelow(spark: SparkSession, dir: String,
+                         from: Long, until: Long,
+                         threshold: Double): DataFrame =
+    filtered(spark, dir, from, until)(maxValue, col("max_value") <= threshold)
+
+  /** `minimumAbove(seriesList, n)` (graphite-web): the metrics whose
+    * in-window trough stays strictly above `threshold` — "what never
+    * dipped". */
+  def seriesMinimumAbove(spark: SparkSession, dir: String,
+                         from: Long, until: Long,
+                         threshold: Double): DataFrame =
+    filtered(spark, dir, from, until)(minValue, col("min_value") > threshold)
+
+  /** `minimumBelow(seriesList, n)` (graphite-web): the metrics whose
+    * in-window trough dips to or below `threshold` — "anything that
+    * bottomed out". */
+  def seriesMinimumBelow(spark: SparkSession, dir: String,
+                         from: Long, until: Long,
+                         threshold: Double): DataFrame =
+    filtered(spark, dir, from, until)(minValue, col("min_value") <= threshold)
+
+  /** `removeEmptySeries(seriesList, xFilesFactor)` (graphite-web): the
+    * metrics whose present-slot fraction of the window grid is at least
+    * `xff` — the sparse-series cleanup a dashboard glob runs before
+    * aggregation (the xff semantics of [[rollupTier]]'s write-side
+    * gate). */
+  def seriesRemoveEmpty(spark: SparkSession, dir: String,
+                        from: Long, until: Long,
+                        xff: Double): DataFrame = {
+    val (f, u) = aligned(from, until)
+    filtered(spark, dir, from, until)(present,
+      col("present") * lit(1.0) >= lit(xff) * lit(((u - f) / Step).toDouble))
+  }
+
+  /** `useSeriesAbove(seriesList, value, search, replace)` (graphite-web):
+    * for every metric whose in-window peak exceeds `value`, the regex
+    * `search → replace` rewrite of its name is read INSTEAD — graphite's
+    * indirection that swaps a panel onto a sibling metric only where the
+    * gate fired. Only rewritten names in the catalog are served (graphite
+    * drops fetches that resolve to nothing); the catalog is
+    * metadata-sized, so it joins by broadcast. */
+  def seriesUseSeriesAbove(spark: SparkSession, dir: String,
+                           value: Double, search: String, replace: String,
+                           from: Long, until: Long): DataFrame =
+    selected(spark, dir,
+      maxValue(windowPoints(spark, dir, from, until))
+        .where(col("max_value") > value)
+        .select(regexp_replace(col("metric"), search, replace).as("metric"))
+        .distinct()
+        .join(broadcast(Catalog.metricsMeta(spark).select("metric")),
+          Seq("metric")),
+      from, until)
+
+  /** `averageOutsidePercentile(seriesList, n)` (graphite-web): the
+    * metrics whose in-window mean falls outside the [p(100−n), p(n)] band
+    * of the per-metric means — "show me the outlier replicas". The band
+    * edges are NEAREST-RANK picks over the sorted means (the mean at rank
+    * ⌈q·cnt⌉: an exact pick, no interpolation arithmetic) riding the
+    * rank's one whole-partition window, and graphite keeps a series when
+    * its mean is ≤ low or ≥ high (band-edge series are OUTSIDE — `not
+    * low < avg < high`); an empty rollup has a null band and keeps
+    * nothing. */
+  def seriesAverageOutsidePercentile(spark: SparkSession, dir: String,
+                                     from: Long, until: Long,
+                                     n: Int = 80): DataFrame = {
+    val hi = math.max(n, 100 - n) / 100.0
+    val lo = math.min(n, 100 - n) / 100.0
+    val all = Window.rowsBetween(
+      Window.unboundedPreceding, Window.unboundedFollowing)
+    def edge(q: Double): Column =
+      max(when(col("r") === ceil(lit(q) * col("cnt")), col("avg_value")))
+        .over(all)
+    filtered(spark, dir, from, until)(pts => avgValue(pts)
+        .withColumn("r", row_number().over(
+          Window.orderBy(col("avg_value"), col("metric"))))
+        .withColumn("cnt", count(lit(1)).over(all))
+        .withColumn("band_lo", edge(lo))
+        .withColumn("band_hi", edge(hi)),
+      col("avg_value") <= col("band_lo") || col("avg_value") >= col("band_hi"))
+  }
+
+  /** `exclude(seriesList, pattern)` (graphite-web): the metrics whose
+    * path does NOT match the regex (an unanchored search in both
+    * engines), selected on the O(#metrics) catalog. */
+  def seriesExclude(spark: SparkSession, dir: String, pattern: String,
+                    from: Long, until: Long): DataFrame =
+    selected(spark, dir, Catalog.metricsMeta(spark)
+      .where(!col("metric").rlike(pattern)).select("metric"), from, until)
+
+  /** `grep(seriesList, pattern)` (graphite-web): the keep dual of
+    * [[seriesExclude]] — the metrics whose path matches the regex. */
+  def seriesGrep(spark: SparkSession, dir: String, pattern: String,
+                 from: Long, until: Long): DataFrame =
+    selected(spark, dir, Catalog.metricsMeta(spark)
+      .where(col("metric").rlike(pattern)).select("metric"), from, until)
 
   /** Exact per-metric value percentiles over the window (graphite
     * `percentileOfSeries` / the latency-dashboard p50/p90/p99 read),
@@ -780,15 +1070,10 @@ object SeriesOps {
     * broadcast rank lookups. */
   def seriesPercentiles(spark: SparkSession, dir: String,
                         from: Long, until: Long,
-                        ps: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
+                        ps: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame =
     TextOps.exactQuantilesOf(
-      Catalog.pointsCached(spark, dir)
-        .where(col("ts") >= f && col("ts") < u)
-        .select("metric", "value"),
+      windowPoints(spark, dir, from, until).select("metric", "value"),
       "metric", "value", ps)
-  }
 
   /** Per-metric LEAST-SQUARES trend over the window (graphite
     * `linearRegression` / `aliasByNode(linearRegression(...))` — the
@@ -805,15 +1090,13 @@ object SeriesOps {
     * integers; the closing divisions are a fixed sequence. */
   def seriesLinReg(spark: SparkSession, dir: String,
                    from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
     val vm = floor(col("value") * lit(1e6) + lit(0.5)).cast("long")
-    val x = ((col("ts") - lit(f)) / lit(Step)).cast("long")
+    val x = ((col("ts") - lit(Kernel.align(from, Step))) / lit(Step))
+      .cast("long")
     val slopeMicro = (col("n") * col("sxy") - col("sx") * col("sy"))
       .cast("double") /
       (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-    Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
+    windowPoints(spark, dir, from, until)
       .select(col("metric"), x.as("x"), vm.as("vm"))
       .groupBy("metric")
       .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("vm").as("sy"),
@@ -998,11 +1281,8 @@ object SeriesOps {
     * one fixed division sequence of exact integers. */
   def seriesAsPercent(spark: SparkSession, dir: String,
                       from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
     val w = Window.partitionBy("ts")
-    Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
+    windowPoints(spark, dir, from, until)
       .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
       .withColumn("tot", sum("vm").over(w))
       .select(col("metric"), col("ts"), col("value"),
@@ -1041,14 +1321,9 @@ object SeriesOps {
     * final kept flag joins the O(#metrics) catalog. */
   def seriesRemoveBetweenPercentile(spark: SparkSession, dir: String,
                                     from: Long, until: Long,
-                                    n: Int = 60): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    removeBetweenPercentileCore(
-      Catalog.pointsCached(spark, dir)
-        .where(col("ts") >= f && col("ts") < u),
+                                    n: Int = 60): DataFrame =
+    removeBetweenPercentileCore(windowPoints(spark, dir, from, until),
       Catalog.metricsMeta(spark).select("metric"), n)
-  }
 
   /** [[seriesRemoveBetweenPercentile]]'s band/selection core over an
     * explicit (metric, ts, value) frame — split out so the REMOVE path
@@ -1151,10 +1426,7 @@ object SeriesOps {
   def seriesClipPercentile(spark: SparkSession, dir: String,
                            from: Long, until: Long,
                            p: Double = 0.9): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val pts = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
+    val pts = windowPoints(spark, dir, from, until)
       .select("metric", "ts", "value")
     val thresholds = TextOps.exactQuantilesOf(
       pts.select("metric", "value"), "metric", "value", Seq(p))
@@ -1177,11 +1449,8 @@ object SeriesOps {
     * INTEGER MICRO-UNITS, one closing division. */
   def seriesGroupByNode(spark: SparkSession, dir: String,
                         nodeIdx: Int = 1,
-                        from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
+                        from: Long, until: Long): DataFrame =
+    windowPoints(spark, dir, from, until)
       .withColumn("node",
         element_at(split(col("metric"), "\\."), nodeIdx + 1))
       .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
@@ -1189,7 +1458,6 @@ object SeriesOps {
       .agg(count(lit(1)).as("n_series"),
            (sum("vm").cast("double") / lit(1e6)).as("value"))
       .orderBy("node", "ts")
-  }
 
   /** `groupByNodes(seriesList, 'avg', *nodes)` (graphite-web
     * render/functions.py): the multi-node, any-callback generalization
@@ -1205,11 +1473,8 @@ object SeriesOps {
   def seriesGroupByNodes(spark: SparkSession, dir: String,
                          nodes: Seq[Int],
                          from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
     val segs = nodes.map(i => element_at(split(col("metric"), "\\."), i + 1))
-    Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
+    windowPoints(spark, dir, from, until)
       .withColumn("node", concat_ws(".", segs: _*))
       .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
       .groupBy("node", "ts")
@@ -2561,42 +2826,6 @@ object SeriesOps {
       .orderBy("ts")
   }
 
-  /** `sortByMaxima` (graphite-web): the catalog's metrics ranked by
-    * their in-window MAXIMUM, descending (the panel ordering function).
-    * One map-side-combinable per-metric aggregate over the pruned scan;
-    * the rank window runs on O(#metrics) rows. */
-  /** `mostDeviant(n)` analog (graphite-web render/functions.py): the N
-    * series with the largest standard deviation over the query window —
-    * the "which metrics are the noisiest" selection read. Per metric the
-    * three moment sums run over exact integer MILLI-units (the
-    * `series_zscore` defense — squared micro sums would overflow a
-    * long), population σ = √(n·s2 − s1²)/n is then one fixed closing
-    * IEEE sequence from those integers, and the rank breaks ties on
-    * metric name.
-    *
-    * Scale: one window-filtered scan → O(metrics) map-side-combinable
-    * rollup; the rank window runs over the metadata-sized rollup only
-    * (the `series_sort_by_maxima` shape). */
-  def seriesMostDeviant(spark: SparkSession, dir: String,
-                        from: Long, until: Long, n: Int = 3): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .withColumn("km", floor(col("value") * lit(1e3) + lit(0.5)).cast("long"))
-      .groupBy("metric")
-      .agg(count(lit(1)).as("n"), sum("km").as("s1"),
-        sum(col("km") * col("km")).as("s2"))
-      .withColumn("sigma",
-        q6(sqrt((col("n") * col("s2") - col("s1") * col("s1"))
-          .cast("double")) / col("n") / lit(1e3)))
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(desc("sigma"), col("metric"))).cast("long"))
-      .where(col("rnk") <= n)
-      .select("rnk", "metric", "sigma")
-      .orderBy("rnk")
-  }
-
   /** `movingMin` + `movingMax` (graphite-web) in one read: per grid
     * slot, the min and max of the non-gap values in the trailing
     * `points`-slot window (current inclusive); null where the whole
@@ -2643,20 +2872,6 @@ object SeriesOps {
       .orderBy("ts")
   }
 
-  def seriesSortByMaxima(spark: SparkSession, dir: String,
-                         from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .groupBy("metric")
-      .agg(max("value").as("max_value"))
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(desc("max_value"), col("metric"))).cast("long"))
-      .select("rnk", "metric", "max_value")
-      .orderBy("rnk")
-  }
-
   /** `rangeOfSeries` + `countSeries` (graphite-web) in one read: per
     * grid slot, how many series report a value and the min/max/range
     * across them. One (ts)-keyed rollup over the window scan, padded
@@ -2664,43 +2879,16 @@ object SeriesOps {
     * None). */
   def seriesRangeOfSeries(spark: SparkSession, dir: String,
                           from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val agg = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
+    val agg = windowPoints(spark, dir, from, until)
       .groupBy("ts")
       .agg(count(lit(1)).as("n_series"),
         min("value").as("v_min"), max("value").as("v_max"))
-    spark.range(f, u, Step).toDF("ts")
+    slotGrid(spark, from, until)
       .join(agg, Seq("ts"), "left")
       .select(col("ts"), coalesce(col("n_series"), lit(0L)).as("n_series"),
         col("v_min"), col("v_max"),
         q6(col("v_max") - col("v_min")).as("range"))
       .orderBy("ts")
-  }
-
-  /** `averageAbove(seriesList, n)` (graphite-web): keep only the
-    * metrics whose in-window MEAN is at least `threshold`, and emit
-    * their full dense grids — the series-selection shape (filter the
-    * catalog by an aggregate, then read survivors). The mean runs in
-    * exact micro-unit integers (the top_metrics contract); survivors
-    * feed the SAME multi-series read core as fetch_pattern
-    * ([[fetchForMetrics]]), so selection cannot drift from the render
-    * path. */
-  def seriesAverageAbove(spark: SparkSession, dir: String,
-                         from: Long, until: Long,
-                         threshold: Double): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val kept = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
-      .groupBy("metric")
-      .agg((sum("vm").cast("double") / count("vm") / lit(1e6)).as("mean"))
-      .where(col("mean") >= threshold)
-      .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), kept, from, until)
   }
 
   /** `stddevSeries(seriesList)` (graphite-web): the cross-series
@@ -2720,10 +2908,7 @@ object SeriesOps {
     * function, no shuffle beyond the one rollup. */
   def seriesStddevSeries(spark: SparkSession, dir: String,
                          from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val agg = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
+    val agg = windowPoints(spark, dir, from, until)
       .withColumn("km", floor(col("value") * lit(1e3) + lit(0.5)).cast("long"))
       .groupBy("ts")
       .agg(count(lit(1)).as("n_series"), sum("km").as("s1"),
@@ -2733,7 +2918,7 @@ object SeriesOps {
       .withColumn("sd",
         q6(sqrt((col("n_series") * col("s2") - col("s1") * col("s1"))
           .cast("double")) / col("n_series") / lit(1e3)))
-    spark.range(f, u, Step).toDF("ts")
+    slotGrid(spark, from, until)
       .join(agg, Seq("ts"), "left")
       .select(col("ts"), coalesce(col("n_series"), lit(0L)).as("n_series"),
         col("mean"), col("sd"))
@@ -2799,39 +2984,6 @@ object SeriesOps {
       .select(col("ts"), col("value"),
         when(col("value") >= threshold, col("value")).as("gated"))
       .orderBy("ts")
-
-  /** `exclude(seriesList, pattern)` (graphite-web): drop the metrics
-    * whose path matches the regex (RE2-style SEARCH semantics — both
-    * engines' regex match is unanchored), read the survivors' dense
-    * grids. The selection runs on the metric CATALOG (O(#metrics)), and
-    * survivors feed the same multi-series read core as `fetch_pattern`
-    * ([[fetchForMetrics]]) so exclusion cannot drift from the render
-    * path — the series-selection mirror of [[seriesAverageAbove]]'s
-    * aggregate gate. */
-  def seriesExclude(spark: SparkSession, dir: String, pattern: String,
-                    from: Long, until: Long): DataFrame = {
-    val kept = Catalog.metricsMeta(spark)
-      .where(!col("metric").rlike(pattern))
-      .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), kept, from, until)
-  }
-
-  /** `grep(seriesList, pattern)` (graphite-web): the KEEP dual of
-    * [[seriesExclude]] — only the metrics whose path matches the regex
-    * (unanchored search in both engines) survive, and survivors ride
-    * the same [[fetchForMetrics]] read core as every other selection
-    * face, so the include/exclude pair can never drift apart. Catalog
-    * gate is O(#metrics); the read is the standard pruned multi-series
-    * scan. */
-  def seriesGrep(spark: SparkSession, dir: String, pattern: String,
-                 from: Long, until: Long): DataFrame = {
-    val kept = Catalog.metricsMeta(spark)
-      .where(col("metric").rlike(pattern))
-      .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), kept, from, until)
-  }
 
   /** `perSecond(series, maxValue)` (graphite-web): the counter-to-rate
     * read WITH wrap recovery — where [[seriesDerivative]]'s
@@ -2951,125 +3103,6 @@ object SeriesOps {
       .orderBy(keyed(by, col("ts")): _*)
   }
 
-  /** `sortByTotal(seriesList)` (graphite-web): every metric ranked by
-    * its in-window SUM — the "who consumed the most this week"
-    * cross-series read, the volume sibling of [[seriesSortByMaxima]]
-    * (peak) and `series_top_metrics` (mean). Totals sum INTEGER
-    * MICRO-UNITS (order-independent — a float sum's accumulation order
-    * differs between engines and near-tied totals would reorder); ties
-    * break on metric name. Scale: one pruned window scan, one map-side-
-    * combinable groupBy(metric), rank window over the O(#metrics)
-    * rollup only. */
-  def seriesSortByTotal(spark: SparkSession, dir: String,
-                        from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
-      .groupBy("metric")
-      .agg((sum("vm").cast("double") / lit(1e6)).as("total_value"))
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(desc("total_value"), col("metric"))).cast("long"))
-      .select("rnk", "metric", "total_value")
-      .orderBy("rnk")
-  }
-
-  /** `highestCurrent(seriesList, n)` (graphite-web): the n metrics
-    * whose LAST reported value in the window is highest — the "what's
-    * hot right now" dashboard read, ranking on the newest point where
-    * `series_top_metrics` ranks on the window mean and
-    * [[seriesSortByMaxima]] on the peak. "Current" is the value at the
-    * max reported ts per metric (`max_by` — the compacted store holds
-    * one value per (metric, ts), so the pick is unique); selection is
-    * comparison-only, no quantization needed, ties break on metric
-    * name. Scale: one pruned window scan, one map-side-combinable
-    * `max_by` rollup, rank window over the O(#metrics) summary only. */
-  def seriesHighestCurrent(spark: SparkSession, dir: String,
-                           from: Long, until: Long, n: Int = 3): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .groupBy("metric")
-      .agg(max_by(col("value"), col("ts")).as("current_value"),
-        max("ts").as("current_ts"))
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(desc("current_value"), col("metric"))).cast("long"))
-      .where(col("rnk") <= n)
-      .select("rnk", "metric", "current_ts", "current_value")
-      .orderBy("rnk")
-  }
-
-  /** `lowestAverage(seriesList, n)` (graphite-web): the n metrics with
-    * the LOWEST in-window mean — the "which services went quiet"
-    * complement of `series_top_metrics` (highestAverage). Same parity
-    * contract: per-metric means from exact integer micro-unit sums
-    * (order-independent), name tiebreak; same scale shape: pruned scan,
-    * map-side-combinable rollup, rank window over O(#metrics) rows. */
-  def seriesLowestAverage(spark: SparkSession, dir: String,
-                          from: Long, until: Long, n: Int = 3): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
-      .groupBy("metric")
-      .agg((sum("vm").cast("double") / count("vm") / lit(1e6)).as("avg_value"))
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("avg_value"), col("metric"))).cast("long"))
-      .where(col("rnk") <= n)
-      .select("rnk", "metric", "avg_value")
-      .orderBy("rnk")
-  }
-
-  /** `lowestCurrent(seriesList, n)` (graphite-web): the n metrics whose
-    * LAST reported value in the window is lowest — the "what went
-    * quiet just now" dual of [[seriesHighestCurrent]] (same `max_by`
-    * newest-point pick, rank flipped ascending). Selection is
-    * comparison-only, ties break on metric name; same scale shape:
-    * pruned scan, map-side-combinable `max_by` rollup, rank window over
-    * the O(#metrics) summary only. */
-  def seriesLowestCurrent(spark: SparkSession, dir: String,
-                          from: Long, until: Long, n: Int = 3): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .groupBy("metric")
-      .agg(max_by(col("value"), col("ts")).as("current_value"),
-        max("ts").as("current_ts"))
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("current_value"), col("metric"))).cast("long"))
-      .where(col("rnk") <= n)
-      .select("rnk", "metric", "current_ts", "current_value")
-      .orderBy("rnk")
-  }
-
-  /** `highestMax(seriesList, n)` (graphite-web): the n metrics with the
-    * largest in-window PEAK — the "which services spiked hardest"
-    * selection, completing the rank-and-take family (current →
-    * [[seriesHighestCurrent]], mean → `series_top_metrics`, peak →
-    * here; [[seriesSortByMaxima]] is the rank-only sibling that keeps
-    * every metric). Max is comparison-only (bit-stable across engines,
-    * no quantization needed); ties break on metric name. Scale: one
-    * pruned window scan, one map-side-combinable max rollup, rank
-    * window over the O(#metrics) summary only. */
-  def seriesHighestMax(spark: SparkSession, dir: String,
-                       from: Long, until: Long, n: Int = 3): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .groupBy("metric")
-      .agg(max("value").as("max_value"))
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(desc("max_value"), col("metric"))).cast("long"))
-      .where(col("rnk") <= n)
-      .select("rnk", "metric", "max_value")
-      .orderBy("rnk")
-  }
-
   /** `countSeries(seriesList)` (graphite-web): ONE output series whose
     * value at each grid slot is the number of series reporting a
     * non-null value there — the "how many replicas are alive" denominator
@@ -3082,13 +3115,10 @@ object SeriesOps {
     * keyed on ts, O(#slots) output. */
   def seriesCount(spark: SparkSession, dir: String,
                   from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val counts = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
+    val counts = windowPoints(spark, dir, from, until)
       .groupBy("ts")
       .agg(count(lit(1)).as("n_series"))
-    spark.range(f, u, Step).toDF("ts")
+    slotGrid(spark, from, until)
       .join(counts, Seq("ts"), "left")
       .select(col("ts"), coalesce(col("n_series"), lit(0L)).as("n_series"))
       .orderBy("ts")
@@ -3121,8 +3151,7 @@ object SeriesOps {
       .withColumn("rnk", row_number().over(Window.orderBy("metric")))
       .where(col("rnk") <= n)
       .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), kept, from, until)
+    selected(spark, dir, kept, from, until)
   }
 
   /** `aliasByNode(seriesList, n)` (graphite-web): every series renamed
@@ -3208,8 +3237,7 @@ object SeriesOps {
                           from: Long, until: Long, maxPoints: Int = 60,
                           func: String = "max"): DataFrame = {
     require(maxPoints >= 1, s"maxPoints must be positive: $maxPoints")
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
+    val (f, u) = aligned(from, until)
     val slots = (u - f) / Step
     val bucket = ((slots + maxPoints - 1) / maxPoints) * Step
     densifyGrid(spark, dir, metric, from, until)
@@ -3263,92 +3291,7 @@ object SeriesOps {
       else meta
         .where(col("metric").rlike(Kernel.globToRegex(fallbackGlob)))
         .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir), meta, kept, from, until)
-  }
-
-  /** `useSeriesAbove(seriesList, value, search, replace)` (graphite-web):
-    * for every metric whose in-window MAX exceeds `value`, the regex
-    * `search → replace` rewrite of its name is fetched INSTEAD — the
-    * indirection graphite uses to swap a panel onto a sibling metric
-    * (e.g. requests above a threshold → serve that host's latency) only
-    * where the gate fired. The gate is comparison-only (max), the
-    * rewrite codegen `regexp_replace`, and only rewritten names that
-    * actually exist in the catalog are served (graphite drops fetches
-    * that resolve to nothing).
-    *
-    * Scale: gate = one pruned-scan map-side max rollup to O(#metrics)
-    * rows; the served set is metadata-sized and rides the same
-    * broadcast-gated [[fetchForMetrics]] read core as every selection
-    * face. */
-  def seriesUseSeriesAbove(spark: SparkSession, dir: String,
-                           value: Double, search: String, replace: String,
-                           from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val meta = Catalog.metricsMeta(spark)
-    val served = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .groupBy("metric")
-      .agg(max("value").as("max_value"))
-      .where(col("max_value") > value)
-      .select(regexp_replace(col("metric"), search, replace).as("metric"))
-      .distinct()
-      // r18 opt: the metrics CATALOG is metadata-sized by contract —
-      // hint it broadcast instead of leaving a sort-merge join on a
-      // 5-row side (two exchanges + sorts per query)
-      .join(broadcast(meta.select("metric")), Seq("metric"))
-    fetchForMetrics(Catalog.pointsCached(spark, dir), meta, served,
-      from, until)
-  }
-
-  /** `averageOutsidePercentile(seriesList, n)` (graphite-web): keep
-    * only the metrics whose in-window MEAN falls outside the
-    * [p(100−n), p(n)] band of the per-metric means — the "show me the
-    * outlier replicas, hide the herd" gate. Percentiles are
-    * NEAREST-RANK over the sorted means (value at rank ⌈q·cnt⌉ — an
-    * exact pick both engines replicate, no interpolation arithmetic),
-    * and graphite keeps a series when its mean is ≤ low or ≥ high
-    * (band-edge series are OUTSIDE — `not low < avg < high`).
-    *
-    * Parity: means are micro-int sums (the `top_metrics` contract); the
-    * band pick and the gate are comparison-only. Scale: the whole gate
-    * runs on the O(#metrics) mean rollup (rank window + one-row band
-    * joined back broadcast-style); survivors ride the SAME
-    * [[fetchForMetrics]] read core as every selection face. */
-  def seriesAverageOutsidePercentile(spark: SparkSession, dir: String,
-                                     from: Long, until: Long,
-                                     n: Int = 80): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val hi = math.max(n, 100 - n) / 100.0
-    val lo = math.min(n, 100 - n) / 100.0
-    val means = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
-      .groupBy("metric")
-      .agg((sum("vm").cast("double") / count("vm") / lit(1e6)).as("avg_value"))
-    // r18 opt: the band picks ride the same whole-partition window as
-    // the rank (the O(#metrics) rollup is one partition) — the former
-    // 1-row band aggregate + theta-join round-trip is gone; the gate is
-    // the identical comparison, null band (empty rollup) drops rows
-    // exactly as the inner theta-join did
-    val all = Window.rowsBetween(
-      Window.unboundedPreceding, Window.unboundedFollowing)
-    val kept = means
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("avg_value"), col("metric"))))
-      .withColumn("cnt", count(lit(1)).over(all))
-      .withColumn("band_lo",
-        max(when(col("r") === ceil(lit(lo) * col("cnt")), col("avg_value")))
-          .over(all))
-      .withColumn("band_hi",
-        max(when(col("r") === ceil(lit(hi) * col("cnt")), col("avg_value")))
-          .over(all))
-      .where(col("avg_value") <= col("band_lo") ||
-        col("avg_value") >= col("band_hi"))
-      .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), kept, from, until)
+    selected(spark, dir, kept, from, until)
   }
 
   /** `timeStack(series, '1d', 0, k)` (graphite-web): the series overlaid
@@ -3363,14 +3306,13 @@ object SeriesOps {
     * grid on the shifted slot key; values are copied, never computed. */
   def seriesTimeStack(spark: SparkSession, dir: String, metric: String,
                       from: Long, until: Long, shifts: Int = 3): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
+    val (f, u) = aligned(from, until)
     val pts = Catalog.pointsCached(spark, dir)
       .where(col("metric") === metric &&
         col("ts") >= f - shifts * 86400L && col("ts") < u)
       .select(col("ts").as("src_ts"), col("value"))
     spark.range(0, shifts + 1, 1).toDF("shift_days")
-      .crossJoin(spark.range(f, u, Step).toDF("ts"))
+      .crossJoin(slotGrid(spark, from, until))
       .withColumn("src_ts", col("ts") - col("shift_days") * lit(86400L))
       .join(pts, Seq("src_ts"), "left")
       .select(col("shift_days"), col("ts"), col("value"))
@@ -3389,47 +3331,6 @@ object SeriesOps {
       .select(col("ts"), col("value"),
         when(col("value") <= threshold, col("value")).as("gated"))
       .orderBy("ts")
-
-  /** `sortByMinima(seriesList)` (graphite-web): metrics ranked by their
-    * in-window MINIMUM ascending — the trough dual of
-    * [[seriesSortByMaxima]]. Comparison-only (bit-stable), name
-    * tiebreak; pruned scan + map-side min rollup + rank window over the
-    * O(#metrics) summary. */
-  def seriesSortByMinima(spark: SparkSession, dir: String,
-                         from: Long, until: Long): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .groupBy("metric")
-      .agg(min("value").as("min_value"))
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("min_value"), col("metric"))).cast("long"))
-      .select("rnk", "metric", "min_value")
-      .orderBy("rnk")
-  }
-
-  /** `currentAbove(seriesList, n)` (graphite-web): keep only the
-    * metrics whose LAST in-window value is at least the threshold, and
-    * emit their dense grids — the newest-point sibling of
-    * [[seriesAverageAbove]]'s mean gate ("hide what's idle right now").
-    * The current pick is `max_by` over the compacted store (unique per
-    * metric); the gate is comparison-only on the O(#metrics) rollup,
-    * survivors ride the same [[fetchForMetrics]] read core. */
-  def seriesCurrentAbove(spark: SparkSession, dir: String,
-                         from: Long, until: Long,
-                         threshold: Double): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val kept = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .groupBy("metric")
-      .agg(max_by(col("value"), col("ts")).as("current_value"))
-      .where(col("current_value") >= threshold)
-      .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), kept, from, until)
-  }
 
   /** `timeSlice(series, start, end)` (graphite-web): values outside the
     * inner [sliceFrom, sliceUntil) range become gaps but every grid row
@@ -3484,8 +3385,7 @@ object SeriesOps {
   def seriesDivideMulti(spark: SparkSession, dir: String, divisor: String,
                         from: Long, until: Long): DataFrame = {
     val all = Catalog.metricsMeta(spark).select("metric")
-    val grids = fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), all, from, until)
+    val grids = selected(spark, dir, all, from, until)
     val div = grids.where(col("metric") === divisor)
       .select(col("ts"), col("value").as("div_value"))
     grids.join(div, Seq("ts"), "left")
@@ -3493,152 +3393,6 @@ object SeriesOps {
         when(col("div_value") =!= 0, col("value") / col("div_value"))
           .as("ratio"))
       .orderBy("metric", "ts")
-  }
-
-  /** `maximumAbove(seriesList, n)` (graphite-web): keep only the
-    * metrics whose in-window MAX exceeds the threshold, and emit their
-    * dense grids — the spike-selection sibling of
-    * [[seriesAverageAbove]]'s mean gate and [[seriesCurrentAbove]]'s
-    * newest-point gate ("show me anything that peaked"). The gate is
-    * comparison-only on an O(#metrics) rollup; survivors ride the same
-    * [[fetchForMetrics]] read core as every selection face. */
-  def seriesMaximumAbove(spark: SparkSession, dir: String,
-                         from: Long, until: Long,
-                         threshold: Double): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val kept = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .groupBy("metric")
-      .agg(max("value").as("max_value"))
-      .where(col("max_value") > threshold)
-      .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), kept, from, until)
-  }
-
-  /** `minimumBelow(seriesList, n)` (graphite-web): keep only the
-    * metrics whose in-window MIN dips to or below the threshold — the
-    * trough-selection dual of [[seriesMaximumAbove]] ("show me anything
-    * that bottomed out"). Same O(#metrics) comparison gate, same
-    * [[fetchForMetrics]] read core. */
-  def seriesMinimumBelow(spark: SparkSession, dir: String,
-                         from: Long, until: Long,
-                         threshold: Double): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val kept = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .groupBy("metric")
-      .agg(min("value").as("min_value"))
-      .where(col("min_value") <= threshold)
-      .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), kept, from, until)
-  }
-
-  /** `minimumAbove(seriesList, n)` (graphite-web): keep only the
-    * metrics whose in-window MIN stays strictly above the threshold —
-    * the floor gate ("show me what never dipped"), the comparator dual
-    * of [[seriesMinimumBelow]]. Same O(#metrics) gate, same
-    * [[fetchForMetrics]] read core. */
-  def seriesMinimumAbove(spark: SparkSession, dir: String,
-                         from: Long, until: Long,
-                         threshold: Double): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val kept = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .groupBy("metric")
-      .agg(min("value").as("min_value"))
-      .where(col("min_value") > threshold)
-      .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), kept, from, until)
-  }
-
-  /** `maximumBelow(seriesList, n)` (graphite-web): keep only the
-    * metrics whose in-window MAX stays at or below the threshold — the
-    * ceiling gate ("show me what never spiked"), the comparator dual of
-    * [[seriesMaximumAbove]]. */
-  def seriesMaximumBelow(spark: SparkSession, dir: String,
-                         from: Long, until: Long,
-                         threshold: Double): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val kept = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .groupBy("metric")
-      .agg(max("value").as("max_value"))
-      .where(col("max_value") <= threshold)
-      .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), kept, from, until)
-  }
-
-  /** `averageBelow(seriesList, n)` (graphite-web): keep only the
-    * metrics whose in-window MEAN is at or below the threshold — the
-    * comparator dual of [[seriesAverageAbove]], same exact micro-unit
-    * mean so the two gates partition the metric set exactly (modulo
-    * the shared boundary). */
-  def seriesAverageBelow(spark: SparkSession, dir: String,
-                         from: Long, until: Long,
-                         threshold: Double): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val kept = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)))
-      .groupBy("metric")
-      .agg((sum("vm").cast("double") / count("vm") / lit(1e6)).as("mean"))
-      .where(col("mean") <= threshold)
-      .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), kept, from, until)
-  }
-
-  /** `currentBelow(seriesList, n)` (graphite-web): keep only the
-    * metrics whose NEWEST in-window value is at or below the
-    * threshold — the comparator dual of [[seriesCurrentAbove]]'s
-    * newest-point gate. */
-  def seriesCurrentBelow(spark: SparkSession, dir: String,
-                         from: Long, until: Long,
-                         threshold: Double): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val kept = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .groupBy("metric")
-      .agg(max_by(col("value"), col("ts")).as("current_value"))
-      .where(col("current_value") <= threshold)
-      .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), kept, from, until)
-  }
-
-  /** `removeEmptySeries(seriesList, xFilesFactor)` (graphite-web):
-    * keep only the metrics whose PRESENT-slot fraction over the window
-    * grid is at least `xff` — the sparse-series cleanup every dashboard
-    * glob runs before aggregation (graphite with xFilesFactor; the
-    * xff semantics shared with [[rollupTier]]'s write-side gate).
-    * Presence is counted on the sparse point table (a present point IS
-    * a non-null slot, gaps are absent rows), divided by the exact
-    * window slot count — one O(#metrics) comparison gate, the same
-    * [[fetchForMetrics]] read core as every selection face. */
-  def seriesRemoveEmpty(spark: SparkSession, dir: String,
-                        from: Long, until: Long,
-                        xff: Double): DataFrame = {
-    val f = Kernel.align(from, Step)
-    val u = Kernel.alignUntil(until, Step)
-    val slots = (u - f) / Step
-    val kept = Catalog.pointsCached(spark, dir)
-      .where(col("ts") >= f && col("ts") < u)
-      .groupBy("metric")
-      .agg(count(lit(1)).as("present"))
-      .where(col("present") * lit(1.0) >= lit(xff) * lit(slots.toDouble))
-      .select("metric")
-    fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), kept, from, until)
   }
 
   /** `scaleToSeconds(series, seconds)` (graphite-web): every value
@@ -3708,8 +3462,7 @@ object SeriesOps {
         Seq((a, i.toLong, "a"), (w, i.toLong, "w")) }
       .toDF("metric", "pair", "role")
     val wanted = pairs.select("metric").distinct()
-    val grids = fetchForMetrics(Catalog.pointsCached(spark, dir),
-      Catalog.metricsMeta(spark), wanted, from, until)
+    val grids = selected(spark, dir, wanted, from, until)
       .join(broadcast(pairs), "metric")
       .withColumn("vm", floor(col("value") * lit(1e6) + lit(0.5)).cast("long"))
     val byPair = grids

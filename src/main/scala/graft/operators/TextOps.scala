@@ -123,10 +123,6 @@ object TextOps {
 
   private def dedupJaccardSh(sh: DataFrame, threshold: Double, maxDf: Long,
                              cacheNs: Option[(SparkSession, String)]): DataFrame = {
-    def cached(name: String)(build: => DataFrame): DataFrame = cacheNs match {
-      case Some((spark, ns)) => Catalog.appCached(spark, s"$name:$ns")(build)
-      case None => build
-    }
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("ns"))
     if (maxDf == Long.MaxValue) {
       // exact inverted-index form: intersection counts fall straight out of
@@ -215,11 +211,10 @@ object TextOps {
 
   private def cappedPairFeats(sh: DataFrame, maxDf: Long,
                               cacheNs: Option[(SparkSession, String)]): DataFrame = {
-    def cached(name: String)(build: => DataFrame): DataFrame =
-      cachedIn(cacheNs)(name)(build)
     locally {
       val hotH = hotShinglesOf(sh, maxDf)
-      val rare = cached("jac_rare")(sh.join(hotH, Seq("h"), "left_anti"))
+      val rare = cachedIn(cacheNs)("jac_rare")(
+        sh.join(hotH, Seq("h"), "left_anti"))
       val szf = docShingleFeats(sh, maxDf, cacheNs)
       // The PAIR STREAM — rare-intersection counts plus the ALL-HOT
       // rescue — is threshold-INDEPENDENT, so it is session-cached whole:
@@ -235,7 +230,7 @@ object TextOps {
       // becomes the documented ~4e-8 per-pair band-miss at the 0.9
       // family; at scale the bucket table is the ingest-maintained band
       // index every LSH query already reads.
-      val pairStream = cached("jac_pairs") {
+      val pairStream = cachedIn(cacheNs)("jac_pairs") {
         // INVARIANT (do not cap or sample this self-join): the
         // containment rescue's sc-prune in containmentSh is only exact
         // because interRare is COMPLETE — every pair sharing >= 1 rare

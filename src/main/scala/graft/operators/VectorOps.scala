@@ -602,6 +602,43 @@ object VectorOps {
     annIvfTopkWith(spark, dir, ivfSeedCentroids(spark, dir, nCentroids),
       s"ivf_assign:$dir:$nCentroids", queryId, k, nprobe)
 
+  /** BATCHED IVF top-k SERVED FROM the cid-partitioned store: the
+    * [[annIvfTopkStore]] partition-pruned candidate I/O, amortized over
+    * a query batch — probe cells for ALL queries resolve on the driver
+    * (O(nq × nprobe) metadata literals, REQUIRED for planning-time
+    * partition pruning), the store is scanned ONCE for the union of
+    * probed cells, and the (query, cell) pair table joins back as a
+    * metadata-sized broadcast to keep per-query candidate assignment.
+    * Exact per-query rerank closes. The steady-state shape of a 100 TB
+    * ANN serving job: candidate I/O = probed directories only, once per
+    * batch, not per query. */
+  def annIvfBatchStore(spark: SparkSession, dir: String, storeDir: String,
+                       nQueries: Int = 5, k: Int = 10,
+                       nCentroids: Int = 16, nprobe: Int = 4): DataFrame = {
+    import spark.implicits._
+    val e = emb(spark, dir)
+    val cents = ivfSeedCentroids(spark, dir, nCentroids)
+    val queries = batchQueries(e, nQueries)
+    val probePairs = batchProbes(queries, cents, nprobe)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val cells = probePairs.map(_._2).distinct
+    val probeTab = probePairs.toDF("query_id", "cid")
+    val cand = spark.read.parquet(storeDir)
+      .where(col("cid").isin(cells: _*))
+      .join(broadcast(probeTab), "cid")
+      .where(col("vec_id") =!= col("query_id"))
+      .select("query_id", "vec_id")
+    batchRerank(e, queries, cand, k)
+  }
+
+  /** [[annIvfBatchStore]] against the BuildOnce session store. */
+  def annIvfBatchStoreQuery(spark: SparkSession, dir: String,
+                            nQueries: Int = 5, k: Int = 10): DataFrame = {
+    val store = graft.core.BuildOnce.dir(spark, "graft_ivf_store", dir)(
+      ivfStoreWrite(spark, dir, _))
+    annIvfBatchStore(spark, dir, store, nQueries, k)
+  }
+
   /** BATCH-query IVF ANN — top-k for EACH of a set of query vectors in
     * one plan: the realistic serving shape (a retrieval pass scores
     * millions of queries per run, never one driver round-trip per
@@ -625,88 +662,18 @@ object VectorOps {
     * Queries here = vec_ids < `nQueries` (a deterministic, oracle-
     * reproducible query set); ranks are exact-sim ordered (ties to the
     * smaller vec_id) before the 6 dp display rounding. */
-  /** BATCHED IVF top-k SERVED FROM the cid-partitioned store: the
-    * [[annIvfTopkStore]] partition-pruned candidate I/O, amortized over
-    * a query batch — probe cells for ALL queries resolve on the driver
-    * (O(nq × nprobe) metadata literals, REQUIRED for planning-time
-    * partition pruning), the store is scanned ONCE for the union of
-    * probed cells, and the (query, cell) pair table joins back as a
-    * metadata-sized broadcast to keep per-query candidate assignment.
-    * Exact per-query rerank closes. The steady-state shape of a 100 TB
-    * ANN serving job: candidate I/O = probed directories only, once per
-    * batch, not per query. */
-  def annIvfBatchStore(spark: SparkSession, dir: String, storeDir: String,
-                       nQueries: Int = 5, k: Int = 10,
-                       nCentroids: Int = 16, nprobe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    val e = emb(spark, dir)
-    val cents = ivfSeedCentroids(spark, dir, nCentroids)
-    val queries = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("vecd").as("qv"))
-    val probePairs = queries.crossJoin(broadcast(cents))
-      .withColumn("csim", cosine(col("qv"), col("cv")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("csim"), col("cid"))))
-      .where(col("rk") <= nprobe)
-      .select("query_id", "cid")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val cells = probePairs.map(_._2).distinct
-    val probeTab = probePairs.toDF("query_id", "cid")
-    val cand = spark.read.parquet(storeDir)
-      .where(col("cid").isin(cells: _*))
-      .join(broadcast(probeTab), "cid")
-      .where(col("vec_id") =!= col("query_id"))
-      .select("query_id", "vec_id")
-    cand.join(e.select("vec_id", "vecd"), "vec_id")
-      .join(queries, "query_id")
-      .withColumn("sim", cosine(col("vecd"), col("qv")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id")))
-        .cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        q6(col("sim")).as("sim"))
-      .orderBy("query_id", "rank")
-  }
-
-  /** [[annIvfBatchStore]] against the BuildOnce session store. */
-  def annIvfBatchStoreQuery(spark: SparkSession, dir: String,
-                            nQueries: Int = 5, k: Int = 10): DataFrame = {
-    val store = graft.core.BuildOnce.dir(spark, "graft_ivf_store", dir)(
-      ivfStoreWrite(spark, dir, _))
-    annIvfBatchStore(spark, dir, store, nQueries, k)
-  }
-
   def annIvfBatchTopk(spark: SparkSession, dir: String,
                       nQueries: Int = 5, k: Int = 10,
                       nCentroids: Int = 16, nprobe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = emb(spark, dir)
     val cents = ivfSeedCentroids(spark, dir, nCentroids)
     val assigned = Catalog.appCached(spark, s"ivf_assign:$dir:$nCentroids")(
       ivfAssign(e, cents))
-    val queries = e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("vecd").as("qv"))
-    val probes = queries.crossJoin(broadcast(cents))
-      .withColumn("csim", cosine(col("qv"), col("cv")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("csim"), col("cid"))))
-      .where(col("rk") <= nprobe)
-      .select("query_id", "cid")
-    val cand = assigned.join(probes, "cid")
+    val queries = batchQueries(e, nQueries)
+    val cand = assigned.join(batchProbes(queries, cents, nprobe), "cid")
       .where(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id")
-    cand.join(e.select("vec_id", "vecd"), "vec_id")
-      .join(queries, "query_id")
-      .withColumn("sim", cosine(col("vecd"), col("qv")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id")))
-        .cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        q6(col("sim")).as("sim"))
-      .orderBy("query_id", "rank")
+    batchRerank(e, queries, cand, k)
   }
 
   /** BATCH-query LSH ANN — [[annIvfBatchTopk]]'s shape on the LSH path:
@@ -720,7 +687,6 @@ object VectorOps {
                       nQueries: Int = 5, k: Int = 10,
                       tables: Int = 16, bitsPerTable: Int = 6,
                       dim: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = emb(spark, dir)
     val buckets = lshBucketsCached(spark, dir, tables, bitsPerTable, dim)
     val qb = buckets.where(col("vec_id") < nQueries)
@@ -729,8 +695,39 @@ object VectorOps {
       .where(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id")
       .distinct()
-    val queries = e.where(col("vec_id") < nQueries)
+    batchRerank(e, batchQueries(e, nQueries), cand, k)
+  }
+
+  /** A batch's queries: the vectors with vec_id < `nQueries` (a
+    * deterministic, oracle-reproducible query set) as (query_id, qv). */
+  private def batchQueries(e: DataFrame, nQueries: Int): DataFrame =
+    e.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("vecd").as("qv"))
+
+  /** Each batch query's `nprobe` nearest quantizer cells, (query_id, cid):
+    * a `row_number` window over the (query × centroid) similarity table,
+    * partitioned by query, max cosine first, ties to the smallest cid
+    * ([[probeCells]]' order). */
+  private def batchProbes(queries: DataFrame, cents: DataFrame,
+                          nprobe: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    queries.crossJoin(broadcast(cents))
+      .withColumn("csim", cosine(col("qv"), col("cv")))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("query_id").orderBy(desc("csim"), col("cid"))))
+      .where(col("rk") <= nprobe)
+      .select("query_id", "cid")
+  }
+
+  /** The exact per-query rerank every batch ANN face closes with (the
+    * batch form of [[exactTopkOnCandidates]]): candidates (query_id,
+    * vec_id) join their vectors and their query's vector, are scored by
+    * cosine, and the top `k` per query by exact sim (ties to the smaller
+    * vec_id) are kept, as (query_id, rank, vec_id, sim) with the 6 dp
+    * display rounding. */
+  private def batchRerank(e: DataFrame, queries: DataFrame, cand: DataFrame,
+                          k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     cand.join(e.select("vec_id", "vecd"), "vec_id")
       .join(queries, "query_id")
       .withColumn("sim", cosine(col("vecd"), col("qv")))

@@ -779,66 +779,35 @@ object FeatureIndex {
     * never a batch partition, and `batch_id` is a partition column they
     * ignore — pinned by the compaction spec (identical `minhashPairs`
     * output, fewer data files). */
-  def compactIndex(spark: SparkSession, indexDir: String): Unit = {
-    val paths = Tables.map(t => s"$indexDir/$t")
-    paths.foreach(restoreInterrupted(spark, _))
-    awaitAll(paths.filter(Fs.exists(spark, _))
-      .map(p => () => compactTable(spark, p)): _*)
-  }
+  def compactIndex(spark: SparkSession, indexDir: String): Unit =
+    awaitAll(Tables.map(t => () => compactTable(spark, s"$indexDir/$t")): _*)
 
-  /** Auto-recover a table whose previous compaction died between the two
-    * swap renames: `path` is gone but the intact pre-fold table sits at
-    * `path.compacted-old` — rename it back before proceeding. Without
-    * this, the next compaction silently skips the table (it no longer
-    * "exists") and every reader of the table directory fails until
-    * manual recovery, even though no data was lost. */
-  private def restoreInterrupted(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val p = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(s"$path.compacted-old")
-    if (!fs.exists(p) && fs.exists(old) && !fs.rename(old, p))
-      throw new IllegalStateException(
-        s"failed to restore $path from interrupted-compaction backup $old")
-  }
-
-  private def compactTable(spark: SparkSession, path: String): Unit = {
-    // partition values come back type-inferred (int): normalize to long
-    val df = spark.read.parquet(path)
-      .withColumn("batch_id", col("batch_id").cast("long"))
-    val ids = df.select("batch_id").distinct()
-      .collect().map(_.getLong(0)) // O(#batch partitions) metadata
-    if (ids.isEmpty) return
-    val maxB = ids.max
-    val closed = ids.filter(_ != maxB).toSet
-    if (closed.isEmpty || closed == Set(CompactedBatch)) return // steady state
-    val folded = df
-      .withColumn("batch_id",
-        when(col("batch_id") === maxB, col("batch_id"))
-          .otherwise(lit(CompactedBatch)))
-      .repartition(col("batch_id")) // one task -> one file per partition
-    // DURABLE fold: write the folded copy to a sibling tmp directory while
-    // the source stays intact, then swap with two renames. The earlier
-    // truncate-and-rewrite form's only copy during the overwrite was a
-    // localCheckpoint in executor block storage (non-durable) — a failure
-    // after directory truncation lost the feature table permanently. Any
-    // crash inside the swap window leaves the full table in exactly one
-    // of `path` / `path.compacted-old` / `path.compacting` for manual
-    // recovery; nothing is deleted before its replacement is committed.
-    val tmp = s"$path.compacting"
-    val old = s"$path.compacted-old"
-    Fs.delete(spark, tmp)
-    Fs.delete(spark, old)
-    folded.write.partitionBy("batch_id").parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.rename(new org.apache.hadoop.fs.Path(path),
-        new org.apache.hadoop.fs.Path(old)) ||
-        !fs.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(path)))
-      throw new IllegalStateException(
-        s"compactTable: directory swap failed for $path — table intact " +
-          s"in $old or $path, folded copy in $tmp")
-    Fs.delete(spark, old)
-  }
+  /** One table's fold, through [[Fs.rewriteDir]]: a table whose previous
+    * compaction died between the two swap renames (`path` gone, the
+    * intact pre-fold table at `path.compacted-old`) is renamed back
+    * first — otherwise the table would no longer "exist", the
+    * compaction would skip it and every reader of the table directory
+    * would fail until manual recovery, though no data was lost. */
+  private def compactTable(spark: SparkSession, path: String): Unit =
+    Fs.rewriteDir(spark, path) {
+      if (!Fs.exists(spark, path)) None
+      else {
+        // partition values come back type-inferred (int): normalize to long
+        val df = spark.read.parquet(path)
+          .withColumn("batch_id", col("batch_id").cast("long"))
+        val ids = df.select("batch_id").distinct()
+          .collect().map(_.getLong(0)) // O(#batch partitions) metadata
+        val latest = ids.maxOption.getOrElse(CompactedBatch)
+        val closed = ids.toSet - latest
+        // steady state: nothing closed, or only the folded partition
+        if (closed.isEmpty || closed == Set(CompactedBatch)) None
+        else Some { tmp =>
+          df.withColumn("batch_id",
+              when(col("batch_id") === latest, col("batch_id"))
+                .otherwise(lit(CompactedBatch)))
+            .repartition(col("batch_id")) // one task -> one file per partition
+            .write.partitionBy("batch_id").parquet(tmp)
+        }
+      }
+    }
 }

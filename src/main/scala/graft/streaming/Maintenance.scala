@@ -210,9 +210,9 @@ object Maintenance {
     * file per live partition (the repartition keys each (pb, pd) to one
     * task).
     *
-    * The rewrite is tmp-dir + rename-swap (the same durability pattern
-    * as FeatureIndex.compactIndex), never overwrite-in-place: the new
-    * store is fully written — `_buckets` marker INCLUDED — at
+    * The rewrite is [[graft.core.Fs.rewriteDir]]'s tmp-dir + rename-swap
+    * (shared with FeatureIndex.compactIndex), never overwrite-in-place:
+    * the new store is fully written — `_buckets` marker INCLUDED — at
     * `destDir.compacting` before the old store is touched, so no crash
     * point can publish a marker-less or partial store. A crash between
     * the two swap renames leaves the intact pre-swap store at
@@ -223,40 +223,22 @@ object Maintenance {
     * swapped. */
   def compactStore(spark: SparkSession, srcDir: String, destDir: String,
                    buckets: Int = MetricBuckets): Unit = {
-    val dest = new org.apache.hadoop.fs.Path(destDir)
-    val fs = dest.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(s"$destDir.compacting")
-    val old = new org.apache.hadoop.fs.Path(s"$destDir.compacted-old")
-    // recover a swap interrupted between its two renames (dest gone, the
-    // intact pre-swap store at .compacted-old) BEFORE anything else, so
-    // the contract check below sees the real store
-    if (!fs.exists(dest) && fs.exists(old) && !fs.rename(old, dest))
-      throw new IllegalStateException(
-        s"failed to restore $destDir from interrupted-compaction backup $old")
-    // validate an EXISTING store's layout contract BEFORE any work: a
-    // writer passing the wrong count to an existing store fails loudly
-    // instead of silently resetting the layout contract
-    recordOrCheckBuckets(spark, destDir, buckets, readOnly = true)
-    // clear leftovers of crashed runs (a half-written tmp, a superseded
-    // backup an earlier crash left behind after its swap completed)
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    Ingest.storeView(spark, srcDir)
-      .withColumn("pb", pmod(xxhash64(col("metric")), lit(buckets.toLong)))
-      .withColumn("pd", utcDate(col("ts")))
-      .repartition(col("pb"), col("pd"))
-      .write.mode("overwrite").partitionBy("pb", "pd").parquet(tmp.toString)
-    // the marker travels WITH the data: recorded inside the tmp store, so
-    // the swap publishes marker + rewrite as one unit
-    recordOrCheckBuckets(spark, tmp.toString, buckets)
-    if (fs.exists(dest) && !fs.rename(dest, old))
-      throw new IllegalStateException(s"failed to stage $destDir aside to $old")
-    fs.mkdirs(dest.getParent)
-    if (!fs.rename(tmp, dest))
-      throw new IllegalStateException(
-        s"failed to publish compacted store $tmp -> $destDir " +
-          s"(pre-swap store preserved at $old)")
-    fs.delete(old, true)
+    // validate an EXISTING store's layout contract (after restoring an
+    // interrupted swap, BEFORE any work): a writer passing the wrong count
+    // to an existing store fails loudly instead of silently resetting it
+    graft.core.Fs.rewriteDir(spark, destDir) {
+      recordOrCheckBuckets(spark, destDir, buckets, readOnly = true)
+      Some { tmp =>
+        Ingest.storeView(spark, srcDir)
+          .withColumn("pb", pmod(xxhash64(col("metric")), lit(buckets.toLong)))
+          .withColumn("pd", utcDate(col("ts")))
+          .repartition(col("pb"), col("pd"))
+          .write.mode("overwrite").partitionBy("pb", "pd").parquet(tmp)
+        // the marker travels WITH the data: recorded inside the tmp
+        // store, so the swap publishes marker + rewrite as one unit
+        recordOrCheckBuckets(spark, tmp, buckets)
+      }
+    }
   }
 
   /** Make the (pb, pd) layout SELF-DESCRIBE its bucket count: writers

@@ -162,6 +162,19 @@ class EngineReadSpec extends AnyFunSuite {
     assertOnePrunedScan(eng.fetchPattern("svc.*.lat", From, Until), storeDir)
   }
 
+  test("the registry's store faces hold one engine: a warm call runs only its read") {
+    // a new engine would resolve the metadata log again, one more job
+    for ((name, budget) <- Seq("fetch_range_store" -> 1L,
+        "densify_grid_store" -> 1L, "fetch_pattern_store" -> 6L)) {
+      def call() =
+        SparkEntry.queries(name)(spark, SparkTestBase.Sf0001).collect()
+      call() // warm-up: builds the store and opens the engine
+      val n = jobsOf(call())
+      info(s"$name: $n jobs")
+      assert(n <= budget, s"$name ran $n jobs (budget $budget)")
+    }
+  }
+
   test("a new window recompiles only the scan stage") {
     val (eng, _, _) = store
     val m = metricOf("average")

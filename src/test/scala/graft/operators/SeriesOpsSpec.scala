@@ -1651,6 +1651,64 @@ class SeriesOpsSpec extends AnyFunSuite {
     assert(maxA.nonEmpty && maxB.nonEmpty && curA.nonEmpty && curB.nonEmpty)
   }
 
+  test("selection gates keep graphite's comparators at the boundary") {
+    // each threshold IS one fixture metric's own statistic, so flipping a
+    // gate's >/>= or </<= changes whether that metric is kept
+    def metricsOf(df: DataFrame): Set[String] =
+      df.select("metric").distinct().collect().map(_.getString(0)).toSet
+    val (from, until) = (SeriesOps.From, SeriesOps.Until)
+    val f = Kernel.align(from, 3600L)
+    val u = Kernel.alignUntil(until, 3600L)
+    val window = graft.core.Catalog.pointsCached(spark, Sf0001)
+      .where(col("ts") >= f && col("ts") < u)
+      .select("metric", "ts", "value").collect()
+      .groupBy(_.getString(0))
+      .map { case (m, rs) => m -> rs.map(r => (r.getLong(1), r.getDouble(2))) }
+    def stat(g: Seq[(Long, Double)] => Double) =
+      window.map { case (m, p) => m -> g(p) }
+    // the micro-unit mean, in the face's operation order
+    val avg = stat(p =>
+      p.map { case (_, v) => math.floor(v * 1e6 + 0.5).toLong }
+        .sum.toDouble / p.size / 1e6)
+    val current = stat(_.maxBy(_._1)._2)
+    val peak = stat(_.map(_._2).max)
+    val trough = stat(_.map(_._2).min)
+    // the metric with the median statistic sets the threshold
+    def boundary(s: Map[String, Double]) =
+      s.values.toSeq.sorted.apply(s.size / 2)
+    type Face = (org.apache.spark.sql.SparkSession, String, Long, Long,
+      Double) => DataFrame
+    type Op = (Double, Double) => Boolean
+    val ge: Op = _ >= _
+    val gt: Op = _ > _
+    val le: Op = _ <= _
+    val gates = Seq[(String, Map[String, Double], Face, Op)](
+      ("averageAbove", avg, SeriesOps.seriesAverageAbove, ge),
+      ("averageBelow", avg, SeriesOps.seriesAverageBelow, le),
+      ("currentAbove", current, SeriesOps.seriesCurrentAbove, ge),
+      ("currentBelow", current, SeriesOps.seriesCurrentBelow, le),
+      ("maximumAbove", peak, SeriesOps.seriesMaximumAbove, gt),
+      ("maximumBelow", peak, SeriesOps.seriesMaximumBelow, le),
+      ("minimumAbove", trough, SeriesOps.seriesMinimumAbove, gt),
+      ("minimumBelow", trough, SeriesOps.seriesMinimumBelow, le))
+    for ((name, s, face, op) <- gates) {
+      val t = boundary(s)
+      val kept = metricsOf(face(spark, Sf0001, from, until, t))
+      assert(kept === s.filter { case (_, x) => op(x, t) }.keySet,
+        s"$name at its boundary $t (statistics $s)")
+    }
+    // removeEmptySeries at xff = one metric's present fraction, picked so
+    // that xff · slots is exactly its present count in IEEE arithmetic
+    val slots = ((u - f) / 3600L).toDouble
+    val present = window.map { case (m, p) => m -> p.size.toDouble }
+    val xff = present.values.toSeq.sorted.distinct.drop(1)
+      .find(p => p / slots * slots == p).get / slots
+    assert(metricsOf(SeriesOps.seriesRemoveEmpty(spark, Sf0001, from, until,
+      xff)) === present.filter(_._2 >= xff * slots).keySet)
+    assert(present.exists(_._2 == xff * slots) &&
+      present.exists(_._2 < xff * slots), "xff must sit on a metric and cut")
+  }
+
   test("seriesRemoveEmpty gates on the present-slot fraction") {
     def metricsOf(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.select("metric").distinct().collect().map(_.getString(0)).toSet
