@@ -40,9 +40,9 @@ import graft.streaming.{Ingest, Maintenance}
   * `_buckets` marker), and hands the reconcile and grid their methods, anchor and grid bounds as
   * lookups into one per-request metric-keyed map literal
   * ([[SeriesOps.ReadInputs.mapped]]): no metadata broadcast, and a new
-  * window recompiles only the scan stage's code. A one-metric read runs
-  * in a single partition from scan to result (one job); a multi-metric
-  * read pays one hash(metric) exchange. The registry's `_store` faces
+  * window recompiles only the scan stage's code. Every point read, one
+  * metric or a glob's matches, runs in a single partition from scan to
+  * result: one job, no exchange. The registry's `_store` faces
   * (`fetch_range_store`, `densify_grid_store`, `fetch_pattern_store`)
   * are these reads, so the DuckDB oracle checks this path. The
   * harness-catalog engine reads `Catalog.pointsCached` and its inline
@@ -67,22 +67,20 @@ final class Engine(val spark: SparkSession, val dir: String,
   /** The points a request reads: on a store-backed engine the pruned
     * scan of `metrics` over the step-aligned `window` (every date when
     * None) with the cross-batch dedupe on top, else the harness
-    * catalog (the SeriesOps read filters it). One metric stays in ONE
-    * partition from scan to result — its answer is a single packed
-    * window row anyway, so the dedupe, reconcile and grid need no
-    * exchange; several metrics take one hash(metric) exchange, which
-    * the dedupe, the reconcile window and the per-metric pack all
-    * reuse (the metric axis stays the parallelism axis). */
+    * catalog (the SeriesOps read filters it). Every store-backed request
+    * stays in ONE partition from scan to result, so the dedupe, the
+    * reconcile, the per-metric pack and the closing sort need no
+    * exchange (one job). The trade: an Engine request's answer is
+    * collected on the driver and is O(#matches × window), so the request
+    * gives up scan parallelism for a read of that size. */
   private def pointsOf(metrics: Seq[String],
                        window: Option[(Long, Long)]): DataFrame =
     storeDir.fold(points) { d =>
       val aligned = window.map { case (f, u) =>
         (Kernel.align(f, Catalog.Step), Kernel.alignUntil(u, Catalog.Step))
       }
-      val scan = Maintenance.storeRead(spark, d, metrics, aligned, None)
       Ingest.dedupe(
-        if (metrics.size == 1) scan.coalesce(1)
-        else scan.repartition(col("metric")))
+        Maintenance.storeRead(spark, d, metrics, aligned, None).coalesce(1))
     }
 
   /** The node table held across requests (MetaStore-backed engines). */
@@ -189,11 +187,9 @@ final class Engine(val spark: SparkSession, val dir: String,
     * (metric, ts, value) frame (the graphite-web render path). */
   def fetchPattern(pattern: String, from: Long, until: Long): DataFrame = {
     val ns = nodes
-    val matched = globMatches(ns, pattern)
-    val metrics = matched.map(_.getString(0))
+    val metrics = globMatches(ns, pattern).map(_.getString(0))
     SeriesOps.fetchForMetrics(pointsOf(metrics, Some((from, until))),
-      inputs(ns, metrics, from, until),
-      core.MetaStore.local(spark, matched).select("metric"))
+      inputs(ns, metrics, from, until))
   }
 
   /** CeresTree.store → CeresNode.write: batch ingest of (metric, ts,

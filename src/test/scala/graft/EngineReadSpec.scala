@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter,
   SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+  ShuffleExchangeLike}
 import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.metrics.source.CodegenMetrics
 import graft.core.MetaStore
@@ -14,8 +16,9 @@ import graft.operators.SeriesOps
 import graft.streaming.{Ingest, Maintenance}
 
 /** A store-backed engine's reads: node metadata from the engine's held
-  * node table plus one partition-pruned store scan per request, within a
-  * job budget, with the answers of the whole-store path; a new window
+  * node table plus one partition-pruned store scan per request, in one
+  * partition (no exchange), within a job budget, with the answers of the
+  * whole-store path, absent matches included; a new window
   * recompiles only the scan stage; node writes by any writer are visible
   * to the next read. */
 class EngineReadSpec extends AnyFunSuite {
@@ -134,6 +137,18 @@ class EngineReadSpec extends AnyFunSuite {
         storeScans.head.partitionFilters)
   }
 
+  /** The read runs in one partition: no shuffle and no broadcast in its
+    * executed plan. */
+  private def assertNoExchange(df: DataFrame): Unit = {
+    df.collect()
+    val exchanges = nodesOf(df.queryExecution.executedPlan).filter {
+      case _: ShuffleExchangeLike | _: BroadcastExchangeLike => true
+      case _ => false
+    }
+    assert(exchanges.isEmpty,
+      s"expected no exchange:\n${df.queryExecution.executedPlan}")
+  }
+
   private def grid(df: DataFrame): Seq[Row] = df.collect().toSeq
 
   // a 3-day window: daily rolled history plus the hourly tail
@@ -151,7 +166,7 @@ class EngineReadSpec extends AnyFunSuite {
     val reads = Seq[(String, Long, () => DataFrame)](
       ("fetch", 1L, () => eng.fetch(m, From, Until)),
       ("find", 0L, () => eng.find("svc.*.lat")),
-      ("fetchPattern", 6L, () => eng.fetchPattern("svc.*.lat", From, Until)))
+      ("fetchPattern", 1L, () => eng.fetchPattern("svc.*.lat", From, Until)))
     for ((name, budget, read) <- reads) {
       read().collect() // warm-up
       val n = jobsOf(read().collect())
@@ -160,12 +175,14 @@ class EngineReadSpec extends AnyFunSuite {
     }
     assertOnePrunedScan(eng.fetch(m, From, Until), storeDir)
     assertOnePrunedScan(eng.fetchPattern("svc.*.lat", From, Until), storeDir)
+    assertNoExchange(eng.fetch(m, From, Until))
+    assertNoExchange(eng.fetchPattern("svc.*.lat", From, Until))
   }
 
   test("the registry's store faces hold one engine: a warm call runs only its read") {
     // a new engine would resolve the metadata log again, one more job
     for ((name, budget) <- Seq("fetch_range_store" -> 1L,
-        "densify_grid_store" -> 1L, "fetch_pattern_store" -> 6L)) {
+        "densify_grid_store" -> 1L, "fetch_pattern_store" -> 1L)) {
       def call() =
         SparkEntry.queries(name)(spark, SparkTestBase.Sf0001).collect()
       call() // warm-up: builds the store and opens the engine
@@ -279,6 +296,42 @@ class EngineReadSpec extends AnyFunSuite {
     for (glob <- Seq("svc.*.lat", "*.*.lat", "svc.[ms]*.lat", "nosuch.*"))
       assert(grid(eng.fetchPattern(glob, From, Until)) ===
         grid(SeriesOps.fetchPatternFrom(points, meta, glob, From, Until)), glob)
+  }
+
+  test("fetchPattern equals the whole-store read when matches have no points in the window") {
+    import spark.implicits._
+    // its own store: the shared fixture writes every node at every hour
+    val base = Files.createTempDirectory("graft-engine-absent")
+    val storeDir = base.resolve("store").toString
+    val metaDir = base.resolve("meta").toString
+    val eng = Engine.openStore(spark, storeDir, metaDir)
+    for ((m, method) <- Seq("app.early.lat" -> "sum", "app.late.lat" -> "max",
+        "app.empty.lat" -> "average"))
+      eng.createNode(m, Hour, method, 0.5)
+    // app.early.lat: hours 0–9; app.late.lat: hours 20–29; app.empty.lat:
+    // a node created with no data
+    val rows = (0 until 10).map(h => ("app.early.lat", h * Hour + 5L, h.toDouble)) ++
+      (20 until 30).map(h => ("app.late.lat", h * Hour + 5L, 2.0 * h))
+    eng.store(rows.toDF("metric", "ts", "value"))
+    val (points, meta) = wholeStore(storeDir, metaDir)
+    val windows = Seq(
+      (0L, 15 * Hour),          // ends before app.late.lat's first point
+      (22 * Hour, 40 * Hour),   // starts after app.early.lat's last point
+      (12 * Hour, 18 * Hour),   // no match has points
+      (9 * Hour, 3 * Hour))     // until < from: zero rows
+    for ((f, u) <- windows; glob <- Seq("app.*.lat", "app.empty.*", "nosuch.*")) {
+      val got = grid(eng.fetchPattern(glob, f, u))
+      assert(got === grid(SeriesOps.fetchPatternFrom(points, meta, glob, f, u)),
+        s"$glob [$f, $u)")
+      if (u < f || glob == "nosuch.*") assert(got.isEmpty, s"$glob [$f, $u)")
+    }
+    // the absent matches' rows are there, all null, on the Step grid
+    val early = grid(eng.fetchPattern("app.*.lat", 0L, 15 * Hour))
+    val slots = Seq("app.early.lat", "app.empty.lat", "app.late.lat")
+      .map(m => m -> early.filter(_.getString(0) == m))
+    assert(slots.forall(_._2.size == 16), slots.map(s => s._1 -> s._2.size))
+    assert(slots.tail.forall(_._2.forall(_.isNullAt(2))))
+    assert(slots.head._2.count(!_.isNullAt(2)) === 10)
   }
 
   test("fetchSparse, aggregate and find-with-interval equal the whole-store path") {

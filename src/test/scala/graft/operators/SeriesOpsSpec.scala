@@ -1619,8 +1619,11 @@ class SeriesOpsSpec extends AnyFunSuite {
   test("selection-gate comparator duals partition the catalog exactly") {
     def metricsOf(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.select("metric").distinct().collect().map(_.getString(0)).toSet
+    // the faces' window: [align(From), alignUntil(Until))
+    val f = Kernel.align(SeriesOps.From, 3600L)
+    val u = Kernel.alignUntil(SeriesOps.Until, 3600L)
     val all = metricsOf(graft.core.Catalog.pointsCached(spark, Sf0001)
-      .where(col("ts") >= SeriesOps.From && col("ts") < SeriesOps.Until))
+      .where(col("ts") >= f && col("ts") < u))
     assert(all.nonEmpty)
     // strict/non-strict comparator pairs are exact partitions; the
     // >=/<= pairs may share only exact-boundary metrics (none planted)
@@ -1712,9 +1715,12 @@ class SeriesOpsSpec extends AnyFunSuite {
   test("seriesRemoveEmpty gates on the present-slot fraction") {
     def metricsOf(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.select("metric").distinct().collect().map(_.getString(0)).toSet
+    // the face's window and slots: [align(From), alignUntil(Until))
+    val f = Kernel.align(SeriesOps.From, 3600L)
+    val u = Kernel.alignUntil(SeriesOps.Until, 3600L)
     val pts = graft.core.Catalog.pointsCached(spark, Sf0001)
-      .where(col("ts") >= SeriesOps.From && col("ts") < SeriesOps.Until)
-    val slots = (SeriesOps.Until - SeriesOps.From) / 3600L
+      .where(col("ts") >= f && col("ts") < u)
+    val slots = (u - f) / 3600L
     val frac = pts.groupBy("metric").count().collect()
       .map(r => r.getString(0) -> r.getLong(1).toDouble / slots).toMap
     // xff = 0.25 splits the sf0.001 catalog; the kept set is exactly the
