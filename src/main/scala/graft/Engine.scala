@@ -32,19 +32,23 @@ import graft.streaming.{Ingest, Maintenance}
   * metadata directory per request, and one re-resolving job only when the
   * listing changed, so a `createNode`/`deleteNode` by any writer is
   * visible to the next read. The held table costs O(#nodes) driver
-  * memory. `find` and `hasNode` run no Spark job. On a store-backed
-  * engine a point read then runs ONE partition-pruned store scan of the
-  * matched metrics' buckets × the step-aligned window's dates
-  * ([[Maintenance.storeRead]] over [[Maintenance.storeScan]], the one
-  * place a points store is opened: declared schema, layout from the
-  * `_buckets` marker), and hands the reconcile and grid their methods, anchor and grid bounds as
-  * lookups into one per-request metric-keyed map literal
-  * ([[SeriesOps.ReadInputs.mapped]]): no metadata broadcast, and a new
-  * window recompiles only the scan stage's code. Every point read, one
-  * metric or a glob's matches, runs in a single partition from scan to
-  * result: one job, no exchange. The registry's `_store` faces
+  * memory. `hasNode` and `find` without an interval run no Spark job.
+  * On a store-backed engine a point read (`fetch`, `fetchSparse`,
+  * `aggregate`, `fetchPattern`) then runs ONE partition-pruned store
+  * scan of the matched metrics' buckets × the step-aligned window's
+  * dates ([[Maintenance.storeRead]] over [[Maintenance.storeScan]], the
+  * one place a points store is opened: declared schema, layout from the
+  * `_buckets` marker), and hands the reconcile and grid their methods,
+  * anchor and grid bounds as lookups into one per-request metric-keyed
+  * map literal ([[SeriesOps.ReadInputs.mapped]]): no metadata broadcast,
+  * and a new window recompiles only the scan stage's code. Every point
+  * read, one metric or a glob's matches, runs in a single partition from
+  * scan to result: one job, no exchange. `find` with an interval is not
+  * a point read: it scans every date of its matches' history in
+  * parallel and joins the match relation onto their extents by
+  * broadcast (see [[find]]). The registry's `_store` faces
   * (`fetch_range_store`, `densify_grid_store`, `fetch_pattern_store`)
-  * are these reads, so the DuckDB oracle checks this path. The
+  * are point reads, so the DuckDB oracle checks this path. The
   * harness-catalog engine reads `Catalog.pointsCached` and its inline
   * catalog instead.
   */
@@ -64,21 +68,22 @@ final class Engine(val spark: SparkSession, val dir: String,
     storeDir.map(Ingest.storeView(spark, _))
       .getOrElse(Catalog.pointsCached(spark, dir))
 
-  /** The points a request reads: on a store-backed engine the pruned
-    * scan of `metrics` over the step-aligned `window` (every date when
-    * None) with the cross-batch dedupe on top, else the harness
-    * catalog (the SeriesOps read filters it). Every store-backed request
-    * stays in ONE partition from scan to result, so the dedupe, the
-    * reconcile, the per-metric pack and the closing sort need no
-    * exchange (one job). The trade: an Engine request's answer is
-    * collected on the driver and is O(#matches × window), so the request
-    * gives up scan parallelism for a read of that size. */
-  private def pointsOf(metrics: Seq[String],
-                       window: Option[(Long, Long)]): DataFrame =
+  /** The points a point read (`fetch`, `fetchSparse`, `aggregate`,
+    * `fetchPattern`) reads: on a store-backed engine the pruned scan of
+    * `metrics` over the step-aligned window [from, until] with the
+    * cross-batch dedupe on top, else the harness catalog (the SeriesOps
+    * read filters it). A store-backed point read stays in ONE partition
+    * from scan to result, so the dedupe, the reconcile, the per-metric
+    * pack and the closing sort need no exchange (one job). The trade: a
+    * point read's answer is collected on the driver and is O(#matches ×
+    * window), so the read gives up scan parallelism for a read of that
+    * size. `find` with an interval reads every date instead, and does
+    * not come here. */
+  private def pointsOf(metrics: Seq[String], from: Long,
+                       until: Long): DataFrame =
     storeDir.fold(points) { d =>
-      val aligned = window.map { case (f, u) =>
-        (Kernel.align(f, Catalog.Step), Kernel.alignUntil(u, Catalog.Step))
-      }
+      val aligned = Some((Kernel.align(from, Catalog.Step),
+        Kernel.alignUntil(until, Catalog.Step)))
       Ingest.dedupe(
         Maintenance.storeRead(spark, d, metrics, aligned, None).coalesce(1))
     }
@@ -150,7 +155,13 @@ final class Engine(val spark: SparkSession, val dir: String,
   /** CeresTree.find: glob-resolved nodes, optional data-interval filter
     * (reference `find(pattern, fromTime, untilTime)` via
     * hasDataForInterval — node extents, so the store scan is pruned to
-    * the matches' buckets but reads every date). */
+    * the matches' buckets but reads every date). The interval filter is
+    * a whole-history read: it keeps the scan's partitions, aggregates
+    * each match's extent (partial aggregates, then one hash(metric)
+    * exchange) and joins the match relation onto the extents by
+    * broadcast. It reads the raw rows, without the cross-batch dedupe:
+    * the dedupe keeps every (metric, step, ts) key, so a match's extent
+    * (min ts, max ts + step) is the same on either. */
   def find(pattern: String, from: Option[Long] = None,
            until: Option[Long] = None): DataFrame = {
     val matched = globMatches(nodes, pattern)
@@ -158,7 +169,8 @@ final class Engine(val spark: SparkSession, val dir: String,
     (from, until) match {
       case (None, None) => local.select("metric")
       case _ => SeriesOps.findIntervalFrom(
-        pointsOf(matched.map(_.getString(0)), None), local, pattern,
+        storeDir.fold(points)(Maintenance.storeRead(spark, _,
+          matched.map(_.getString(0)), None, None)), local, pattern,
         from.getOrElse(Long.MinValue), until.getOrElse(Long.MaxValue))
     }
   }
@@ -174,13 +186,13 @@ final class Engine(val spark: SparkSession, val dir: String,
     val ns = nodes
     if (!ns.byMetric.contains(metric))
       throw new NoSuchElementException(s"NodeNotFound: $metric")
-    SeriesOps.densifyGridFrom(pointsOf(Seq(metric), Some((from, until))),
+    SeriesOps.densifyGridFrom(pointsOf(Seq(metric), from, until),
       inputs(ns, Seq(metric), from, until), metric)
   }
 
   /** Sparse read (no grid padding) — CeresNode.read before shaping. */
   def fetchSparse(metric: String, from: Long, until: Long): DataFrame =
-    SeriesOps.fetchRangeFrom(pointsOf(Seq(metric), Some((from, until))),
+    SeriesOps.fetchRangeFrom(pointsOf(Seq(metric), from, until),
       inputs(nodes, Seq(metric), from, until), metric)
 
   /** Pattern read — every glob match densified onto its own grid in one
@@ -188,8 +200,8 @@ final class Engine(val spark: SparkSession, val dir: String,
   def fetchPattern(pattern: String, from: Long, until: Long): DataFrame = {
     val ns = nodes
     val metrics = globMatches(ns, pattern).map(_.getString(0))
-    SeriesOps.fetchForMetrics(pointsOf(metrics, Some((from, until))),
-      inputs(ns, metrics, from, until))
+    SeriesOps.fetchForMetrics(pointsOf(metrics, from, until),
+      inputs(ns, metrics, from, until), metrics)
   }
 
   /** CeresTree.store → CeresNode.write: batch ingest of (metric, ts,

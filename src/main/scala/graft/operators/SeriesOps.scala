@@ -102,11 +102,9 @@ object SeriesOps {
     * [[densifyGridFrom]], [[metricGrid]]) besides the points: the
     * step-aligned window [f, u) as plan-time values (scan bounds, the
     * degenerate-window guard), the reconcile anchor and first grid slot
-    * (`from`), the last grid slot (`last`), each metric's
+    * (`from`), the last grid slot (`last`), and each metric's
     * aggregation method — either the node table, joined by broadcast on
-    * `metric` (`Left`), or a method column (`Right`) — and, for mapped
-    * inputs, the requested metrics, sorted (`metrics`: the metric axis of
-    * [[metricGrid]]'s mapped form; empty for literals).
+    * `metric` (`Left`), or a method column (`Right`).
     *
     * Two sources, one body per core:
     *  - [[ReadInputs.literals]] — plan-time literals and the broadcast
@@ -124,7 +122,7 @@ object SeriesOps {
     *    a filter with `metric = 'm'` back into an inlined literal. */
   private[graft] final case class ReadInputs(
       f: Long, u: Long, from: Column, last: Column,
-      method: Either[DataFrame, Column], metrics: Seq[String] = Nil) {
+      method: Either[DataFrame, Column]) {
 
     /** Lookups into the map, keyed on a `metric` column (class doc). */
     def mapped: Boolean = method.isRight
@@ -153,19 +151,17 @@ object SeriesOps {
 
     /** Lookups into one map literal over `methods` (metric → aggregation
       * method; null for a metric without a node, read as 'average'),
-      * keyed on the `metric` column, and the keys kept as `metrics`,
-      * sorted. Every metric the read's points can hold must be a key:
-      * the anchor and grid bounds come from the same entry. */
+      * keyed on the `metric` column. Every metric the read's points can
+      * hold must be a key: the anchor and grid bounds come from the
+      * same entry. */
     def mapped(methods: Seq[(String, String)], from: Long,
                until: Long): ReadInputs = {
       val (f, u) = aligned(from, until)
-      val entries = methods.map { case (m, method) =>
-        m -> ((method, f, u - 1)) }.toMap
-      val keys = typedLit(entries)
+      val keys = typedLit(methods.map { case (m, method) =>
+        m -> ((method, f, u - 1)) }.toMap)
       def at(field: String): Column =
         element_at(keys, col("metric")).getField(field)
-      ReadInputs(f, u, at("_2"), at("_3"), Right(at("_1")),
-        entries.keys.toSeq.sorted)
+      ReadInputs(f, u, at("_2"), at("_3"), Right(at("_1")))
     }
   }
 
@@ -390,38 +386,32 @@ object SeriesOps {
     * every requested metric reconciled to its own coarsest step and
     * densified onto its own grid, one (metric, ts, value) frame; a
     * requested metric without points in the window reads the all-null
-    * grid at `Step`. With literals inputs the requested metrics are a
-    * metadata-sized (metric) relation `matched`, joined onto the scan by
-    * broadcast and onto the packed grids by a left join; with mapped
-    * inputs they are the inputs' own metric list (no join). */
+    * grid at `Step`. Here the requested metrics are a metadata-sized
+    * (metric) relation `matched`, joined onto the scan by broadcast and
+    * onto the packed grids by a left join. */
   private[graft] def fetchForMetrics(points: DataFrame, meta: DataFrame,
                                      matched: DataFrame,
                                      from: Long, until: Long): DataFrame =
-    fetchForMetrics(points, ReadInputs.literals(meta, from, until), matched)
+    metricGrid(points, ReadInputs.literals(meta, from, until), Left(matched))
+      .orderBy("metric", "ts")
 
-  /** [[fetchForMetrics]] with its window and methods from `in`. */
+  /** [[fetchForMetrics]] of a metric list (a `graft.Engine` pattern read,
+    * its window and methods from `in`): no match relation, no join. The
+    * grid comes out of one one-row aggregate, so it is ONE partition and
+    * its closing sort is a local sort, not a range exchange. */
   private[graft] def fetchForMetrics(points: DataFrame, in: ReadInputs,
-                                     matched: DataFrame): DataFrame =
-    metricGrid(points, in, Some(matched)).orderBy("metric", "ts")
-
-  /** [[fetchForMetrics]] of the metrics [[ReadInputs.mapped]] inputs
-    * keep (a `graft.Engine` pattern read): no match relation, no join.
-    * The grid comes out of one one-row aggregate, so it is ONE partition
-    * and its closing sort is a local sort, not a range exchange. */
-  private[graft] def fetchForMetrics(points: DataFrame,
-                                     in: ReadInputs): DataFrame = {
-    require(in.mapped, "the metric list of a read comes from mapped inputs")
-    metricGrid(points, in, None).sortWithinPartitions("metric", "ts")
-  }
+                                     metrics: Seq[String]): DataFrame =
+    metricGrid(points, in, Right(metrics)).sortWithinPartitions("metric", "ts")
 
   /** [[fetchForMetrics]] before its closing sort: the one place the
     * (metric, ts, value) multi-metric grid is built, over the metrics of
-    * `matched` or, when None, the metrics of mapped inputs `in`. */
+    * a (metric) relation (`Left`) or of a list (`Right`). */
   private def metricGrid(points: DataFrame, in: ReadInputs,
-                         matched: Option[DataFrame]): DataFrame = {
-    val pts = matched
-      .fold(points.where(col("metric").isin(in.metrics: _*)))(m =>
-        points.join(broadcast(m), "metric"))
+                         requested: Either[DataFrame, Seq[String]])
+      : DataFrame = {
+    val pts = requested
+      .fold(m => points.join(broadcast(m), "metric"),
+        ms => points.where(col("metric").isin(ms: _*)))
       .where(col("ts") >= in.f && col("ts") < in.u)
     // r18 opt (guide §2.4): pack each metric's reconciled window into one
     // (gstep, ts → value map) row — O(#matched) rows, each bounded by the
@@ -435,7 +425,7 @@ object SeriesOps {
           collect_list(struct(col("ts"), col("value")))).as("m"))
     // Absent metrics (no points in the window) get the all-null grid at
     // `Step`: gstep defaults, every lookup nulls.
-    val perMetric = matched match {
+    val perMetric = requested match {
       // r19 (VERDICT r18 item 1): the packed side is O(#matched metrics)
       // ROWS but each row holds a full render-window map, i.e. #matched ×
       // window POINTS of payload — result-sized, not metadata-sized — so
@@ -445,14 +435,14 @@ object SeriesOps {
       // through the driver's 8 GB broadcast cap. `packed` is already
       // hash(metric)-partitioned by its groupBy, so the at-scale plan
       // adds no exchange on the big side.
-      case Some(m) => m.join(packed, Seq("metric"), "left")
-      // mapped: every packed metric is one entry of ONE one-row map (as
+      case Left(m) => m.join(packed, Seq("metric"), "left")
+      // a list: every packed metric is one entry of ONE one-row map (as
       // densifyGridFrom's one-row aggregate), and the requested metrics
       // explode out of it — the answer is collected on the driver anyway
-      case None => packed
+      case Right(ms) => packed
         .agg(map_from_entries(collect_list(struct(col("metric"),
           struct(col("gstep"), col("m"))))).as("g"))
-        .select(explode(typedLit(in.metrics)).as("metric"), col("g"))
+        .select(explode(typedLit(ms)).as("metric"), col("g"))
         .select(col("metric"), element_at(col("g"), col("metric")).as("e"))
         .select(col("metric"), col("e.gstep").as("gstep"), col("e.m").as("m"))
     }
@@ -487,7 +477,7 @@ object SeriesOps {
                                   from: Long, until: Long): DataFrame = {
     val meta = Catalog.metricsMeta(spark)
     metricGrid(Catalog.pointsCached(spark, dir),
-      ReadInputs.literals(meta, from, until), Some(meta.select("metric")))
+      ReadInputs.literals(meta, from, until), Left(meta.select("metric")))
   }
 
   /** The series key of [[denseGridAll]]'s grid. */

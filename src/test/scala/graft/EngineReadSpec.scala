@@ -16,9 +16,9 @@ import graft.operators.SeriesOps
 import graft.streaming.{Ingest, Maintenance}
 
 /** A store-backed engine's reads: node metadata from the engine's held
-  * node table plus one partition-pruned store scan per request, in one
-  * partition (no exchange), within a job budget, with the answers of the
-  * whole-store path, absent matches included; a new window
+  * node table plus one partition-pruned store scan per request (a point
+  * read's in one partition, no exchange), within a job budget, with the
+  * answers of the whole-store path, absent matches included; a new window
   * recompiles only the scan stage; node writes by any writer are visible
   * to the next read. */
 class EngineReadSpec extends AnyFunSuite {
